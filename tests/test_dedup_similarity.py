@@ -388,7 +388,7 @@ def test_minhash_signature_components_are_independent_and_seeded(spark):
         min((h for h in hs if h % 8 == j), default=2**63 - 1)
         for j in range(8)
     )
-    out = run_stream_dedup_minhash(spark, SF_DIR, "q_sig_pin_test")
+    out = run_stream_dedup_minhash(spark, SF_DIR)
     rows = {tuple(r) for r in out.collect()}
     assert expected in rows
 

@@ -68,7 +68,7 @@ def test_stream_stream_join_matches_batch(spark):
 
     got = {
         (r.view_id, r.purchase_id)
-        for r in run_stream_stream_join(spark, SF_DIR, "t_ss_join").collect()
+        for r in run_stream_stream_join(spark, SF_DIR).collect()
     }
     e = table(spark, SF_DIR, "events")
     v = e.filter(F.col("event_type") == "view").select(
@@ -119,7 +119,7 @@ def test_transform_with_state_matches_batch(spark):
 
     got = {
         r.user_id: (r.n_events, r.total_value)
-        for r in run_transform_with_state(spark, SF_DIR, "t_tws").collect()
+        for r in run_transform_with_state(spark, SF_DIR).collect()
     }
     e = table(spark, SF_DIR, "events")
     want = {

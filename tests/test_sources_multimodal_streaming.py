@@ -228,7 +228,7 @@ def test_streaming_matches_batch_window_agg(spark):
 
     stream_rows = {
         (r.win_start, r.event_type): (r.n, r.total_value)
-        for r in run_stream_to_memory(spark, SF_DIR, "t_stream_check").collect()
+        for r in run_stream_to_memory(spark, SF_DIR).collect()
     }
     batch_rows = {
         (r.win_start, r.event_type): (r.n, r.total_value)
@@ -248,9 +248,7 @@ def test_stateful_sessionize_matches_batch_closed_sessions(spark):
 
     got = {
         (r.user_id, r.session_start, r.session_end): (r.n_events, r.total_value)
-        for r in run_stateful_sessions_to_memory(
-            spark, SF_DIR, "t_stateful_sessions"
-        ).collect()
+        for r in run_stateful_sessions_to_memory(spark, SF_DIR).collect()
     }
 
     # batch expectation: gap > 30 min starts a new session per user
@@ -310,6 +308,93 @@ def test_stream_merge_dedup_keeps_one_row_per_key(spark, tmp_path):
     assert again.count() == n_keys
     assert again.select("user_id").distinct().count() == n_keys
     assert not os.path.exists(target + "__stage")
+
+
+def test_scoped_conf_restores_previous_and_unset_values(spark):
+    """scoped_conf puts back the previous value even when the body raises,
+    unsets a key that was unset before, and — for blocks that overlap on a
+    key, nested or closing out of order as two threads' would — leaves the
+    latest open block's value until the last one closes."""
+    from tts_data_pipeline_spark.session import scoped_conf
+
+    key = "spark.sql.shuffle.partitions"
+    unset_key = "spark.graft.test.scoped_conf_probe"
+    before = spark.conf.get(key)
+    assert spark.conf.get(unset_key, None) is None
+
+    with pytest.raises(RuntimeError, match="body failed"):
+        with scoped_conf(spark, {key: 3, unset_key: "on"}):
+            assert spark.conf.get(key) == "3"
+            assert spark.conf.get(unset_key) == "on"
+            raise RuntimeError("body failed")
+    assert spark.conf.get(key) == before
+    assert spark.conf.get(unset_key, None) is None
+
+    with scoped_conf(spark, {key: 5}):
+        with scoped_conf(spark, {key: 6}):
+            assert spark.conf.get(key) == "6"
+        assert spark.conf.get(key) == "5"
+    assert spark.conf.get(key) == before
+
+    first, second = scoped_conf(spark, {key: 2}), scoped_conf(spark, {key: 2})
+    first.__enter__()
+    second.__enter__()
+    first.__exit__(None, None, None)
+    assert spark.conf.get(key) == "2"
+    second.__exit__(None, None, None)
+    assert spark.conf.get(key) == before
+
+    # stress: more threads than cores, fast thread switching; a lost
+    # restore would leave the key at "2" or inside a block at `before`
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    def churn():
+        for _ in range(20):
+            with scoped_conf(spark, {key: 2}):
+                assert spark.conf.get(key) == "2"
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            for f in [pool.submit(churn) for _ in range(8)]:
+                f.result(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert spark.conf.get(key) == before
+
+
+def test_streaming_entry_runs_from_two_threads_at_once(spark):
+    """A streaming entry leaves nothing behind for a second run to collide
+    with: two threads of one session run ``stream_tumbling_counts`` at the
+    same time and both get the single-thread rows; afterwards no memory
+    sink view is left in the catalog and the shuffle width is the one from
+    before."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from tts_data_pipeline_spark.plans.streamingops import stream_tumbling_counts
+
+    def rows():
+        return [tuple(r) for r in stream_tumbling_counts(spark, SF_DIR).collect()]
+
+    shuffle_before = spark.conf.get("spark.sql.shuffle.partitions")
+    views_before = {t.name for t in spark.catalog.listTables()}
+    want = rows()
+    start = threading.Barrier(2)
+
+    def run():
+        start.wait()
+        return rows()
+
+    with ThreadPoolExecutor(2) as pool:
+        futures = [pool.submit(run) for _ in range(2)]
+        got = [f.result() for f in futures]
+    assert want
+    assert got == [want, want]
+    assert {t.name for t in spark.catalog.listTables()} == views_before
+    assert spark.conf.get("spark.sql.shuffle.partitions") == shuffle_before
 
 
 def test_download_chunked_contract(spark):
@@ -429,9 +514,7 @@ def test_watermarked_dedup_absorbs_in_horizon_and_reemits_expired(
     )
     pq.write_table(tbl, str(tmp_path / "events.parquet"))
 
-    out = run_stream_dedup_watermarked(
-        spark, str(tmp_path), "q_wm_dedup_crafted"
-    )
+    out = run_stream_dedup_watermarked(spark, str(tmp_path))
     rows = {
         (r.user_id, r.event_type, r.hr.minute + 60 * r.hr.hour,
          r.ts.minute + 60 * r.ts.hour)
@@ -545,9 +628,7 @@ def test_timeout_sessionize_retires_dormant_state(spark):
                 r.n_events,
                 r.total_value,
             )
-            for r in run_stateful_sessions_timeout_to_memory(
-                spark, SF_DIR, "t_sessions_timeout"
-            ).collect()
+            for r in run_stateful_sessions_timeout_to_memory(spark, SF_DIR).collect()
         }
     finally:
         import time as _time
@@ -630,9 +711,7 @@ def test_stateful_ops_identical_under_rocksdb_state_store(spark):
 
     base = {
         tuple(r)
-        for r in run_stateful_sessions_timeout_to_memory(
-            spark, SF_DIR, "t_sess_to_default"
-        ).collect()
+        for r in run_stateful_sessions_timeout_to_memory(spark, SF_DIR).collect()
     }
     spark.conf.set(
         key,
@@ -642,9 +721,7 @@ def test_stateful_ops_identical_under_rocksdb_state_store(spark):
     try:
         rocks = {
             tuple(r)
-            for r in run_stateful_sessions_timeout_to_memory(
-                spark, SF_DIR, "t_sess_to_rocksdb"
-            ).collect()
+            for r in run_stateful_sessions_timeout_to_memory(spark, SF_DIR).collect()
         }
     finally:
         spark.conf.unset(key)
@@ -708,9 +785,7 @@ def test_outer_join_boundary_is_strict_and_ms_truncated(spark, tmp_path):
 
     got = {
         (r.view_id, r.purchase_id)
-        for r in run_stream_stream_join_outer(
-            spark, str(tmp_path), "t_ss_outer_probe"
-        ).collect()
+        for r in run_stream_stream_join_outer(spark, str(tmp_path)).collect()
     }
     assert got == {
         (2, 3),      # u2 matched
@@ -732,15 +807,15 @@ def test_timeout_sessionize_output_is_slicing_independent(spark):
         run_stateful_sessions_timeout_to_memory,
     )
 
-    def run(n_slices, qn):
+    def run(n_slices):
         return {
             (r.user_id, r.session_start, r.session_end, r.n_events,
              round(r.total_value, 2))
             for r in run_stateful_sessions_timeout_to_memory(
-                spark, SF_DIR, qn, n_slices=n_slices
+                spark, SF_DIR, n_slices=n_slices
             ).collect()
         }
 
-    by_slices = {n: run(n, f"t_slices_{n}") for n in (2, 3, 4)}
+    by_slices = {n: run(n) for n in (2, 3, 4)}
     assert by_slices[2], "replay emitted nothing — fixture too small"
     assert by_slices[2] == by_slices[3] == by_slices[4]

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from tts_data_pipeline_spark.plans.registry import query
+from tts_data_pipeline_spark.session import scoped_conf
 from tts_data_pipeline_spark.sources import table
 
 _DAMP = 0.85
@@ -883,18 +884,16 @@ def graph_label_propagation_converged(
     hard raise rather than a silent non-fixpoint return."""
     from tts_data_pipeline_spark.cachereg import cache_replacing
 
-    # This entry EXECUTES at build time (eager per-round jobs), so the
-    # streaming entries' scoped shuffle-width guard applies cleanly: the
-    # ~10 build stages + one stage per round otherwise run at the
-    # session's shuffle width — 200 in the driver's plain session, where
-    # task-scheduling overhead on this node-sized graph dominated the
-    # sf0.01 wall (31 s; 7 s under the guard).  Width dial:
+    # This entry EXECUTES at build time (eager per-round jobs), so a
+    # shuffle width set with ``scoped_conf`` for the build applies
+    # cleanly: the ~10 build stages + one stage per round otherwise run
+    # at the session's shuffle width — 200 in the driver's plain session,
+    # where task-scheduling overhead on this node-sized graph dominated
+    # the sf0.01 wall (31 s; 7 s under the guard).  Width dial:
     # spark.graft.lpa.build_width, 0 = auto (cores).  Labelling is
     # identical for any width — pure partitioning.
     width = _lpa_build_width(spark)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(width))
-    try:
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": width}):
         edges = conv_cooccur_edges(spark, sf_dir)
         edges = cache_replacing(
             "graph_lpa_conv_edges",
@@ -903,8 +902,6 @@ def graph_label_propagation_converged(
         labels, _stats = lpa_propagate_converged(
             edges, max_rounds=dial(spark, LPA_MAX_ROUNDS)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return labels.select(
         "node", F.col("label").alias("community")
     ).orderBy("node")
@@ -1092,9 +1089,7 @@ def graph_kcore_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tts_data_pipeline_spark.scratch import scratch_mkdtemp
 
     width = _lpa_build_width(spark)
-    prev_conf = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(width))
-    try:
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": width}):
         workdir = scratch_mkdtemp("kcore_state_")
         atexit.register(shutil.rmtree, workdir, ignore_errors=True)
 
@@ -1139,8 +1134,6 @@ def graph_kcore_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"_KCORE_ORACLE_ROUNDS (oracle margin test should have "
                 f"caught this first)"
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_conf)
     return (
         e.select(F.col("u").alias("x"))
         .unionAll(e.select(F.col("v").alias("x")))

@@ -550,7 +550,6 @@ def s12_python_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-checked end to end."""
     from tts_data_pipeline_spark.sources import pyds
 
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     pyds.register(spark)
     df = (
         spark.read.format("books_catalog")
@@ -600,34 +599,18 @@ def stream_python_datasource_feed(spark: SparkSession, sf_dir: str) -> DataFrame
     drained to completion and aggregated.  The feed content is the same
     md5 function the batch source serves, so the full stream —
     batching, offset tracking, and drain — is value-checked against SQL."""
-    import time as _time
-
     from tts_data_pipeline_spark.sources import pyds
+    from tts_data_pipeline_spark.streaming.events import drain_to_memory
 
     pyds.register_all(spark)
-    name = "t_pyds_feed"
-    q = (
+    feed = (
         spark.readStream.format("books_catalog_stream")
         .option("batch_size", "60")
         .option("max_books", "200")
         .load()
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(processingTime="0 seconds")
-        .start()
     )
-    try:
-        deadline = _time.time() + 120
-        while _time.time() < deadline:
-            if spark.table(name).count() >= 200:
-                break
-            _time.sleep(0.2)
-    finally:
-        q.stop()
-        q.awaitTermination(30)
     return (
-        spark.table(name)
+        drain_to_memory(feed, "append")
         .groupBy("lang")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_books"),

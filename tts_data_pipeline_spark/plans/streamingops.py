@@ -32,7 +32,7 @@ def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling-window counts computed BY THE STREAMING RUNTIME (file
     source, watermark, incremental state) — hash-equal to the batch oracle."""
     ensure_utc(spark)
-    out = run_stream_to_memory(spark, sf_dir, "q_stream_tumbling")
+    out = run_stream_to_memory(spark, sf_dir)
     return out.orderBy("win_start", "event_type")
 
 
@@ -76,7 +76,7 @@ def stream_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     carry, gap splits, and per-session aggregates included.  (Batch parity
     is additionally pinned in tests/test_sources_multimodal_streaming.py.)"""
     ensure_utc(spark)
-    out = run_stateful_sessions_to_memory(spark, sf_dir, "q_stream_sessions")
+    out = run_stateful_sessions_to_memory(spark, sf_dir)
     return out.orderBy("user_id", "session_start")
 
 
@@ -148,9 +148,7 @@ def stream_stateful_sessions_timeout(
     )
 
     ensure_utc(spark)
-    out = run_stateful_sessions_timeout_to_memory(
-        spark, sf_dir, "q_stream_sessions_timeout"
-    )
+    out = run_stateful_sessions_timeout_to_memory(spark, sf_dir)
     return out.orderBy("user_id", "session_start")
 
 
@@ -175,7 +173,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tts_data_pipeline_spark.streaming.events import run_stream_static_enrich
 
     ensure_utc(spark)
-    out = run_stream_static_enrich(spark, sf_dir, "q_stream_static")
+    out = run_stream_static_enrich(spark, sf_dir)
     return out.orderBy("cohort_day")
 
 
@@ -192,7 +190,7 @@ def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tts_data_pipeline_spark.streaming.events import run_sliding_stream_to_memory
 
     ensure_utc(spark)
-    out = run_sliding_stream_to_memory(spark, sf_dir, "q_stream_sliding")
+    out = run_sliding_stream_to_memory(spark, sf_dir)
     return out.orderBy("win_start")
 
 
@@ -230,7 +228,7 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tts_data_pipeline_spark.streaming.events import run_session_window_stream
 
     ensure_utc(spark)
-    out = run_session_window_stream(spark, sf_dir, "q_stream_session")
+    out = run_session_window_stream(spark, sf_dir)
     return out.orderBy("user_id", "session_start")
 
 
@@ -259,7 +257,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tts_data_pipeline_spark.streaming.events import run_stream_stream_join
 
     ensure_utc(spark)
-    out = run_stream_stream_join(spark, sf_dir, "q_stream_ss_join")
+    out = run_stream_stream_join(spark, sf_dir)
     return out.orderBy("view_id", "purchase_id")
 
 
@@ -311,7 +309,7 @@ def stream_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ensure_utc(spark)
-    out = run_stream_stream_join_outer(spark, sf_dir, "q_stream_ss_outer")
+    out = run_stream_stream_join_outer(spark, sf_dir)
     return out.orderBy("view_id", "purchase_id")
 
 
@@ -350,7 +348,7 @@ if _has_protobuf():  # pragma: no cover - protobuf absent in this image
         )
 
         ensure_utc(spark)
-        out = run_transform_with_state(spark, sf_dir, "q_stream_tws")
+        out = run_transform_with_state(spark, sf_dir)
         return out.orderBy("user_id")
 
 
@@ -384,7 +382,7 @@ def stream_late_data_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tts_data_pipeline_spark.streaming.events import run_late_data_stream
 
     ensure_utc(spark)
-    out = run_late_data_stream(spark, sf_dir, "q_stream_late")
+    out = run_late_data_stream(spark, sf_dir)
     return out.orderBy("win_start", "event_type")
 
 
@@ -406,7 +404,7 @@ def stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ensure_utc(spark)
-    out = run_stream_dedup_to_memory(spark, sf_dir, "q_stream_dedup")
+    out = run_stream_dedup_to_memory(spark, sf_dir)
     return out.orderBy("user_id", "event_type")
 
 
@@ -464,7 +462,7 @@ def stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ensure_utc(spark)
-    out = run_stream_dedup_minhash(spark, sf_dir, "q_stream_dedup_mh")
+    out = run_stream_dedup_minhash(spark, sf_dir)
     return out.orderBy(*[f"mh{j}" for j in range(8)])
 
 
@@ -511,7 +509,7 @@ def stream_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ensure_utc(spark)
-    out = run_stream_dedup_watermarked(spark, sf_dir, "q_stream_dedup_wm")
+    out = run_stream_dedup_watermarked(spark, sf_dir)
     return out.orderBy("user_id", "event_type", "hr", "ts")
 
 
@@ -579,7 +577,7 @@ def stream_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tts_data_pipeline_spark.sources import table
 
     ensure_utc(spark)
-    cells = run_stream_cms_to_memory(spark, sf_dir, "q_stream_cms")
+    cells = run_stream_cms_to_memory(spark, sf_dir)
     ev = table(spark, sf_dir, "events").select(
         F.window("ts", "1 day")["start"].alias("win_start"), "user_id"
     )

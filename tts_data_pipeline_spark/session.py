@@ -10,6 +10,9 @@ UTC-naive engines (parquet stores naive micros; DuckDB reads them naive).
 from __future__ import annotations
 
 import os
+import threading
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -88,3 +91,49 @@ def ensure_utc(spark: SparkSession) -> SparkSession:
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     return spark
+
+
+# (session, key) -> the scoped_conf blocks open on that key, oldest first,
+# as (owner, value) pairs; the bottom pair holds the value from before the
+# first block (None = unset)
+_CONF_SCOPES: dict[tuple[int, str], list[tuple[object, str | None]]] = {}
+_CONF_SCOPES_LOCK = threading.Lock()
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: dict) -> Iterator[None]:
+    """Set runtime conf ``{key: value}`` for the ``with`` body only.
+
+    On every exit path each key goes back to its value from before the
+    block, or is unset again if it was unset then.  Blocks that overlap on
+    one key — nested, or open at the same time in two threads of one
+    session — share a per-key stack: a block that closes while others are
+    still open hands the key to the latest of them, and only the last one
+    to close restores the original.  (Plain save/restore would let the
+    second thread save, and later restore, the first thread's value.)
+    """
+    owner = object()
+    try:
+        with _CONF_SCOPES_LOCK:
+            for key, value in conf.items():
+                stack = _CONF_SCOPES.get((id(spark), key))
+                if stack is None:
+                    stack = [(None, spark.conf.get(key, None))]
+                    _CONF_SCOPES[(id(spark), key)] = stack
+                stack.append((owner, str(value)))
+                spark.conf.set(key, str(value))
+        yield
+    finally:
+        with _CONF_SCOPES_LOCK:
+            for key in conf:
+                stack = _CONF_SCOPES.get((id(spark), key))
+                if stack is None:  # entry failed before reaching this key
+                    continue
+                stack[:] = [entry for entry in stack if entry[0] is not owner]
+                value = stack[-1][1]
+                if len(stack) == 1:
+                    del _CONF_SCOPES[(id(spark), key)]
+                if value is None:
+                    spark.conf.unset(key)
+                else:
+                    spark.conf.set(key, value)

@@ -19,6 +19,10 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tts_data_pipeline_spark.session import scoped_conf
+
+_DYNAMIC_OVERWRITE = {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+
 
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """K1 — CSV write with header (reference ``df.to_csv(index=False)``,
@@ -185,7 +189,6 @@ def merge_into_partitioned(
     # filesystem as the table.
     staging = scratch_mkdtemp("merge_staging_", scratch_dir)
     jstaging = None
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     try:
         merged.write.mode("overwrite").parquet(staging)
         if journal:
@@ -216,17 +219,16 @@ def merge_into_partitioned(
                 .write.mode("overwrite")
                 .parquet(jstaging)
             )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        spark.read.parquet(staging).write.mode("overwrite").partitionBy(
-            partition_col
-        ).parquet(target_path)
+        with scoped_conf(spark, _DYNAMIC_OVERWRITE):
+            spark.read.parquet(staging).write.mode("overwrite").partitionBy(
+                partition_col
+            ).parquet(target_path)
         if journal:
             # data committed first, journal second: a failure between the
             # two leaves a stale-but-visible row (the pre-journal
             # semantics), never a key that vanished
             spark.read.parquet(jstaging).write.mode("append").parquet(jdir)
     finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
         shutil.rmtree(staging, ignore_errors=True)
         if jstaging is not None:
             shutil.rmtree(jstaging, ignore_errors=True)
@@ -333,19 +335,13 @@ def compact_partitioned_merge(
             for r in live.select(partition_col).distinct().collect()
         }
         staging = scratch_mkdtemp("compact_staging_", scratch_dir)
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
         try:
             live.write.mode("overwrite").parquet(staging)
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "dynamic"
-            )
-            spark.read.parquet(staging).write.mode("overwrite").partitionBy(
-                partition_col
-            ).parquet(target_path)
+            with scoped_conf(spark, _DYNAMIC_OVERWRITE):
+                spark.read.parquet(staging).write.mode(
+                    "overwrite"
+                ).partitionBy(partition_col).parquet(target_path)
         finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
             _shutil.rmtree(staging, ignore_errors=True)
         # dynamic overwrite only replaces partitions PRESENT in the written
         # frame; a partition whose every row was dead writes nothing and

@@ -7,9 +7,15 @@ identical in batch and streaming, so batch runs (DuckDB-verifiable) certify
 the streaming pipeline's results, and the streaming runtime only adds
 incremental state management.
 
-For local verification we drive a parquet-source stream to completion with
-``processAllAvailable`` into a memory sink (no cluster, no Kafka — the
-source/sink are swappable by config at deploy time).
+Every ``run_*`` runner builds its streaming DataFrame and hands it to the
+one drain, :func:`drain_to_memory`: the conf the query needs (state-store
+shard count, no-data batches, state provider) is set for the run only
+(``session.scoped_conf``), the query writes a memory sink under a fresh
+unique name, ``processAllAvailable`` drives the finite source to
+completion, and the sink's rows come back as a DataFrame.  So a runner
+leaves no conf and no sink name behind, and can run twice, or from two
+threads of one session, at once (no cluster, no Kafka — the source/sink
+are swappable by config at deploy time).
 
 Deployment note (state backend): every stateful operator here runs
 unchanged under ``spark.sql.streaming.stateStore.providerClass =
@@ -23,8 +29,37 @@ count (see :func:`_state_partitions`).
 
 from __future__ import annotations
 
+from uuid import uuid4
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from tts_data_pipeline_spark.session import scoped_conf
+
+_SHUFFLE = "spark.sql.shuffle.partitions"
+_NO_DATA = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+
+def drain_to_memory(df: DataFrame, mode: str, conf: dict | None = None) -> DataFrame:
+    """Run the streaming ``df`` to completion and return its output rows.
+
+    Under ``scoped_conf(conf)`` the query writes to a memory sink named by
+    ``uuid4`` in output ``mode``, ``processAllAvailable`` drains the
+    finite source, and the query is stopped and its sink's temp view
+    dropped on every exit path.  The returned DataFrame is analyzed (eagerly)
+    while the view still exists and keeps reading the sink afterwards, so
+    no sink names pile up in the session."""
+    spark = df.sparkSession
+    name = f"drain_{uuid4().hex}"
+    with scoped_conf(spark, conf or {}):
+        q = df.writeStream.outputMode(mode).format("memory").queryName(name).start()
+        try:
+            q.processAllAvailable()
+            out = spark.sql(f"SELECT * FROM {name}")
+        finally:
+            q.stop()
+            spark.catalog.dropTempView(name)
+    return out
 
 
 def _events_ts_unit(sf_dir: str) -> str:
@@ -254,39 +289,18 @@ def stateful_sessionize(events: DataFrame, gap_seconds: int = 1800) -> DataFrame
     )
 
 
-def run_stateful_sessions_to_memory(
-    spark: SparkSession,
-    sf_dir: str,
-    query_name: str = "stateful_sessions",
-    gap_seconds: int = 1800,
-    max_files_per_trigger: int = 1,
-) -> DataFrame:
-    """Drive the stateful sessionizer over the file stream to completion.
-    Returns CLOSED sessions (each user's open tail stays in state — with an
-    unbounded stream it would close via timeout or a later gap)."""
+def run_stateful_sessions_to_memory(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Drive the stateful sessionizer (30-minute gap) over the file stream
+    to completion.  Returns CLOSED sessions (each user's open tail stays in
+    state — with an unbounded stream it would close via timeout or a later
+    gap)."""
+    out = stateful_sessionize(read_events_stream(spark, sf_dir))
     # state store shards = shuffle partitions; Python-side stateful op →
     # shards are also the per-key-invocation parallelism (see
-    # _python_state_partitions), restoring the caller's conf afterwards
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_python_state_partitions(spark))
+    # _python_state_partitions)
+    return drain_to_memory(
+        out, "append", {_SHUFFLE: _python_state_partitions(spark)}
     )
-    try:
-        stream = read_events_stream(spark, sf_dir, max_files_per_trigger)
-        out = stateful_sessionize(stream, gap_seconds)
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 def stateful_sessionize_timeout(
@@ -375,11 +389,18 @@ _REPLAY_STAGING: dict[tuple, str] = {}
 
 
 def _staged_replay_cached(
-    kind: str, sf_dir: str, n_files: int, build, extra_key: tuple = ()
+    spark: SparkSession,
+    kind: str,
+    sf_dir: str,
+    n_files: int,
+    build,
+    extra_key: tuple = (),
 ) -> str:
     """Return a staging dir holding ``n_files`` ``events_*.parquet``
     replay files, building them with ``build(staging_dir)`` on first use
-    per ``(kind, sf_dir, *extra_key)``."""
+    per ``(kind, sf_dir, *extra_key)``.  The build's shuffles run at the
+    replay shard width (:func:`_state_partitions`): the staged frames are
+    ≤ ~100 k rows, and the files do not depend on the width."""
     import os
 
     from tts_data_pipeline_spark.scratch import scratch_mkdtemp
@@ -402,7 +423,8 @@ def _staged_replay_cached(
     import shutil
 
     atexit.register(shutil.rmtree, staging, ignore_errors=True)
-    build(staging)
+    with scoped_conf(spark, {_SHUFFLE: _state_partitions(spark)}):
+        build(staging)
     _REPLAY_STAGING[key] = staging
     return staging
 
@@ -424,7 +446,7 @@ def _replay_staging_cached(
         )
 
     return _staged_replay_cached(
-        "sessions_timeout_stream", sf_dir, n_slices, build, (n_slices,)
+        spark, "sessions_timeout_stream", sf_dir, n_slices, build, (n_slices,)
     )
 
 
@@ -433,18 +455,10 @@ def _wm_dedup_staging(spark: SparkSession, sf_dir: str) -> str:
     factored out of :func:`run_stream_dedup_watermarked` so
     :func:`prestage_replays` can build them outside a bench's timed
     region (r14 verdict #1)."""
-    import os
+    from tts_data_pipeline_spark.sources.readers import table
 
     def build(staging: str) -> None:
-        if _events_ts_unit(sf_dir) == "ns":
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-            raw = raw.withColumn("ts", F.expr("ts div 1000"))
-        else:
-            raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-            raw = raw.withColumn(
-                "ts", F.unix_micros(F.col("ts").cast("timestamp"))
-            )
+        raw = table(spark, sf_dir, "events").withColumn("ts", F.unix_micros("ts"))
         # key on (user, type, hour) so per-key representative times
         # SPREAD across the event range — with the bare (user, type)
         # key every per-key min lands at the start of the range and
@@ -498,7 +512,7 @@ def _wm_dedup_staging(spark: SparkSession, sf_dir: str) -> str:
 
     # staged batches are delay-independent (parity/probe splits of the
     # keyed frame), so the cache key is the corpus alone
-    return _staged_replay_cached("wm_dedup_stream", sf_dir, 4, build)
+    return _staged_replay_cached(spark, "wm_dedup_stream", sf_dir, 4, build)
 
 
 def prestage_replays(spark: SparkSession, sf_dir: str) -> None:
@@ -525,16 +539,12 @@ def prestage_replays(spark: SparkSession, sf_dir: str) -> None:
 
 
 def run_stateful_sessions_timeout_to_memory(
-    spark: SparkSession,
-    sf_dir: str,
-    query_name: str = "stateful_sessions_timeout",
-    gap_seconds: int = 1800,
-    delay_seconds: int = 1800,
-    n_slices: int = 2,
+    spark: SparkSession, sf_dir: str, n_slices: int = 2
 ) -> DataFrame:
-    """Drive the timeout sessionizer over a CHRONOLOGICAL multi-batch
-    replay (events globally sorted by (ts, event_id), ntile'd into
-    ``n_slices`` micro-batch files) so the watermark advances through
+    """Drive the timeout sessionizer (30-minute gap and watermark delay)
+    over a CHRONOLOGICAL multi-batch replay (events globally sorted by
+    (ts, event_id), ntile'd into ``n_slices`` micro-batch files) so the
+    watermark advances through
     the event-time range and event-time timeouts actually fire —
     a single-file replay would emit nothing but the gap-closed
     sessions.  Returns every emitted session: gap-closed + timeout-
@@ -554,87 +564,45 @@ def run_stateful_sessions_timeout_to_memory(
     (tests/test_sources_multimodal_streaming.py)."""
     from pyspark.sql import types as T
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_nodata = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "true"
+    staging = _replay_staging_cached(spark, sf_dir, n_slices)
+    schema = T.StructType(
+        [
+            T.StructField("event_id", T.LongType()),
+            T.StructField("ts", T.TimestampType()),
+            T.StructField("user_id", T.LongType()),
+            T.StructField("value", T.DoubleType()),
+        ]
     )
+    stream = (
+        spark.readStream.format("parquet")
+        .schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("latestFirst", "false")
+        .option("pathGlobFilter", "events_*.parquet")
+        .load(staging)
+    )
+    out = stateful_sessionize_timeout(stream.withWatermark("ts", "1800 seconds"))
     # Python-side stateful op: shards = per-key-invocation parallelism
-    # (measured 2.2× on this replay — see _python_state_partitions)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_python_state_partitions(spark))
-    )
-    # trailing no-data batches carry the FINAL watermark that fires the
+    # (measured 2.2× on this replay — see _python_state_partitions).
+    # Trailing no-data batches carry the FINAL watermark that fires the
     # last timeouts — keep them ON (the dedup replay's opposite)
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    try:
-        staging = _replay_staging_cached(spark, sf_dir, n_slices)
-        schema = T.StructType(
-            [
-                T.StructField("event_id", T.LongType()),
-                T.StructField("ts", T.TimestampType()),
-                T.StructField("user_id", T.LongType()),
-                T.StructField("value", T.DoubleType()),
-            ]
-        )
-        stream = (
-            spark.readStream.format("parquet")
-            .schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .option("pathGlobFilter", "events_*.parquet")
-            .load(staging)
-        )
-        out = stateful_sessionize_timeout(
-            stream.withWatermark("ts", f"{delay_seconds} seconds"),
-            gap_seconds,
-        )
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata
-        )
-    return spark.sql(f"SELECT * FROM {query_name}")
+    return drain_to_memory(
+        out,
+        "append",
+        {_SHUFFLE: _python_state_partitions(spark), _NO_DATA: "true"},
+    )
 
 
-def run_stream_to_memory(
-    spark: SparkSession, sf_dir: str, query_name: str = "windowed_events"
-) -> DataFrame:
-    """Drive the stream to completion synchronously (local smoke/test path):
-    memory sink + ``processAllAvailable`` + stop.  Returns the result table.
+def run_stream_to_memory(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Drive the tumbling-window counts to completion (local smoke/test
+    path) and return the result table.
 
     Output mode 'complete' because the memory sink of a streaming agg with
     watermark in append mode only emits closed windows — for a finite file
     source nothing would close.
     """
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_state_partitions(spark))
-    )
-    try:
-        agg = windowed_counts(read_events_stream(spark, sf_dir))
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.sql(f"SELECT * FROM {query_name}")
+    agg = windowed_counts(read_events_stream(spark, sf_dir))
+    return drain_to_memory(agg, "complete", {_SHUFFLE: _state_partitions(spark)})
 
 
 def stream_merge_dedup(
@@ -670,27 +638,21 @@ def stream_merge_dedup(
         merged.write.mode("overwrite").parquet(tmp)
         s.read.parquet(tmp).write.mode("overwrite").parquet(target_path)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_state_partitions(spark))
-    )
     try:
-        stream = read_events_stream(spark, sf_dir, max_files_per_trigger=1)
-        q = (
-            stream.writeStream.foreachBatch(merge)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with scoped_conf(spark, {_SHUFFLE: _state_partitions(spark)}):
+            stream = read_events_stream(spark, sf_dir, max_files_per_trigger=1)
+            q = (
+                stream.writeStream.foreachBatch(merge)
+                .outputMode("update")
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(target_path + "__stage", ignore_errors=True)
 
 
-def run_stream_static_enrich(
-    spark: SparkSession, sf_dir: str, query_name: str = "stream_enriched"
-) -> DataFrame:
+def run_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static join: the event stream enriched against a static
     dimension (each user's cohort day, computed batch-side), then aggregated
     per cohort.  The static side re-resolves per micro-batch, so a dimension
@@ -700,70 +662,33 @@ def run_stream_static_enrich(
 
     from tts_data_pipeline_spark.sources.readers import table
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_state_partitions(spark))
+    static_cohorts = (
+        table(spark, sf_dir, "events")
+        .groupBy("user_id")
+        .agg(F.date_trunc("day", F.min("ts")).alias("cohort_day"))
     )
-    try:
-        static_cohorts = (
-            table(spark, sf_dir, "events")
-            .groupBy("user_id")
-            .agg(F.date_trunc("day", F.min("ts")).alias("cohort_day"))
-        )
-        stream = read_events_stream(spark, sf_dir)
-        enriched = stream.join(static_cohorts, "user_id")
-        agg = enriched.groupBy("cohort_day").agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.sql(f"SELECT * FROM {query_name}")
+    stream = read_events_stream(spark, sf_dir)
+    enriched = stream.join(static_cohorts, "user_id")
+    agg = enriched.groupBy("cohort_day").agg(
+        F.count("*").alias("n_events"),
+        F.round(F.sum("value"), 2).alias("total_value"),
+    )
+    return drain_to_memory(agg, "complete", {_SHUFFLE: _state_partitions(spark)})
 
 
-def run_sliding_stream_to_memory(
-    spark: SparkSession, sf_dir: str, query_name: str = "sliding_events"
-) -> DataFrame:
+def run_sliding_stream_to_memory(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-window counts computed by the streaming runtime — same
     ``sliding_counts`` builder as the batch ``w5_sliding_window`` query
     (complete mode: finite file source, windows never close in append)."""
     from tts_data_pipeline_spark.plans.windows import sliding_counts
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_state_partitions(spark))
+    events = read_events_stream(spark, sf_dir).withWatermark("ts", "30 minutes")
+    return drain_to_memory(
+        sliding_counts(events), "complete", {_SHUFFLE: _state_partitions(spark)}
     )
-    try:
-        events = read_events_stream(spark, sf_dir).withWatermark("ts", "30 minutes")
-        agg = sliding_counts(events)
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
-def run_session_window_stream(
-    spark: SparkSession, sf_dir: str, query_name: str = "session_events"
-) -> DataFrame:
+def run_session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native ``session_window`` aggregation under the STREAMING runtime
     (merging-session state store).  Watermark delay 0s: after the final
     no-data micro-batch the watermark sits at max(ts), so every session
@@ -773,31 +698,15 @@ def run_session_window_stream(
     timestamp) stay open and are excluded on both sides."""
     from tts_data_pipeline_spark.plans.windows import session_window_counts
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_state_partitions(spark))
+    events = read_events_stream(spark, sf_dir).withWatermark("ts", "0 seconds")
+    return drain_to_memory(
+        session_window_counts(events),
+        "append",
+        {_SHUFFLE: _state_partitions(spark)},
     )
-    try:
-        events = read_events_stream(spark, sf_dir).withWatermark("ts", "0 seconds")
-        agg = session_window_counts(events)
-        q = (
-            agg.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
-def run_transform_with_state(
-    spark: SparkSession, sf_dir: str, query_name: str = "tws_totals"
-) -> DataFrame:
+def run_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user running totals via ``transformWithStateInPandas`` — the
     Spark 4 arbitrary-state API (typed ValueState in a RocksDB state
     store, timers available) that supersedes ``applyInPandasWithState``
@@ -840,56 +749,77 @@ def run_transform_with_state(
         def close(self) -> None:
             pass
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    # Python StatefulProcessor: shards = per-key-invocation parallelism
-    # (same trade as the sessionizers — see _python_state_partitions)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_python_state_partitions(spark))
-    )
-    # transformWithState requires the RocksDB state store provider
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = read_events_stream(spark, sf_dir)
-        out = (
-            stream.select("user_id", "value")
-            .groupBy("user_id")
-            .transformWithStateInPandas(
-                RunningTotals(),
-                "user_id BIGINT, n_events BIGINT, total_value DOUBLE",
-                "Update",
-                "None",
-            )
+    out = (
+        read_events_stream(spark, sf_dir)
+        .select("user_id", "value")
+        .groupBy("user_id")
+        .transformWithStateInPandas(
+            RunningTotals(),
+            "user_id BIGINT, n_events BIGINT, total_value DOUBLE",
+            "Update",
+            "None",
         )
-        q = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        if prev_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_provider
-            )
-    return spark.sql(f"SELECT * FROM {query_name}")
+    )
+    return drain_to_memory(
+        out,
+        "update",
+        {
+            # Python StatefulProcessor: shards = per-key-invocation
+            # parallelism (same trade as the sessionizers — see
+            # _python_state_partitions)
+            _SHUFFLE: _python_state_partitions(spark),
+            # transformWithState requires the RocksDB state store provider
+            "spark.sql.streaming.stateStore.providerClass": (
+                "org.apache.spark.sql.execution.streaming.state."
+                "RocksDBStateStoreProvider"
+            ),
+        },
+    )
 
 
-def run_stream_stream_join(
-    spark: SparkSession, sf_dir: str, query_name: str = "stream_joined"
-) -> DataFrame:
+def _view_purchase_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """Each view joined (``how``) to the same user's purchases within 30
+    minutes after it, both sides watermarked 30 minutes — the stream-stream
+    join the inner and left-outer runners share."""
+    base = read_events_stream(spark, sf_dir)
+    views = (
+        base.filter(F.col("event_type") == "view")
+        .select(
+            F.col("user_id").alias("v_user"),
+            F.col("event_id").alias("view_id"),
+            F.col("ts").alias("view_ts"),
+        )
+        .withWatermark("view_ts", "30 minutes")
+    )
+    purchases = (
+        base.filter(F.col("event_type") == "purchase")
+        .select(
+            F.col("user_id").alias("p_user"),
+            F.col("event_id").alias("purchase_id"),
+            F.col("ts").alias("purchase_ts"),
+        )
+        .withWatermark("purchase_ts", "30 minutes")
+    )
+    return views.join(
+        purchases,
+        F.expr(
+            """
+            v_user = p_user
+            AND purchase_ts >= view_ts
+            AND purchase_ts <= view_ts + INTERVAL 30 MINUTES
+            """
+        ),
+        how,
+    ).select(
+        F.col("v_user").alias("user_id"),
+        "view_id",
+        "purchase_id",
+        "view_ts",
+        "purchase_ts",
+    )
+
+
+def run_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAM-STREAM inner join with event-time range condition: each view
     joined to the same user's purchases within 30 minutes after it.
 
@@ -901,64 +831,14 @@ def run_stream_stream_join(
     Inner-join emission doesn't wait for the watermark, so with a
     deterministic finite replay the result equals the batch join, which is
     the catalog oracle."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_state_partitions(spark))
+    return drain_to_memory(
+        _view_purchase_join(spark, sf_dir, "inner"),
+        "append",
+        {_SHUFFLE: _state_partitions(spark)},
     )
-    try:
-        base = read_events_stream(spark, sf_dir)
-        views = (
-            base.filter(F.col("event_type") == "view")
-            .select(
-                F.col("user_id").alias("v_user"),
-                F.col("event_id").alias("view_id"),
-                F.col("ts").alias("view_ts"),
-            )
-            .withWatermark("view_ts", "30 minutes")
-        )
-        purchases = (
-            base.filter(F.col("event_type") == "purchase")
-            .select(
-                F.col("user_id").alias("p_user"),
-                F.col("event_id").alias("purchase_id"),
-                F.col("ts").alias("purchase_ts"),
-            )
-            .withWatermark("purchase_ts", "30 minutes")
-        )
-        joined = views.join(
-            purchases,
-            F.expr(
-                """
-                v_user = p_user
-                AND purchase_ts >= view_ts
-                AND purchase_ts <= view_ts + INTERVAL 30 MINUTES
-                """
-            ),
-        ).select(
-            F.col("v_user").alias("user_id"),
-            "view_id",
-            "purchase_id",
-            "view_ts",
-            "purchase_ts",
-        )
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
-def run_stream_stream_join_outer(
-    spark: SparkSession, sf_dir: str, query_name: str = "stream_joined_outer"
-) -> DataFrame:
+def run_stream_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAM-STREAM **left outer** join — :func:`run_stream_stream_join`
     plus the production question the inner form can't answer: which
     views never converted?
@@ -985,67 +865,11 @@ def run_stream_stream_join_outer(
 
     ``noDataMicroBatches`` must stay ON: the trailing empty batch
     carries the final watermark that flushes the last evictions."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_ndm = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled"
+    return drain_to_memory(
+        _view_purchase_join(spark, sf_dir, "leftOuter"),
+        "append",
+        {_SHUFFLE: _state_partitions(spark), _NO_DATA: "true"},
     )
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_state_partitions(spark))
-    )
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    try:
-        base = read_events_stream(spark, sf_dir)
-        views = (
-            base.filter(F.col("event_type") == "view")
-            .select(
-                F.col("user_id").alias("v_user"),
-                F.col("event_id").alias("view_id"),
-                F.col("ts").alias("view_ts"),
-            )
-            .withWatermark("view_ts", "30 minutes")
-        )
-        purchases = (
-            base.filter(F.col("event_type") == "purchase")
-            .select(
-                F.col("user_id").alias("p_user"),
-                F.col("event_id").alias("purchase_id"),
-                F.col("ts").alias("purchase_ts"),
-            )
-            .withWatermark("purchase_ts", "30 minutes")
-        )
-        joined = views.join(
-            purchases,
-            F.expr(
-                """
-                v_user = p_user
-                AND purchase_ts >= view_ts
-                AND purchase_ts <= view_ts + INTERVAL 30 MINUTES
-                """
-            ),
-            "leftOuter",
-        ).select(
-            F.col("v_user").alias("user_id"),
-            "view_id",
-            "purchase_id",
-            "view_ts",
-            "purchase_ts",
-        )
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_ndm
-        )
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 def _stage_replay_file(part: DataFrame, staging: str, i: int) -> None:
@@ -1099,31 +923,18 @@ def _stage_replay_partitions(
     shutil.rmtree(tmp, ignore_errors=True)
 
 
-def _late_replay_staging(
-    spark: SparkSession, sf_dir: str, delay: str = "30 minutes"
-) -> str:
-    """Staged 3-batch replay files for the late-data policy entry —
-    factored out of :func:`run_late_data_stream` so
+def _late_replay_staging(spark: SparkSession, sf_dir: str) -> str:
+    """Staged 3-batch replay files for the late-data policy entry (30-minute
+    delay) — factored out of :func:`run_late_data_stream` so
     :func:`prestage_replays` can build them outside a bench's timed
     region (r14 verdict #1)."""
-    import os
+    from tts_data_pipeline_spark.sources.readers import table
 
     def build(staging: str) -> None:
         # Stage the replay files in a canonical long-micros ts column
         # so the staged stream has one imposed schema regardless of
         # whether the source parquet is TIMESTAMP(NANOS) or MICROS.
-        if _events_ts_unit(sf_dir) == "ns":
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-            raw = raw.withColumn("ts", F.expr("ts div 1000"))
-        else:
-            raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-            # micros parquet reads as TIMESTAMP_NTZ; session is pinned
-            # UTC so the cast to TIMESTAMP is identity before
-            # extracting micros
-            raw = raw.withColumn(
-                "ts", F.unix_micros(F.col("ts").cast("timestamp"))
-            )
+        raw = table(spark, sf_dir, "events").withColumn("ts", F.unix_micros("ts"))
         # The replay cutoff (max event time − delay) is derived INSIDE
         # the first staged write via an Observation — the observe node
         # sits above the parity filter so it sees every row, and the
@@ -1133,7 +944,7 @@ def _late_replay_staging(
 
         obs = Observation()
         even = F.col("user_id") % 2 == 0
-        delay_us = 30 * 60 * 1_000_000  # matches the default delay
+        delay_us = 30 * 60 * 1_000_000  # the replay's watermark delay
         _stage_replay_file(
             raw.observe(obs, F.max("ts").alias("max_us")).filter(even),
             staging,
@@ -1147,16 +958,11 @@ def _late_replay_staging(
             raw.filter(~even & (F.col("ts") <= cutoff)), staging, 2
         )
 
-    return _staged_replay_cached("late_stream", sf_dir, 3, build, (delay,))
+    return _staged_replay_cached(spark, "late_stream", sf_dir, 3, build)
 
 
-def run_late_data_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    query_name: str = "late_events",
-    delay: str = "30 minutes",
-) -> DataFrame:
-    """Watermark late-data policy, demonstrated with a DETERMINISTIC
+def run_late_data_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Watermark late-data policy (delay = 30 minutes), demonstrated with a DETERMINISTIC
     three-micro-batch replay and checked by a SQL oracle.
 
     Replay order (per-file micro-batches via mtime + maxFilesPerTrigger=1):
@@ -1178,56 +984,37 @@ def run_late_data_stream(
 
     Both W and the parity/recency split are scalar-derivable from the input,
     so the catalog oracle replays the whole policy in DuckDB."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_state_partitions(spark))
+    from pyspark.sql import types as T
+
+    from tts_data_pipeline_spark.plans.windows import tumbling_counts
+
+    # staging is owned by the replay cache (reused next invocation)
+    staging = _late_replay_staging(spark, sf_dir)
+    raw_schema = T.StructType(
+        [
+            T.StructField("event_id", T.LongType()),
+            T.StructField("ts", T.LongType()),
+            T.StructField("user_id", T.LongType()),
+            T.StructField("event_type", T.StringType()),
+            T.StructField("value", T.DoubleType()),
+            T.StructField("props", T.StringType()),
+        ]
     )
-    try:
-        staging = _late_replay_staging(spark, sf_dir, delay)
-
-        from pyspark.sql import types as T
-
-        raw_schema = T.StructType(
-            [
-                T.StructField("event_id", T.LongType()),
-                T.StructField("ts", T.LongType()),
-                T.StructField("user_id", T.LongType()),
-                T.StructField("event_type", T.StringType()),
-                T.StructField("value", T.DoubleType()),
-                T.StructField("props", T.StringType()),
-            ]
-        )
-        from tts_data_pipeline_spark.plans.windows import tumbling_counts
-
-        stream = (
-            spark.readStream.format("parquet")
-            .schema(raw_schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .load(staging)
-            .withColumn("ts", F.expr("timestamp_micros(ts)"))
-            .withWatermark("ts", delay)
-        )
-        agg = tumbling_counts(stream)
-        q = (
-            agg.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return spark.sql(f"SELECT * FROM {query_name}")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        # staging is owned by the replay cache (reused next invocation)
+    stream = (
+        spark.readStream.format("parquet")
+        .schema(raw_schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("latestFirst", "false")
+        .load(staging)
+        .withColumn("ts", F.expr("timestamp_micros(ts)"))
+        .withWatermark("ts", "30 minutes")
+    )
+    return drain_to_memory(
+        tumbling_counts(stream), "append", {_SHUFFLE: _state_partitions(spark)}
+    )
 
 
-def run_stream_dedup_to_memory(
-    spark: SparkSession, sf_dir: str, query_name: str = "stream_dedup"
-) -> DataFrame:
+def run_stream_dedup_to_memory(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exact dedup: ``dropDuplicates`` over the event key columns
     in append mode — each key's FIRST arrival is emitted, later copies are
     absorbed by the dedup state store.  Projecting to the key columns first
@@ -1241,31 +1028,15 @@ def run_stream_dedup_to_memory(
     within the lateness horizon, which is the published dedup contract for
     at-least-once sources); here the key space is finite so the unbounded
     form is the one whose output a batch oracle can hash."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_state_partitions(spark))
+    keys = read_events_stream(spark, sf_dir).select("user_id", "event_type")
+    return drain_to_memory(
+        keys.dropDuplicates(["user_id", "event_type"]),
+        "append",
+        {_SHUFFLE: _state_partitions(spark)},
     )
-    try:
-        keys = read_events_stream(spark, sf_dir).select("user_id", "event_type")
-        q = (
-            keys.dropDuplicates(["user_id", "event_type"])
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
-def run_stream_dedup_minhash(
-    spark: SparkSession, sf_dir: str, query_name: str = "stream_dedup_mh"
-) -> DataFrame:
+def run_stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming NEAR-dup filter: each arriving document's 8-bin
     ONE-PERMUTATION MinHash signature (Li, Owen & Zhang 2012 — one md5
     per WORD, 3-gram shingle hashes combined arithmetically, bins by
@@ -1300,84 +1071,67 @@ def run_stream_dedup_minhash(
             T.StructField("n_chars", T.LongType()),
         ]
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_state_partitions(spark))
+    # the file source requires a DIRECTORY basePath; the test layout
+    # keeps one parquet file per table in sf_dir, so glob-filter it
+    docs = (
+        spark.readStream.schema(schema)
+        .option("pathGlobFilter", "documents.parquet")
+        .parquet(sf_dir)
     )
-    try:
-        # the file source requires a DIRECTORY basePath; the test layout
-        # keeps one parquet file per table in sf_dir, so glob-filter it
-        docs = (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", "documents.parquet")
-            .parquet(sf_dir)
+    # Shingle hashing without shingle STRINGS: md5 each word ONCE,
+    # then combine the three 60-bit word hashes arithmetically
+    # (4a + 2b + c < 2^63, exact in both engines).  Three lessons
+    # baked in, each measured on the sf0.1 replica: materialize the
+    # split before any transform reads it (inline split re-parses per
+    # element access — 30 s), skip array_distinct (min-per-bin over a
+    # multiset equals min over the set, and distinct on string arrays
+    # is quadratic), and never build per-shingle strings in an
+    # interpreted higher-order function (~20 µs/shingle of pure
+    # allocation; the long arithmetic form took the sf1 run
+    # 285 s → ~30 s end to end)
+    # the streaming file source does not split files — a single
+    # parquet file is one task, serializing the CPU-dense hash work;
+    # a stateless repartition spreads it across the cluster
+    tokens = docs.select(
+        F.split(F.lower(F.trim("text")), " ").alias("w")
+    ).repartition(spark.sparkContext.defaultParallelism)
+    word_hash = tokens.select(
+        F.transform("w", lambda t: _md5_long(t)).alias("wh")
+    ).filter(F.size("wh") >= 3)
+    shingle = word_hash.select(
+        F.transform(
+            F.sequence(F.lit(1), F.size("wh") - 2),
+            lambda i: F.element_at(F.col("wh"), i) * 4
+            + F.element_at(F.col("wh"), i + 1) * 2
+            + F.element_at(F.col("wh"), i + 2),
+        ).alias("hs")
+    )
+    # one-permutation MinHash (Li, Owen & Zhang 2012): _MH_SEEDS bins
+    # by h % k, min per bin — k× cheaper than a k-seed family (which
+    # re-hashes every shingle per seed), with the empty-bin sentinel
+    # standing in for densification (deterministic in both engines,
+    # which is all a dedup EQUALITY key needs)
+    def bin_min(j: int):
+        # closure, not a default-arg lambda (the (element, index) trap
+        # — see operators/dedup.py::minhash_signature)
+        return F.coalesce(
+            F.array_min(
+                F.filter("hs", lambda h: h % _MH_SEEDS == F.lit(j))
+            ),
+            F.lit(2**63 - 1),
         )
-        # Shingle hashing without shingle STRINGS: md5 each word ONCE,
-        # then combine the three 60-bit word hashes arithmetically
-        # (4a + 2b + c < 2^63, exact in both engines).  Three lessons
-        # baked in, each measured on the sf0.1 replica: materialize the
-        # split before any transform reads it (inline split re-parses per
-        # element access — 30 s), skip array_distinct (min-per-bin over a
-        # multiset equals min over the set, and distinct on string arrays
-        # is quadratic), and never build per-shingle strings in an
-        # interpreted higher-order function (~20 µs/shingle of pure
-        # allocation; the long arithmetic form took the sf1 run
-        # 285 s → ~30 s end to end)
-        # the streaming file source does not split files — a single
-        # parquet file is one task, serializing the CPU-dense hash work;
-        # a stateless repartition spreads it across the cluster
-        tokens = docs.select(
-            F.split(F.lower(F.trim("text")), " ").alias("w")
-        ).repartition(spark.sparkContext.defaultParallelism)
-        word_hash = tokens.select(
-            F.transform("w", lambda t: _md5_long(t)).alias("wh")
-        ).filter(F.size("wh") >= 3)
-        shingle = word_hash.select(
-            F.transform(
-                F.sequence(F.lit(1), F.size("wh") - 2),
-                lambda i: F.element_at(F.col("wh"), i) * 4
-                + F.element_at(F.col("wh"), i + 1) * 2
-                + F.element_at(F.col("wh"), i + 2),
-            ).alias("hs")
-        )
-        # one-permutation MinHash (Li, Owen & Zhang 2012): _MH_SEEDS bins
-        # by h % k, min per bin — k× cheaper than a k-seed family (which
-        # re-hashes every shingle per seed), with the empty-bin sentinel
-        # standing in for densification (deterministic in both engines,
-        # which is all a dedup EQUALITY key needs)
-        def bin_min(j: int):
-            # closure, not a default-arg lambda (the (element, index) trap
-            # — see operators/dedup.py::minhash_signature)
-            return F.coalesce(
-                F.array_min(
-                    F.filter("hs", lambda h: h % _MH_SEEDS == F.lit(j))
-                ),
-                F.lit(2**63 - 1),
-            )
 
-        sig_cols = [bin_min(j).alias(f"mh{j}") for j in range(_MH_SEEDS)]
-        keys = shingle.select(*sig_cols)
-        q = (
-            keys.dropDuplicates([f"mh{j}" for j in range(_MH_SEEDS)])
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.sql(f"SELECT * FROM {query_name}")
+    sig_cols = [bin_min(j).alias(f"mh{j}") for j in range(_MH_SEEDS)]
+    keys = shingle.select(*sig_cols)
+    return drain_to_memory(
+        keys.dropDuplicates([f"mh{j}" for j in range(_MH_SEEDS)]),
+        "append",
+        {_SHUFFLE: _state_partitions(spark)},
+    )
 
 
 def run_stream_dedup_watermarked(
-    spark: SparkSession,
-    sf_dir: str,
-    query_name: str = "stream_dedup_wm",
-    delay: str = "30 minutes",
+    spark: SparkSession, sf_dir: str, delay: str = "30 minutes"
 ) -> DataFrame:
     """``dropDuplicatesWithinWatermark`` — the PRODUCTION bounded-state
     dedup this module's unbounded entries repeatedly point to — with a
@@ -1418,68 +1172,45 @@ def run_stream_dedup_watermarked(
 
     Every set above is a scalar-derivable function of the input, so the
     catalog oracle replays the full policy in DuckDB."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_state_partitions(spark))
+    # staging is owned by the replay cache (reused next invocation)
+    staging = _wm_dedup_staging(spark, sf_dir)
+
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [
+            T.StructField("user_id", T.LongType()),
+            T.StructField("event_type", T.StringType()),
+            T.StructField("hr", T.LongType()),
+            T.StructField("ts", T.LongType()),
+        ]
+    )
+    stream = (
+        spark.readStream.format("parquet")
+        .schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("latestFirst", "false")
+        .load(staging)
+        .withColumn("ts", F.expr("timestamp_micros(ts)"))
+        .withColumn("hr", F.expr("timestamp_micros(hr)"))
+        .withWatermark("ts", delay)
+    )
+    out = stream.dropDuplicatesWithinWatermark(
+        ["user_id", "event_type", "hr"]
     )
     # no-data micro-batches only advance the watermark between data
     # batches; this replay's policy was re-measured with them OFF —
     # output hash identical (the lagged watermark each data batch sees
     # comes from the previous DATA batch's report either way) — and each
     # skipped empty batch saves a full state-store open/commit cycle
-    prev_nodata = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "true"
+    return drain_to_memory(
+        out, "append", {_SHUFFLE: _state_partitions(spark), _NO_DATA: "false"}
     )
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
-        staging = _wm_dedup_staging(spark, sf_dir)
-
-        from pyspark.sql import types as T
-
-        schema = T.StructType(
-            [
-                T.StructField("user_id", T.LongType()),
-                T.StructField("event_type", T.StringType()),
-                T.StructField("hr", T.LongType()),
-                T.StructField("ts", T.LongType()),
-            ]
-        )
-        stream = (
-            spark.readStream.format("parquet")
-            .schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .load(staging)
-            .withColumn("ts", F.expr("timestamp_micros(ts)"))
-            .withColumn("hr", F.expr("timestamp_micros(hr)"))
-            .withWatermark("ts", delay)
-        )
-        out = stream.dropDuplicatesWithinWatermark(
-            ["user_id", "event_type", "hr"]
-        )
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata
-        )
-        # staging is owned by the replay cache (reused next invocation)
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 def run_stream_cms_to_memory(
     spark: SparkSession,
     sf_dir: str,
-    query_name: str = "cms_cells",
     n_rows: int = 4,
     width: int = 256,
     window: str = "1 day",
@@ -1494,55 +1225,38 @@ def run_stream_cms_to_memory(
     sink for the finite replay, same contract as ``run_stream_to_memory``."""
     from tts_data_pipeline_spark.plans.extensions import _md5_long
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_state_partitions(spark))
-    )
-    try:
-        ev = read_events_stream(spark, sf_dir).select("ts", "user_id")
-        rows = ev.select(
-            "ts",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(j).alias("j"),
-                            F.pmod(
-                                _md5_long(
-                                    F.concat(
-                                        F.lit(f"{j}:"),
-                                        F.col("user_id").cast("string"),
-                                    )
-                                ),
-                                F.lit(width),
-                            ).alias("bucket"),
-                        )
-                        for j in range(n_rows)
-                    ]
-                )
-            ).alias("h"),
-        ).select("ts", "h.j", "h.bucket")
-        agg = (
-            rows.withWatermark("ts", "30 minutes")
-            .groupBy(F.window("ts", window).alias("win"), "j", "bucket")
-            .count()
-            .select(
-                F.col("win.start").alias("win_start"),
-                "j",
-                "bucket",
-                F.col("count").alias("cell"),
+    ev = read_events_stream(spark, sf_dir).select("ts", "user_id")
+    rows = ev.select(
+        "ts",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(j).alias("j"),
+                        F.pmod(
+                            _md5_long(
+                                F.concat(
+                                    F.lit(f"{j}:"),
+                                    F.col("user_id").cast("string"),
+                                )
+                            ),
+                            F.lit(width),
+                        ).alias("bucket"),
+                    )
+                    for j in range(n_rows)
+                ]
             )
+        ).alias("h"),
+    ).select("ts", "h.j", "h.bucket")
+    agg = (
+        rows.withWatermark("ts", "30 minutes")
+        .groupBy(F.window("ts", window).alias("win"), "j", "bucket")
+        .count()
+        .select(
+            F.col("win.start").alias("win_start"),
+            "j",
+            "bucket",
+            F.col("count").alias("cell"),
         )
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.sql(f"SELECT * FROM {query_name}")
+    )
+    return drain_to_memory(agg, "complete", {_SHUFFLE: _state_partitions(spark)})
