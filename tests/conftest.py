@@ -23,8 +23,23 @@ TABLES = (
 ).split()
 
 
+def _host_driver_mem() -> str | None:
+    """40% of the host's RAM, capped at 16 GB (the session factory's
+    default).  The local-mode driver JVM holds every executor thread, and
+    a heap near the host's whole RAM lets the kernel OOM-kill it mid-run."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        return None
+    return f"{max(1, min(16, int(kb * 0.4 / 2**20)))}g"
+
+
 @pytest.fixture(scope="session")
 def spark():
+    mem = _host_driver_mem()
+    if mem is not None:  # an explicit SPARK_GRAFT_DRIVER_MEM still wins
+        os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", mem)
     s = get_spark("tests", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
     yield s
 

@@ -73,6 +73,20 @@ def test_video_frame_pipeline(spark):
     assert motion["v2"].mean_motion == 0.0
 
 
+def test_video_motion_rejects_mismatched_frame_sizes(spark):
+    """A video whose frames differ in size (4x4x3 = 48 vs 5x5x3 = 75
+    values) must fail, not drop the mismatched pair from its motion."""
+    frames = spark.createDataFrame(
+        [
+            ("v1", 0, 0.0, 4, 4, 3, list(range(48))),
+            ("v1", 10, 1.0, 5, 5, 3, list(range(75))),
+        ],
+        V.FRAME_SCHEMA,
+    )
+    with pytest.raises(Exception, match="frame size mismatch"):
+        V.frame_motion_features(frames).collect()
+
+
 def test_real_hooks_raise():
     with pytest.raises(NotImplementedError):
         I.real_decode_image(b"x")

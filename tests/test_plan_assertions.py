@@ -348,11 +348,16 @@ def test_bpe_plan_depth_bounded_at_r100_on_zipf_vocab(spark, tmp_path):
 def test_bpe_chunked_encode_equals_static(spark):
     """Chunked merge application (the large-R shape) must be bit-identical
     to the monolithic replace-chain at the same R — chunk size is a pure
-    codegen knob, never a semantics knob."""
+    codegen knob, never a semantics knob.  Both run with the local-learn
+    dial at 1, so both take the distributed chain (under the dial the
+    two would share the driver-local encode)."""
+    from tts_data_pipeline_spark.conf import TOKENIZER_LOCAL_LEARN_VOCAB
     from tts_data_pipeline_spark.plans.corpus import bpe_encode_corpus
+    from tts_data_pipeline_spark.session import scoped_conf
 
-    a = bpe_encode_corpus(spark, SF_DIR, rounds=5).collect()
-    b = bpe_encode_corpus(spark, SF_DIR, rounds=5, chunk_size=2).collect()
+    with scoped_conf(spark, {TOKENIZER_LOCAL_LEARN_VOCAB[0]: "1"}):
+        a = bpe_encode_corpus(spark, SF_DIR, rounds=5).collect()
+        b = bpe_encode_corpus(spark, SF_DIR, rounds=5, chunk_size=2).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 

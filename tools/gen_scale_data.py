@@ -286,8 +286,9 @@ def _densify_events(k_copies: int, outdir: str, src: str = SRC) -> None:
     users-per-bucket grows ×k and per-bucket pair mass ×k².  This is the
     deployment shape the r10 verdict flagged for the LPA co-occurrence
     build: a service's user count grows while its event-type count (and
-    any fixed observation window) does not.  Used by
-    ``tools/density_curve.py``."""
+    any fixed observation window) does not.  Used by the density decade
+    in PLANS.md ("User-density decade") and by
+    ``tools/streaming_state_curve.py`` (dens-8)."""
     os.makedirs(outdir, exist_ok=True)
     t = pq.read_table(f"{src}/events.parquet")
     copies = []

@@ -14,11 +14,11 @@ normalize → numbers → currency → dates → digit-words → collapse/lower.
 
 from __future__ import annotations
 
-from functools import lru_cache as _lru_cache
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from tts_data_pipeline_spark.session import memo_columns
 
 # ASCII punctuation, as in Python's string.punctuation (reference strips it
 # with str.translate at process_all.py:281-283).
@@ -207,11 +207,7 @@ def vi_cardinal(col: Column) -> Column:
     )
 
 
-@_lru_cache(maxsize=64)
-def _vi_cardinal_named(token: int, name: str) -> Column:
-    return vi_cardinal(F.col(name))
-
-
+@memo_columns
 def vi_cardinal_named(name: str) -> Column:
     """Memoized :func:`vi_cardinal` over a NAMED input column (r14
     optimization round).  The cardinal Column tree is thousands of
@@ -220,32 +216,21 @@ def vi_cardinal_named(name: str) -> Column:
     on EVERY invocation — while planning and execution of the built tree
     are cheap (0.06 s / 0.34 s warm).  An unresolved Column is an
     immutable expression template, reusable across plans in the same
-    process WHILE the backing JVM gateway lives, so the memo keys on the
-    active SparkContext identity (``session.gateway_token`` — r14
-    ADVICE #1: a stopped-and-recreated context must miss the cache, or a
-    stale Py4J ref could silently resolve to a different JVM object).
-    Nothing about the computation is cached: the driver still evaluates
-    the identical expression from the parquet inputs on every run."""
-    from tts_data_pipeline_spark.session import gateway_token
-
-    return _vi_cardinal_named(gateway_token(), name)
+    process WHILE the backing JVM gateway lives, so the memo is keyed on
+    the live SparkContext (``session.memo_columns``: a
+    stopped-and-recreated context must miss the cache, or a stale Py4J
+    ref could silently resolve to a different JVM object).  Nothing
+    about the computation is cached: the driver still evaluates the
+    identical expression from the parquet inputs on every run."""
+    return vi_cardinal(F.col(name))
 
 
-@_lru_cache(maxsize=16)
-def _date_to_vi_cardinal_named(
-    token: int, day: str, month: str, year: str
-) -> Column:
-    return date_to_vi_cardinal(F.col(day), F.col(month), F.col(year))
-
-
+@memo_columns
 def date_to_vi_cardinal_named(day: str, month: str, year: str) -> Column:
     """Memoized :func:`date_to_vi_cardinal` over named columns — see
     :func:`vi_cardinal_named` for the rationale (3× the cardinal tree,
-    the single most expensive Column build in the catalog) and for the
-    gateway-identity cache key."""
-    from tts_data_pipeline_spark.session import gateway_token
-
-    return _date_to_vi_cardinal_named(gateway_token(), day, month, year)
+    the single most expensive Column build in the catalog)."""
+    return date_to_vi_cardinal(F.col(day), F.col(month), F.col(year))
 
 
 def numbers_to_vi_cardinal(col: Column) -> Column:

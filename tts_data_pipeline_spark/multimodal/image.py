@@ -172,13 +172,18 @@ def image_features(decoded: DataFrame) -> DataFrame:
                 # whole batch stacks to ONE (n, h·w, c) float64 cube and
                 # the per-channel mean/std and brightness reduce in three
                 # vectorized numpy ops instead of a per-row ``iterrows``
-                # loop.  Bit-identical to the per-image path: every value
-                # is a small integer, so each partial sum / squared
-                # deviation is exactly representable in float64 (the same
+                # loop.  The means are bit-identical to the per-image
+                # path: every value is a small integer, so each partial
+                # sum is exactly representable in float64 (the same
                 # exactness argument the mm_image_features oracle relies
-                # on) — reduction ORDER cannot change a single bit.  The
-                # final 4dp round stays Python ``round`` (decimal
-                # nearest-even; np.round is a different semantics).
+                # on) and reduction order cannot change a bit.  The std
+                # is equivalent in reduction ORDER only, not exact: the
+                # squared deviations (x - mean)^2 round in float64, and
+                # numpy reduces axis=1 of the (n, h·w, c) cube in the same
+                # order as axis=(0, 1) of one (h, w, c) image; the 4dp
+                # round and the entry's oracle pin the result.  The final
+                # 4dp round stays Python ``round`` (decimal nearest-even;
+                # np.round is a different semantics).
                 cube = np.stack(pdf["pixels"].to_numpy()).astype(
                     np.float64
                 ).reshape(len(pdf), int(h[0]) * int(w[0]), int(c[0]))

@@ -138,18 +138,31 @@ def frame_motion_features(frames: DataFrame) -> DataFrame:
     All accumulation is integer-exact, so the values are bit-identical to
     the old per-key numpy fold (same ints divided by the same ints in the
     same order; pinned by the entry's DuckDB oracle and
-    tests/test_multimodal_image_video.py)."""
+    tests/test_multimodal_image_video.py).
+
+    Frames of one video must all have the same size: ``zip_with`` would
+    null-pad the shorter array and the pair would silently drop out of
+    the sums, so a size mismatch between consecutive frames raises
+    instead (and ``_npx``, the max size, is then every frame's size)."""
     import pyspark.sql.functions as F
     from pyspark.sql import Window
 
     w = Window.partitionBy("path").orderBy("frame_idx")
-    d = F.when(
-        F.col("_nxt").isNotNull(),
-        F.aggregate(
-            F.zip_with("pixels", "_nxt", lambda a, b: F.abs(a - b)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x.cast("long"),
-        ),
+    d = (
+        F.when(F.col("_nxt").isNull(), F.lit(None))
+        .when(
+            F.size("pixels") != F.size("_nxt"),
+            F.raise_error(
+                F.concat(F.lit("frame size mismatch in video "), F.col("path"))
+            ),
+        )
+        .otherwise(
+            F.aggregate(
+                F.zip_with("pixels", "_nxt", lambda a, b: F.abs(a - b)),
+                F.lit(0).cast("long"),
+                lambda acc, x: acc + x.cast("long"),
+            )
+        )
     )
     agg = (
         frames.select("path", "frame_idx", "pixels")

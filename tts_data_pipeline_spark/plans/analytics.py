@@ -265,8 +265,8 @@ def j8_salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain join); only the physical key distribution changes.  Hot keys are
     split across 8 salt buckets; the right side replicates 8×.
 
-    When to reach for it (r14 30%-hot-key probe, tools/skew_probe.py +
-    PLANS.md): salting beats AQE-at-defaults (~13% on the probe) because
+    When to reach for it (r14 30%-hot-key probe, PLANS.md "30%-hot-key
+    join probe"): salting beats AQE-at-defaults (~13% on the probe) because
     default AQE never splits a hot partition under its 256 MB byte floor —
     but AQE with TUNED thresholds beats blanket salting ~2× (it splits
     only the hot partition; salt taxes every row with the replication).

@@ -9,157 +9,23 @@ import os
 from tts_data_pipeline_spark.plans import registry
 
 # Import for registration side effects.
-from tts_data_pipeline_spark.plans import tpch  # noqa: F401
-
-try:  # modules added incrementally; keep catalog importable mid-build
-    from tts_data_pipeline_spark.plans import relational  # noqa: F401
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from tts_data_pipeline_spark.plans import scalarfuncs  # noqa: F401
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from tts_data_pipeline_spark.plans import windows  # noqa: F401
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from tts_data_pipeline_spark.plans import extensions  # noqa: F401
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from tts_data_pipeline_spark.plans import textops  # noqa: F401
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from tts_data_pipeline_spark.plans import coverage  # noqa: F401
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from tts_data_pipeline_spark.plans import qcops  # noqa: F401
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from tts_data_pipeline_spark.plans import analytics  # noqa: F401
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from tts_data_pipeline_spark.plans import multimodalops  # noqa: F401
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from tts_data_pipeline_spark.plans import streamingops  # noqa: F401
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from tts_data_pipeline_spark.plans import curation  # noqa: F401
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from tts_data_pipeline_spark.plans import graphops  # noqa: F401
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from tts_data_pipeline_spark.plans import corpus  # noqa: F401
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from tts_data_pipeline_spark.plans import scansinks  # noqa: F401
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from tts_data_pipeline_spark.plans import sketches  # noqa: F401
-except ImportError:  # pragma: no cover
-    pass
-
-
-# Fallback ordering if sample_history.json is missing (pre-round-12
-# behavior): scale-critical operators first so a prefix-sampling driver
-# exercises the plans that matter most at 100 TB (VERDICT r1 #8).
-# From round 12 the primary ordering is the ROTATION below (r11 verdict
-# #1): the driver certifies the first ~50 entries of catalog order, and
-# a static priority list meant 131 of 255 entries never appeared in any
-# committed CORRECTNESS_r*.json.
-_PRIORITY = (
-    # entries ADDED this round lead, so a sampling driver always exercises
-    # the newest oracles in the round that introduces them (r10 ADVICE)
-    "split_leakage_safe",
-    "split_leakage_safe_minhash",
-    "dedup_exact_groups",
-    "dedup_drop_duplicates",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard_bucketed",
-    "dedup_shingle_containment",
-    "dedup_simhash",
-    "dedup_embedding_cosine",
-    "dedup_embedding_cosine_ivf",
-    "dedup_semdedup",
-    "dedup_semdedup_keep_random",
-    "dedup_semdedup_keep_first",
-    "dedup_semdedup_distributed",
-    "w13_ewma_per_user",
-    "w14_cusum_alarms",
-    "ev_anomaly_mad",
-    "agg_heavy_hitters_cms",
-    "j13_bloom_semi_join",
-    "j14_bucketed_colocated_join",
-    "dedup_fuzzy_levenshtein",
-    "dedup_clusters",
-    "dedup_apply_survivors",
-    "sim_bruteforce_cosine_topk",
-    "sim_ivf_topk",
-    "sim_lsh_ann_topk",
-    "emb_kmeans_lloyd",
-    "graph_pagerank_trade",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_region_revenue",
-    "q18_large_volume_having",
-    "qc_wer_gate",
-    "tx_normalizer_chain",
-    "pipeline_e2e_preprocess",
-    "pipeline_e2e_align_qc",
-    "pipeline_e2e_crawl",
-    "pipeline_e2e_curation",
-    "x1_running_bucket",
-    "stream_tumbling_counts",
-    "stream_stream_join",
-    "stream_dedup_exact",
-    "split_train_val_test",
-    "a11_salted_aggregation",
-    "dedup_paragraph_exact",
-    "dedup_substring_spans",
-    "dedup_minhash_survivors",
-    "ta_bpe_encode",
-    "ta_decontaminate_semantic",
-    "mm_audio_resample",
-    "mm_audio_segment_cut",
-    "ta_decontaminate_eval",
-    "ta_perplexity_bigram",
-    "mix_temperature_resample",
-    "emb_int8_quantize",
-    "sim_int8_topk",
-    "ta_bpe_learn_merges",
-    "ta_wordpiece_learn",
-    "emb_pq_quantize",
-    "sim_pq_adc_topk",
-    "sim_ivfpq_topk",
-    "graph_triangle_copurchase",
-    "k5_chunked_download",
-    "s1_k1_books_csv_roundtrip",
-    "k7_partitioned_layout_roundtrip",
-    "qc_corpus_validate",
-    "ta_bpe_encode_chunked",
-    "ta_unigram_lm_learn",
-    "ta_unigram_lm_encode",
-    "ta_perplexity_kneser_ney",
-    "pipeline_e2e_ccnet",
-    "emb_binary_quantize",
-    "sim_hamming_topk",
-    "stream_dedup_minhash",
-    "mm_audio_fingerprint_dedup",
-    "mm_image_dhash_dedup",
-    "dedup_incremental_minhash",
+from tts_data_pipeline_spark.plans import (  # noqa: F401
+    tpch,
+    relational,
+    scalarfuncs,
+    windows,
+    extensions,
+    textops,
+    coverage,
+    qcops,
+    analytics,
+    multimodalops,
+    streamingops,
+    curation,
+    graphops,
+    corpus,
+    scansinks,
+    sketches,
 )
 
 
@@ -171,11 +37,8 @@ _HISTORY_PATH = os.path.join(
 def _load_history() -> dict | None:
     if not os.path.exists(_HISTORY_PATH):
         return None
-    try:
-        with open(_HISTORY_PATH) as f:
-            return json.load(f)
-    except (OSError, ValueError):  # pragma: no cover — corrupt file
-        return None
+    with open(_HISTORY_PATH) as f:
+        return json.load(f)
 
 
 def rotation_order(names: list[str], history: dict) -> list[str]:
@@ -212,12 +75,9 @@ def rotation_order(names: list[str], history: dict) -> list[str]:
 
 def _ordered(d: dict) -> dict:
     history = _load_history()
-    if history is not None:
-        return {k: d[k] for k in rotation_order(list(d), history)}
-    # fallback: the pre-round-12 static priority prefix
-    out = {k: d[k] for k in _PRIORITY if k in d}
-    out.update((k, v) for k, v in d.items() if k not in out)
-    return out
+    if history is None:  # no history file: registration order
+        return d
+    return {k: d[k] for k in rotation_order(list(d), history)}
 
 
 def queries():

@@ -31,12 +31,12 @@ exact BIGINT math in both engines, no float RNG.
 
 from __future__ import annotations
 
-from functools import lru_cache as _lru_cache
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from tts_data_pipeline_spark.conf import TOKENIZER_LOCAL_LEARN_VOCAB, dial
 from tts_data_pipeline_spark.plans.registry import query
+from tts_data_pipeline_spark.session import memo_columns, scoped_conf
 from tts_data_pipeline_spark.sources import table
 from tts_data_pipeline_spark.sources.readers import spread
 
@@ -1198,10 +1198,11 @@ GROUP BY d.doc_id ORDER BY d.doc_id"""
     return "".join(parts)
 
 
-def _local_vocab_rows(words: DataFrame, cap: int, persist: bool = False):
+def _local_vocab_rows(words: DataFrame, persist: bool = False):
     """ONE action that both sizes and (when small enough) fetches the
-    vocabulary state: ``limit(cap + 1).collect()``.  Returns the rows if
-    the vocabulary fits the local-learn cap, else ``None`` (the
+    vocabulary state: ``limit(cap + 1).collect()``, where ``cap`` is the
+    ``spark.graft.tokenizer.local_learn_vocab`` dial.  Returns the rows if
+    the vocabulary fits the cap, else ``None`` (the
     distributed loop re-uses the ``words`` frame; the probe cost is
     bounded by the cap either way).
 
@@ -1215,6 +1216,7 @@ def _local_vocab_rows(words: DataFrame, cap: int, persist: bool = False):
     returning; on the distributed path the CALLER unpersists once its
     initial state is materialized.  (The unigram family's word table is
     cachereg-cached already and probes with the default.)"""
+    cap = dial(words.sparkSession, TOKENIZER_LOCAL_LEARN_VOCAB)
     if persist:
         words.persist()
     head = words.limit(cap + 1).collect()
@@ -1307,8 +1309,6 @@ def learn_bpe_merges(
     import shutil as _shutil
     import tempfile as _tempfile
 
-    from tts_data_pipeline_spark.conf import TOKENIZER_LOCAL_LEARN_VOCAB, dial
-
     d = spread(table(spark, sf_dir, "documents")).select("doc_id", "text")
     words = (
         d.select(F.explode(F.split("text", " ")).alias("word"))
@@ -1327,9 +1327,7 @@ def learn_bpe_merges(
     # only the per-round driver-coordinated job launches disappear
     # (measured: learn(6) 2.9 s warm → ~0.4 s at sf0.1's 31-word vocab).
     if on_round is None:
-        head = _local_vocab_rows(
-            words, dial(spark, TOKENIZER_LOCAL_LEARN_VOCAB), persist=True
-        )
+        head = _local_vocab_rows(words, persist=True)
         if head is not None:
             return spark.createDataFrame(
                 _bpe_learn_local(head, rounds),
@@ -1505,8 +1503,6 @@ def bpe_encode_corpus(
 
     from tts_data_pipeline_spark.scratch import scratch_mkdtemp
 
-    from tts_data_pipeline_spark.conf import TOKENIZER_LOCAL_LEARN_VOCAB, dial
-
     d = spread(table(spark, sf_dir, "documents")).select("doc_id", "text")
     toks = d.select(
         "doc_id", F.explode(F.split("text", " ")).alias("w")
@@ -1534,9 +1530,7 @@ def bpe_encode_corpus(
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("bigint").alias("freq"))
     )
-    head = _local_vocab_rows(
-        words_probe, dial(spark, TOKENIZER_LOCAL_LEARN_VOCAB), persist=True
-    )
+    head = _local_vocab_rows(words_probe, persist=True)
     if head is not None:
         merges = _bpe_learn_local(head, rounds)
         pieces = spark.createDataFrame(
@@ -1617,8 +1611,12 @@ def ta_bpe_encode_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunks.  Same oracle generator as the static chain at R=6, so the
     chunked application is proven bit-identical to the monolithic
     expression — the property that lets a production job pick chunk size
-    purely on codegen limits."""
-    return bpe_encode_corpus(spark, sf_dir, rounds=6, chunk_size=2)
+    purely on codegen limits.  Built with the local-learn dial at 1, so
+    the chunked chain runs at every scale instead of the driver-local
+    encode ``ta_bpe_encode`` takes under the dial (every dial read and
+    probe happens while the frame is built, so the scope covers it)."""
+    with scoped_conf(spark, {TOKENIZER_LOCAL_LEARN_VOCAB[0]: "1"}):
+        return bpe_encode_corpus(spark, sf_dir, rounds=6, chunk_size=2)
 
 
 # --- WordPiece tokenizer (likelihood-scored merges) -------------------------
@@ -1890,11 +1888,7 @@ def learn_wordpiece_merges(
     # the dial, and the R likelihood-argmax rounds run in the driver
     # (identical merges/counts/scores; the raw score double is the same
     # IEEE division in both paths, rounded engine-side below either way)
-    from tts_data_pipeline_spark.conf import TOKENIZER_LOCAL_LEARN_VOCAB, dial
-
-    head = _local_vocab_rows(
-        words, dial(spark, TOKENIZER_LOCAL_LEARN_VOCAB), persist=True
-    )
+    head = _local_vocab_rows(words, persist=True)
     if head is not None:
         return (
             spark.createDataFrame(
@@ -2083,8 +2077,6 @@ def ta_wordpiece_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged oracle) — and the (word → n_pieces) frame arrives as a
     local relation under the same broadcast join.  Past the dial the
     relational jump-table build below runs unchanged."""
-    from tts_data_pipeline_spark.conf import TOKENIZER_LOCAL_LEARN_VOCAB, dial
-
     d = spread(table(spark, sf_dir, "documents")).select("doc_id", "text")
     words = (
         d.select(F.explode(F.split("text", " ")).alias("word"))
@@ -2092,9 +2084,7 @@ def ta_wordpiece_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("bigint").alias("freq"))
     )
-    head = _local_vocab_rows(
-        words, dial(spark, TOKENIZER_LOCAL_LEARN_VOCAB), persist=True
-    )
+    head = _local_vocab_rows(words, persist=True)
     if head is not None:
         lmerges = _wp_learn_local(head, 3)
         merged_local = [m[2] for m in lmerges]
@@ -2707,21 +2697,6 @@ def _uni_em_local(rows):
     ]
 
 
-def _uni_local_head(spark: SparkSession, sf_dir: str):
-    """One limit-probe action over the cached distinct-word frame: the
-    collected vocabulary state when it fits the local-learn dial, else
-    ``None`` (same crossover as :func:`learn_bpe_merges`)."""
-    from tts_data_pipeline_spark.conf import (
-        TOKENIZER_LOCAL_LEARN_VOCAB,
-        dial,
-    )
-
-    return _local_vocab_rows(
-        _uni_word_table(spark, sf_dir),
-        dial(spark, TOKENIZER_LOCAL_LEARN_VOCAB),
-    )
-
-
 def _uni_cte_chain(rounds: int, with_encode: bool) -> list:
     """Shared DuckDB-CTE builder for the unigram-LM oracles: seed counts,
     then per round an unrolled per-position Viterbi DP (positions
@@ -2960,7 +2935,7 @@ def ta_unigram_lm_learn_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vocabulary-sized lattice — same local crossover as the BPE/
     # WordPiece/hard-EM learners (see _uni_em_local for the bit-exact
     # float-fold argument; equivalence test + unchanged oracle)
-    head = _uni_local_head(spark, sf_dir)
+    head = _local_vocab_rows(_uni_word_table(spark, sf_dir))
     if head is not None:
         return (
             spark.createDataFrame(
@@ -3023,7 +2998,7 @@ def ta_unigram_lm_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
     part of the driver-mandated LLM-pipeline surface (cf.
     ``ta_bpe_learn_merges``)."""
     # r14 optimization: local-learn crossover (see _uni_learn_local)
-    head = _uni_local_head(spark, sf_dir)
+    head = _local_vocab_rows(_uni_word_table(spark, sf_dir))
     if head is not None:
         _, vocab, lp = _uni_learn_local(head, _UNI_ROUNDS)
         return (
@@ -3053,7 +3028,7 @@ def ta_unigram_lm_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vocabulary-sized model work — under the local-learn dial both run
     # in the driver and the (word → pieces) frame arrives as a local
     # relation; the corpus-sized explode/rollup below is unchanged
-    head = _uni_local_head(spark, sf_dir)
+    head = _local_vocab_rows(_uni_word_table(spark, sf_dir))
     if head is not None:
         wf, _, lp = _uni_learn_local(head, _UNI_ROUNDS)
         seg = spark.createDataFrame(
@@ -3445,8 +3420,13 @@ def _jl_planes():
 _JL_PLANES = _jl_planes()
 
 
-@_lru_cache(maxsize=2)
-def _jl_proj_cols_for(token: int) -> tuple:
+@memo_columns
+def _jl_proj_cols() -> tuple:
+    """Memoized projection Columns over input column ``v`` (r14
+    optimization): 16 dot-folds × 64 literal plane entries ≈ a thousand
+    Py4J expression constructions, re-paid per plan build (~0.9 s
+    measured) while the unresolved tree is an immutable template —
+    build once per live SparkContext (``session.memo_columns``)."""
     from tts_data_pipeline_spark.operators.similarity import dot, l2_norm
 
     return tuple(
@@ -3455,19 +3435,6 @@ def _jl_proj_cols_for(token: int) -> tuple:
         ).alias(f"p{j:02d}")
         for j, row in enumerate(_JL_PLANES)
     ) + (l2_norm(F.col("v")).alias("nrm_v"),)
-
-
-def _jl_proj_cols() -> tuple:
-    """Memoized projection Columns over input column ``v`` (r14
-    optimization): 16 dot-folds × 64 literal plane entries ≈ a thousand
-    Py4J expression constructions, re-paid per plan build (~0.9 s
-    measured) while the unresolved tree is an immutable template —
-    build once per gateway.  Same convention (and the same
-    gateway-identity cache key, r14 ADVICE #1) as
-    ``functions.vi_text.vi_cardinal_named``."""
-    from tts_data_pipeline_spark.session import gateway_token
-
-    return _jl_proj_cols_for(gateway_token())
 
 
 def _jl_oracle() -> str:
@@ -3554,8 +3521,11 @@ def _jl_rerank_planes():
 _JL_RERANK_PLANES = _jl_rerank_planes()
 
 
-@_lru_cache(maxsize=2)
-def _jl_rerank_p_col_for(token: int):
+@memo_columns
+def _jl_rerank_p_col():
+    """Memoized 32-fold projected-sketch Column over input ``v`` — see
+    ``_jl_proj_cols`` (this one is ~2k literal constructions, the
+    biggest single Column build in the similarity family)."""
     from tts_data_pipeline_spark.operators.similarity import dot
 
     return F.array(
@@ -3564,16 +3534,6 @@ def _jl_rerank_p_col_for(token: int):
             for row in _JL_RERANK_PLANES
         ]
     ).alias("p")
-
-
-def _jl_rerank_p_col():
-    """Memoized 32-fold projected-sketch Column over input ``v`` — see
-    ``_jl_proj_cols`` (this one is ~2k literal constructions, the
-    biggest single Column build in the similarity family; same
-    gateway-identity cache key)."""
-    from tts_data_pipeline_spark.session import gateway_token
-
-    return _jl_rerank_p_col_for(gateway_token())
 
 
 def _jl_rerank_oracle() -> str:

@@ -814,8 +814,8 @@ def cooccur_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def conv_cooccur_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The converged-LPA entry's co-occurrence edge build, factored so
-    the density harness (``tools/density_curve.py``) can time the pair
-    stage in isolation from the LPA rounds.  Returns the directed edge
+    the pair stage can be timed in isolation from the LPA rounds (the
+    density decade in PLANS.md, "User-density decade").  Returns the directed edge
     list (both directions + one self-loop per node) — see
     :func:`graph_label_propagation_converged` for semantics and the
     grid-block rationale."""

@@ -19,6 +19,7 @@ from tts_data_pipeline_spark.multimodal import image as I
 from tts_data_pipeline_spark.multimodal import video as V
 from tts_data_pipeline_spark.cachereg import opt_in_sorted
 from tts_data_pipeline_spark.plans.registry import query
+from tts_data_pipeline_spark.session import memo_columns
 from tts_data_pipeline_spark.sources import table
 from tts_data_pipeline_spark.sources.readers import spread
 
@@ -663,20 +664,16 @@ FROM fp GROUP BY dhash_lo, dhash_hi ORDER BY dhash_lo, dhash_hi
 """
 
 
-from functools import lru_cache as _lru_cache
-
-
-@_lru_cache(maxsize=2)
-def _dhash_word_cols(token: int) -> tuple:
+@memo_columns
+def _dhash_word_cols() -> tuple:
     """Memoized (dhash_lo, dhash_hi) Column templates over input column
     ``pixels`` (r15, guide §7.3 — driver-side planning cost): the two
     32-bit words are ~1,500 nested Py4J expression constructions
     (128 gradient bits × two 3-term gray sums × when/shift), measured
     ~3 s of pure driver-side Column BUILD per invocation at sf0.1 —
     twice the query's actual execution.  The unresolved tree is an
-    immutable template; the memo keys on the active gateway identity
-    (``session.gateway_token``) like every other Column memo.  Nothing
-    about the computation is cached."""
+    immutable template, built once per live SparkContext
+    (``session.memo_columns``).  Nothing about the computation is cached."""
     px = F.col("pixels")
 
     def gray(i: int, j: int):
@@ -715,13 +712,11 @@ def mm_image_dhash_dedup(
     over the flattened pixel array (literal indices — no higher-order
     functions at all), and the only shuffle carries (path, two BIGINTs).
     Numerics: integer gray sums, exact in both engines."""
-    from tts_data_pipeline_spark.session import gateway_token
-
     p = _payloads(spark, sf_dir)
     decoded = I.decode_images(
         p.select("path", "content"), height=16, width=16
     )
-    lo, hi = _dhash_word_cols(gateway_token())
+    lo, hi = _dhash_word_cols()
     fp = decoded.select("path", lo, hi)
     return (
         fp.groupBy("dhash_lo", "dhash_hi")

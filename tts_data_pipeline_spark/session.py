@@ -9,9 +9,10 @@ UTC-naive engines (parquet stores naive micros; DuckDB reads them naive).
 
 from __future__ import annotations
 
+import functools
 import os
 import threading
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
@@ -61,26 +62,45 @@ def get_spark(
     return spark
 
 
-def gateway_token() -> int:
-    """Identity token of the live SparkContext backing Column construction.
+# (id, startTime) of the SparkContext the memo entries were built under,
+# and the entries themselves, keyed by (builder, args)
+_MEMO_CONTEXT: tuple | None = None
+_MEMO: dict[tuple, object] = {}
+_MEMO_LOCK = threading.RLock()
 
-    Memoized unresolved Columns (``vi_cardinal_named``, the JL projection
-    templates) wrap Py4J JavaObject refs bound to the CURRENT JVM gateway;
-    if the SparkContext is stopped and recreated in the same process a
-    cached Column would silently hold a dead ref — or, because Py4J
-    reuses object ids, resolve to a DIFFERENT JVM object.  Every Column
-    memo keys on this token so a recreated context misses the cache and
-    rebuilds (r14 ADVICE #1).  ``id()`` of the active context is enough:
-    a stopped context cannot be reactivated, so a new gateway always
-    means a new Python ``SparkContext`` object (held alive by the memo's
-    key tuple? no — ints are copied, so we also keep the startTime to
-    disambiguate id reuse after GC)."""
-    from pyspark import SparkContext
 
-    sc = SparkContext._active_spark_context
-    if sc is None:
-        return 0
-    return hash((id(sc), getattr(sc, "startTime", 0)))
+def memo_columns(build: Callable) -> Callable:
+    """Memoize a builder of unresolved Columns per live SparkContext.
+
+    A built Column is an immutable expression template, cheap to reuse,
+    while building it can cost seconds of Py4J calls.  But it wraps
+    JavaObject refs bound to the current JVM gateway: if the context is
+    stopped and recreated in the same process, a cached Column would hold
+    a dead ref, or, because Py4J reuses object ids, resolve to a
+    DIFFERENT JVM object.  So entries are keyed by the builder's
+    positional arguments under the active context's ``(id(sc),
+    sc.startTime)`` (the startTime disambiguates an ``id`` reused after
+    GC), and the first call under a new context drops every entry built
+    under the old one.  Only the template is cached; the computation
+    still runs from the inputs on every plan."""
+
+    @functools.wraps(build)
+    def memo(*args):
+        global _MEMO_CONTEXT
+        from pyspark import SparkContext
+
+        sc = SparkContext._active_spark_context
+        ctx = None if sc is None else (id(sc), sc.startTime)
+        with _MEMO_LOCK:
+            if ctx != _MEMO_CONTEXT:
+                _MEMO.clear()
+                _MEMO_CONTEXT = ctx
+            key = (build, args)
+            if key not in _MEMO:
+                _MEMO[key] = build(*args)
+            return _MEMO[key]
+
+    return memo
 
 
 def ensure_utc(spark: SparkSession) -> SparkSession:
