@@ -81,11 +81,11 @@ def test_random_graphs_match_union_find(spark):
 
 def test_require_converged_raises_at_cap_and_stats_record(spark):
     """A capped (non-converged) run must fail loudly when the caller
-    requires the exact closure, and LAST_RUN_STATS reports rounds +
+    requires the exact closure, and the run record reports rounds +
     convergence for the scaling harness."""
     import pytest
 
-    from tts_data_pipeline_spark.operators import components as C
+    from tts_data_pipeline_spark.session import run_stats
 
     # a 60-node path needs >1 star round; cap at 1 and demand convergence
     pairs = spark.createDataFrame(
@@ -95,12 +95,14 @@ def test_require_converged_raises_at_cap_and_stats_record(spark):
         connected_components(
             pairs, max_iterations=1, require_converged=True
         ).collect()
-    assert C.LAST_RUN_STATS == {"rounds": 1, "converged": False}
+    stats = run_stats(spark, "connected_components")
+    assert stats == {"rounds": 1, "converged": False}
 
     out = {r.id: r.component for r in connected_components(pairs).collect()}
     assert set(out.values()) == {0}
-    assert C.LAST_RUN_STATS["converged"] is True
-    assert 1 < C.LAST_RUN_STATS["rounds"] <= 20
+    stats = run_stats(spark, "connected_components")
+    assert stats["converged"] is True
+    assert 1 < stats["rounds"] <= 20
 
 
 def test_lpa_convergence_observation(spark):
@@ -143,8 +145,8 @@ def test_lpa_convergence_observation(spark):
 
 
 def test_lpa_catalog_entry_populates_last_run(spark):
-    """graph_label_propagation stashes its observations in LPA_LAST_RUN so
-    a driver-style caller can read the convergence report after its own
+    """graph_label_propagation records its observations in the run record
+    so a driver-style caller can read the convergence report after its own
     collect."""
     from tts_data_pipeline_spark.plans import graphops as G
 
@@ -378,7 +380,7 @@ def test_pre_contract_round_count_robust_to_adverse_partitioning(spark):
     rounds instead of 2 at sf0.1.  The ITERATED contraction (coalesce to
     cores, contract, repartition by node, contract) must keep the round
     count low for ANY input partitioning, with identical components."""
-    from tts_data_pipeline_spark.operators import components as C
+    from tts_data_pipeline_spark.session import run_stats
 
     # clique-heavy graph: 30 families of 12 copies each -> 66 edges/family
     fams = [
@@ -392,14 +394,14 @@ def test_pre_contract_round_count_robust_to_adverse_partitioning(spark):
         r.id: r.component
         for r in connected_components(df.coalesce(1), pre_contract=True).collect()
     }
-    rounds_best = C.LAST_RUN_STATS["rounds"]
+    rounds_best = run_stats(spark, "connected_components")["rounds"]
     # adverse: scatter every family across 64 partitions by row hash
     scattered = df.repartition(64)
     got = {
         r.id: r.component
         for r in connected_components(scattered, pre_contract=True).collect()
     }
-    rounds_adverse = C.LAST_RUN_STATS["rounds"]
+    rounds_adverse = run_stats(spark, "connected_components")["rounds"]
     assert got == base
     # identical-round-count is the robustness contract the iterated
     # contraction buys (pre-fix: adverse ran 3x the rounds)
@@ -415,9 +417,10 @@ def test_kcore_oracle_margin_and_peel_semantics(spark):
     the 2-core drops the tail nodes one per round (the chain is the
     worst case: rounds grow with tail length) and keeps the triangle."""
     from tts_data_pipeline_spark.plans import graphops
+    from tts_data_pipeline_spark.session import run_stats
 
     graphops.graph_kcore_decompose(spark, "/root/testdata/sf0.01").collect()
-    rounds = graphops.KCORE_LAST_RUN["rounds_run"]
+    rounds = run_stats(spark, "graph_kcore_decompose")["rounds_run"]
     assert 1 <= rounds <= graphops._KCORE_ORACLE_ROUNDS - 5, rounds
 
     # crafted check against the naive peel: triangle 1-2-3 + tail 3-4-5-6
@@ -454,7 +457,7 @@ def test_local_finish_identical_to_star_loop_and_stats(spark):
     star loop."""
     import random
 
-    from tts_data_pipeline_spark.operators import components as C
+    from tts_data_pipeline_spark.session import run_stats
 
     rng = random.Random(23)
     edges = sorted(
@@ -464,8 +467,9 @@ def test_local_finish_identical_to_star_loop_and_stats(spark):
 
     # star-loop ground truth (no pre_contract → no local finish)
     base = {r.id: r.component for r in connected_components(df).collect()}
-    assert C.LAST_RUN_STATS["converged"] is True
-    assert "local_finish" not in C.LAST_RUN_STATS
+    stats = run_stats(spark, "connected_components")
+    assert stats["converged"] is True
+    assert "local_finish" not in stats
 
     # local-finish path (default dial ≫ forest size)
     got = {
@@ -473,7 +477,7 @@ def test_local_finish_identical_to_star_loop_and_stats(spark):
         for r in connected_components(df, pre_contract=True).collect()
     }
     assert got == base
-    assert C.LAST_RUN_STATS == {
+    assert run_stats(spark, "connected_components") == {
         "rounds": 0,
         "converged": True,
         "local_finish": True,
@@ -489,5 +493,54 @@ def test_local_finish_identical_to_star_loop_and_stats(spark):
     finally:
         spark.conf.unset("spark.graft.cc.local_finish_rows")
     assert got2 == base
-    assert "local_finish" not in C.LAST_RUN_STATS
-    assert C.LAST_RUN_STATS["converged"] is True
+    stats = run_stats(spark, "connected_components")
+    assert "local_finish" not in stats
+    assert stats["converged"] is True
+
+
+def test_run_record_is_per_job_group_across_threads(spark):
+    """Two threads, each under its own job group, run connected_components
+    on graphs with different star-round counts; both finish their action
+    before either reads, and each still reads its own rounds."""
+    import threading
+
+    from tts_data_pipeline_spark.session import run_stats
+
+    graphs = {
+        "test_cc_single_edge": [(1, 2)],
+        "test_cc_long_path": [(i, i + 1) for i in range(60)],
+    }
+    expected = {}
+    for group, edges in graphs.items():
+        connected_components(
+            spark.createDataFrame(edges, ["id_a", "id_b"])
+        ).collect()
+        expected[group] = run_stats(spark, "connected_components")["rounds"]
+    assert len(set(expected.values())) == len(graphs), expected
+
+    sc = spark.sparkContext
+    barrier = threading.Barrier(len(graphs), timeout=300)
+    got, errors = {}, []
+
+    def run(group, edges):
+        try:
+            sc.setJobGroup(group, group)
+            connected_components(
+                spark.createDataFrame(edges, ["id_a", "id_b"])
+            ).collect()
+            barrier.wait()
+            got[group] = run_stats(spark, "connected_components")["rounds"]
+        except Exception as e:  # reported below, from the test's thread
+            errors.append(e)
+            barrier.abort()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    threads = [threading.Thread(target=run, args=kv) for kv in graphs.items()]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert got == expected

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_DIR
 from tts_data_pipeline_spark.operators import dedup as D
 from tts_data_pipeline_spark.operators import similarity as S
+from tts_data_pipeline_spark.session import run_stats
 
 
 def _corpus(spark):
@@ -297,15 +298,17 @@ def test_ngram_jaccard_probe_picks_path_by_vocab_richness(spark):
         ["doc_id", "text", "bucket"],
     )
     D.ngram_jaccard_pairs(rich, bucket_cols=("bucket",)).collect()
-    assert D.LAST_JACCARD_PLAN["prefix_filter"] is True, D.LAST_JACCARD_PLAN
+    plan = run_stats(spark, "ngram_jaccard_pairs")
+    assert plan["prefix_filter"] is True, plan
 
     degenerate = spark.createDataFrame(
         [(i, "aa bb cc dd", 0) for i in range(60)],
         ["doc_id", "text", "bucket"],
     )
     D.ngram_jaccard_pairs(degenerate, bucket_cols=("bucket",)).collect()
-    assert D.LAST_JACCARD_PLAN["prefix_filter"] is False, D.LAST_JACCARD_PLAN
-    assert D.LAST_JACCARD_PLAN["sampled_vocab"] == 4
+    plan = run_stats(spark, "ngram_jaccard_pairs")
+    assert plan["prefix_filter"] is False, plan
+    assert plan["sampled_vocab"] == 4
 
 
 def test_cache_registry_reuses_same_plan_replaces_changed(spark):
@@ -594,10 +597,7 @@ def test_containment_prefix_equals_exhaustive_and_probe_picks_prefix(spark):
     auto-probe must take the prefix path (sequences are rich even over
     the driver's 31-word token vocabulary) — the opposite decision from
     the token-level Jaccard twin."""
-    from tts_data_pipeline_spark.operators.dedup import (
-        LAST_CONTAINMENT_PLAN,
-        shingle_containment_pairs,
-    )
+    from tts_data_pipeline_spark.operators.dedup import shingle_containment_pairs
     from tts_data_pipeline_spark.sources import table
 
     d = table(spark, SF_DIR, "documents")
@@ -607,7 +607,7 @@ def test_containment_prefix_equals_exhaustive_and_probe_picks_prefix(spark):
             d, bucket_cols=("lang",), threshold=0.8
         ).collect()
     )
-    assert LAST_CONTAINMENT_PLAN["prefix_filter"] is True
+    assert run_stats(spark, "shingle_containment_pairs")["prefix_filter"] is True
     exhaustive = sorted(
         (r.id_a, r.id_b, r.containment)
         for r in shingle_containment_pairs(

@@ -819,3 +819,27 @@ def test_timeout_sessionize_output_is_slicing_independent(spark):
     by_slices = {n: run(n) for n in (2, 3, 4)}
     assert by_slices[2], "replay emitted nothing — fixture too small"
     assert by_slices[2] == by_slices[3] == by_slices[4]
+
+
+def test_declared_test_table_schemas_match_files(spark):
+    """Every declared driver-table schema names the columns and types
+    Spark reads from the file, nullability aside."""
+    from tts_data_pipeline_spark import schemas
+
+    for name, declared in schemas.TEST_TABLES.items():
+        read = spark.read.parquet(f"{SF_DIR}/{name}.parquet").schema
+        assert [(f.name, f.dataType.simpleString()) for f in read] == [
+            (f.name, f.dataType.simpleString()) for f in declared
+        ], name
+
+
+def test_events_read_leaves_nanos_as_long_at_default_for_micros_file(spark):
+    """The nanos-as-long legacy read is turned on only for an events file
+    that stores nanos; the shipped files store micros."""
+    from tts_data_pipeline_spark.sources import table
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    spark.conf.unset(key)
+    default = spark.conf.get(key)
+    table(spark, SF_DIR, "events")
+    assert spark.conf.get(key) == default

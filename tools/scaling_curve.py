@@ -20,9 +20,10 @@ Queries in ``SF3_QUERIES`` get one more decade: an sf3 point
 (documents/events/embeddings tiles only).
 
 Queries driving ``connected_components`` also report the star-round count
-per scale (from ``operators.components.LAST_RUN_STATS``): their wall time
-is rounds x per-round cost and rounds grow ~log² n, so a slope without
-the round count can overstate per-round scaling.
+per scale (from its run record under the job group each query and scale
+runs in): their wall time is rounds x per-round cost and rounds grow
+~log² n, so a slope without the round count can overstate per-round
+scaling.
 
 Usage: python tools/scaling_curve.py [--runs 2] [query ...]
 """
@@ -37,9 +38,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tts_data_pipeline_spark.operators import components  # noqa: E402
 from tts_data_pipeline_spark.plans import catalog  # noqa: E402
-from tts_data_pipeline_spark.session import get_spark  # noqa: E402
+from tts_data_pipeline_spark.session import get_spark, run_stats  # noqa: E402
 
 DEFAULT_QUERIES = [
     "dedup_embedding_cosine_ivf",
@@ -222,14 +222,18 @@ def main() -> None:
         cc_rounds: dict[float, int] = {}
         for sf, d in scales:
             best = math.inf
+            spark.sparkContext.setJobGroup(f"{name}@sf{sf}", name)
             for _ in range(runs):
-                components.LAST_RUN_STATS["rounds"] = 0
                 t0 = time.time()
                 fn(spark, d).write.format("noop").mode("overwrite").save()
                 best = min(best, time.time() - t0)
             times[sf] = round(best, 3)
-            if components.LAST_RUN_STATS["rounds"]:
-                cc_rounds[sf] = components.LAST_RUN_STATS["rounds"]
+            try:
+                rounds = run_stats(spark, "connected_components")["rounds"]
+            except LookupError:  # the query runs no connected_components
+                rounds = 0
+            if rounds:
+                cc_rounds[sf] = rounds
         results[name] = {"times": times, "slope": round(_fit_slope(times), 2)}
         if cc_rounds:
             results[name]["cc_rounds"] = cc_rounds

@@ -14,23 +14,12 @@ engine; the data never leaves the cluster."""
 
 from __future__ import annotations
 
-import atexit
-import os
-import shutil
-
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from tts_data_pipeline_spark.conf import CC_LOCAL_FINISH_ROWS, dial
-
-
-# Diagnostics from the most recent ``connected_components`` call: how many
-# star rounds ran and whether the edge set reached its fixpoint.  Written
-# once per call (driver-side scalars only); read by the scaling harness to
-# report rounds-vs-n honestly (wall time here is rounds x per-round cost,
-# and rounds grow ~log² n, so a "linear" claim without the round count
-# overstates it).
-LAST_RUN_STATS: dict = {"rounds": 0, "converged": False}
+from tts_data_pipeline_spark.scratch import RoundStore
+from tts_data_pipeline_spark.session import run_record
 
 
 def contract_pairs_locally(
@@ -102,7 +91,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iterations: int = 20,
-    checkpointer: str = "auto",
     require_converged: bool = False,
     pre_contract: bool = False,
 ) -> DataFrame:
@@ -121,37 +109,20 @@ def connected_components(
     (never wrong merges).  Callers whose downstream semantics REQUIRE the
     exact transitive closure (oracle-checked survivor anti-joins) pass
     ``require_converged=True`` so a capped run raises instead of silently
-    returning extra survivors; ``LAST_RUN_STATS`` records the round count
-    and convergence flag of the latest call for scaling measurement.
+    returning extra survivors.  Each call writes a
+    ``session.run_record`` of kind ``"connected_components"``: the round
+    count and convergence flag (plus ``local_finish`` on that path), so
+    the scaling harness can report rounds-vs-n (wall time is rounds x
+    per-round cost, and rounds grow ~log² n).
 
-    Iteration state: each round's labels are persisted to a per-call temp
-    parquet dir and read back — the same lineage truncation a reliable
-    ``checkpoint()`` gives (without it the plan doubles per iteration and
-    the driver dies on plan compilation alone), but with EXPLICIT file
-    lifecycle: round i-1's files are deleted as soon as round i is
-    written, the edge/pair state is deleted when the loop ends, and the
-    final labels dir (the only thing the returned frame reads) is removed
-    at interpreter exit.  Spark's reliable checkpoints default to
-    never-cleaned files (``spark.cleaner.referenceTracking.cleanCheckpoints``
-    is off and can't be enabled on a live context), which leaked disk
-    unboundedly across repeated calls in a long session.  The INPUT is
-    persisted first so the symmetrizing union never embeds two copies of
-    the caller's (possibly deep) pair-generation plan.
+    Iteration state: each round's edge set goes through a
+    ``scratch.RoundStore`` (parquet write + schema-pinned read-back, the
+    previous round deleted; the last round, which the returned frame
+    reads, stays until interpreter exit).  The INPUT edge set is persisted
+    first so the symmetrizing union never embeds two copies of the
+    caller's (possibly deep) pair-generation plan.
     """
     spark = pairs.sparkSession
-    # ``checkpointer``: how per-round lineage truncation happens.
-    #   "parquet" — durable file round-trip: labels survive executor loss,
-    #               explicit file lifecycle below, and the read-back comes
-    #               in through the vectorized columnar scan;
-    #   "local"   — ``localCheckpoint(eager=True)``.  Measured 2× SLOWER
-    #               than the parquet round-trip at sf0.1 (33 s vs 13-17 s
-    #               for the whole loop): the RDD cache stores deserialized
-    #               row objects and downstream reads bypass the columnar
-    #               batch path.  Kept only as an escape hatch for
-    #               filesystem-less environments.
-    #   "auto"    — "parquet" (measurement above; reliable on clusters too).
-    if checkpointer == "auto":
-        checkpointer = "parquet"
     if pre_contract:
         # collapse per-partition clique mass to forest edges before the
         # iterative loop (see contract_pairs_locally) — components are
@@ -178,17 +149,6 @@ def connected_components(
         pairs = contract_pairs_locally(
             pairs.repartition(width, F.col(src)), src, dst
         )
-    from tts_data_pipeline_spark.scratch import scratch_mkdtemp
-
-    workdir = scratch_mkdtemp("cc_state_")
-    atexit.register(shutil.rmtree, workdir, ignore_errors=True)
-
-    def _persist(df: DataFrame, name: str) -> DataFrame:
-        if checkpointer == "local":
-            return df.localCheckpoint(eager=True)
-        path = os.path.join(workdir, name)
-        df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
 
     # Alternating large-star / small-star (Kiveris et al., "Connected
     # Components in MapReduce and Beyond", SoCC'14).  Unlike min-label
@@ -238,17 +198,12 @@ def connected_components(
             F.col(src) != F.col(dst)
         )
     )
-    if checkpointer == "parquet":
-        # edge count rides the persist action (no extra job) — it gates
-        # the local-finish branch below
-        obs_e0 = Observation("cc_n_edges_0")
-        edges = _persist(
-            edges0.observe(obs_e0, F.count(F.lit(1)).alias("n")), "edges_0"
-        )
-        n_edges0 = obs_e0.get["n"]
-    else:
-        edges = _persist(edges0, "edges_0")
-        n_edges0 = edges.count()
+    # edge count rides the persist action (no extra job) — it gates the
+    # local-finish branch below
+    store = RoundStore("cc_state_")
+    obs_e0 = Observation("cc_n_edges_0")
+    edges = store.persist(edges0.observe(obs_e0, F.count(F.lit(1)).alias("n")))
+    n_edges0 = obs_e0.get["n"]
 
     if pre_contract and n_edges0 <= dial(spark, CC_LOCAL_FINISH_ROWS):
         # Local-finish tail of the filtering algorithm (Lattanzi et al.,
@@ -293,9 +248,9 @@ def connected_components(
             if ids:
                 yield pd.DataFrame({"id": ids, "component": comps})
 
-        LAST_RUN_STATS.clear()
-        LAST_RUN_STATS.update(
-            {"rounds": 0, "converged": True, "local_finish": True}
+        run_record(
+            spark, "connected_components", rounds=0, converged=True,
+            local_finish=True,
         )
         return edges.coalesce(1).mapInPandas(
             _uf_finish, schema=f"id {t}, component {t}"
@@ -312,37 +267,29 @@ def connected_components(
     # separate follow-up job, saving one job launch per round.
     for i in range(1, max_iterations + 1):
         stepped = _norm(_small_star(_large_star(edges)))
-        if checkpointer == "parquet":
-            # (count, hash-sum) is an order-insensitive set signature;
-            # hashes bucketed mod 2³¹ so the sum can't overflow long under
-            # ANSI mode.  Observation collects it during the write action.
-            obs = Observation(f"cc_sig_{i}")
-            stepped = stepped.observe(
+        # (count, hash-sum) is an order-insensitive set signature; hashes
+        # bucketed mod 2³¹ so the sum can't overflow long under ANSI mode.
+        # Observation collects it during the write action.
+        obs = Observation(f"cc_sig_{i}")
+        edges = store.persist(
+            stepped.observe(
                 obs,
                 F.count(F.lit(1)).alias("n"),
                 F.sum(
                     F.pmod(F.xxhash64("u", "v"), F.lit(2_147_483_647))
                 ).alias("h"),
             )
-            edges = _persist(stepped, f"edges_{i}")
-            got = obs.get
-            sig = (got["n"], got["h"])
-        else:
-            edges = _persist(stepped, f"edges_{i}")
-            sig = tuple(
-                edges.agg(
-                    F.count("*"),
-                    F.sum(F.pmod(F.xxhash64("u", "v"), F.lit(2_147_483_647))),
-                ).head()
-            )
-        shutil.rmtree(os.path.join(workdir, f"edges_{i - 1}"), ignore_errors=True)
+        )
+        got = obs.get
+        sig = (got["n"], got["h"])
         rounds_run = i
         if sig == prev_sig:
             converged = True
             break
         prev_sig = sig
-    LAST_RUN_STATS.clear()
-    LAST_RUN_STATS.update({"rounds": rounds_run, "converged": converged})
+    run_record(
+        spark, "connected_components", rounds=rounds_run, converged=converged
+    )
     if require_converged and not converged:
         raise RuntimeError(
             f"connected_components did not reach the star fixpoint in "
@@ -352,9 +299,8 @@ def connected_components(
         )
     # at the star fixpoint each component is {(leaf, min)...}; every node's
     # label is min(Γ ∪ {self}) — leaves get the center, the center itself.
-    # No persist: the lineage is one groupBy over the persisted edge files
-    # (kept on disk until interpreter exit via the workdir atexit hook), so
-    # the returned frame is already shallow.
+    # No persist: the lineage is one groupBy over the last round's edge
+    # files, so the returned frame is already shallow.
     sym = edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
     return (
         sym.groupBy("u")

@@ -19,6 +19,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tts_data_pipeline_spark.session import run_record
+
 
 def eval_once(col: Column) -> Column:
     """Pin an expensive similarity expression to ONE evaluation in its
@@ -263,13 +265,42 @@ def minhash_lsh_pairs(
     )
 
 
-# Diagnostics from the most recent ``ngram_jaccard_pairs`` call with
-# ``prefix_filter=None``: what the vocabulary-richness probe saw and which
-# candidate path it chose.  Driver-side scalars only; exists so a pytest
-# can pin the decision on both corpus shapes (rich vocab → prefix filter,
-# near-universal vocab → exhaustive) and so a regression in the probe
-# fails a named assertion instead of a wall-time number.
-LAST_JACCARD_PLAN: dict = {}
+def _probe_vocab(base: DataFrame, kind: str) -> tuple[int, int, bool]:
+    """Vocabulary-richness probe behind ``prefix_filter=None``: returns
+    ``(n_docs, n_vocab, prefix_filter)`` for a sample of ``base``'s
+    ``_tokset`` column and records them as a ``session.run_record`` of
+    ``kind``, so a test can pin the decision on both corpus shapes (rich
+    vocab → prefix filter, near-universal vocab → exhaustive).
+
+    Vocabulary richness is a ratio, so a ~1k-doc sample decides it as
+    reliably as a full scan at any corpus size.  The 1024 docs are the
+    smallest by xxhash64(id) (TakeOrdered: per-partition top-k, no full
+    shuffle) — a DETERMINISTIC pseudo-random sample, unlike a bare
+    limit(1024) whose rows follow partition arrival order and could flip
+    the path choice between runs.  ONE action sizes the sample and its
+    vocabulary together; ``explode_outer`` keeps empty-tokset docs in
+    ``countDistinct(_id)``."""
+    probe = (
+        base.select("_id", "_tokset")
+        .orderBy(F.xxhash64(F.col("_id").cast("string")), F.col("_id"))
+        .limit(1024)
+        .select("_id", F.explode_outer("_tokset").alias("_t"))
+        .agg(
+            F.countDistinct("_id").alias("d"),
+            F.countDistinct("_t").alias("v"),
+        )
+        .first()
+    )
+    n_docs, n_vocab = probe["d"], probe["v"]
+    prefix_filter = n_vocab * 4 >= n_docs
+    run_record(
+        base.sparkSession,
+        kind,
+        sampled_docs=n_docs,
+        sampled_vocab=n_vocab,
+        prefix_filter=prefix_filter,
+    )
+    return n_docs, n_vocab, prefix_filter
 
 
 def ngram_jaccard_pairs(
@@ -317,8 +348,10 @@ def ngram_jaccard_pairs(
     the MinHash verify stage.
 
     ``prefix_filter=None`` (default) decides from the data, the way a
-    cost-based planner would: one pair of count jobs on the cached base
-    measures vocabulary richness, and a corpus whose distinct-token count
+    cost-based planner would: one aggregate job over a deterministic
+    1024-doc sample of the cached base measures vocabulary richness
+    (recorded as a ``session.run_record`` of kind
+    ``"ngram_jaccard_pairs"``), and a corpus whose distinct-token count
     is a small fraction of its document count (vocab < docs/4) takes the
     exhaustive path — with a near-universal vocabulary every token is in
     most documents, the rarity order cannot discriminate, and the prefix
@@ -341,41 +374,7 @@ def ngram_jaccard_pairs(
         ),
     )
     if prefix_filter is None:
-        # bounded probe: vocabulary richness is a ratio, so a ~1k-doc
-        # sample decides it as reliably as a full scan at any corpus size.
-        # The 1024 docs are the smallest by xxhash64(id) (TakeOrdered:
-        # per-partition top-k, no full shuffle) — a DETERMINISTIC
-        # pseudo-random sample, unlike a bare limit(1024) whose rows
-        # follow partition arrival order and could flip the path choice
-        # between runs (round-6 verdict #6; both paths are exact, so the
-        # nondeterminism was cost-only — but a planner probe should be
-        # reproducible).  Cost: one pass over the cached base, which the
-        # chosen path materializes immediately after anyway.
-        # ONE action sizes the sample and its vocabulary together (r15,
-        # §1 job-count hygiene — the cache + two counts paid two
-        # driver-coordinated jobs per invocation); explode_outer keeps
-        # empty-tokset docs in the countDistinct(_id) = old sample.count()
-        probe = (
-            base.select("_id", "_tokset")
-            .orderBy(F.xxhash64(F.col("_id").cast("string")), F.col("_id"))
-            .limit(1024)
-            .select("_id", F.explode_outer("_tokset").alias("_t"))
-            .agg(
-                F.countDistinct("_id").alias("d"),
-                F.countDistinct("_t").alias("v"),
-            )
-            .first()
-        )
-        n_docs, n_vocab = probe["d"], probe["v"]
-        prefix_filter = n_vocab * 4 >= n_docs
-        LAST_JACCARD_PLAN.clear()
-        LAST_JACCARD_PLAN.update(
-            {
-                "sampled_docs": n_docs,
-                "sampled_vocab": n_vocab,
-                "prefix_filter": prefix_filter,
-            }
-        )
+        prefix_filter = _probe_vocab(base, "ngram_jaccard_pairs")[2]
     if prefix_filter:
         ex = base.select("_id", *bucket_cols, F.explode("_tokset").alias("_t"))
         tok_df = ex.groupBy("_t").agg(F.count(F.lit(1)).alias("_df"))
@@ -497,9 +496,6 @@ def ngram_jaccard_pairs(
     )
 
 
-LAST_CONTAINMENT_PLAN: dict = {}
-
-
 def shingle_containment_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -540,7 +536,8 @@ def shingle_containment_pairs(
     (sequences multiply), so real corpora take the prefix path;
     ``False`` falls back to the salted-triangle exhaustive enumeration
     within ``bucket_cols`` (exact, skew-bounded, same cell scheme).
-    Decision recorded in ``LAST_CONTAINMENT_PLAN``."""
+    The probe's decision is recorded as a ``session.run_record`` of kind
+    ``"shingle_containment_pairs"``."""
     from tts_data_pipeline_spark.cachereg import cache_replacing
     from tts_data_pipeline_spark.sources.readers import spread
 
@@ -557,33 +554,7 @@ def shingle_containment_pairs(
         ),
     )
     if prefix_filter is None:
-        # ONE action sizes the sample and its shingle vocabulary together
-        # (r15, §1 job-count hygiene: the cache + two counts paid two
-        # driver-coordinated jobs per invocation, ~0.4-0.5 s of the
-        # entry's warm wall; countDistinct(_id) over the exploded sample
-        # equals the old sample.count() because ``base`` keeps only
-        # non-empty token sets)
-        probe = (
-            base.select("_id", "_tokset")
-            .orderBy(F.xxhash64(F.col("_id").cast("string")), F.col("_id"))
-            .limit(1024)
-            .select("_id", F.explode_outer("_tokset").alias("_t"))
-            .agg(
-                F.countDistinct("_id").alias("d"),
-                F.countDistinct("_t").alias("v"),
-            )
-            .first()
-        )
-        n_docs, n_vocab = probe["d"], probe["v"]
-        prefix_filter = n_vocab * 4 >= n_docs
-        LAST_CONTAINMENT_PLAN.clear()
-        LAST_CONTAINMENT_PLAN.update(
-            {
-                "sampled_docs": n_docs,
-                "sampled_vocab": n_vocab,
-                "prefix_filter": prefix_filter,
-            }
-        )
+        prefix_filter = _probe_vocab(base, "shingle_containment_pairs")[2]
     ex = base.select("_id", *bucket_cols, F.explode("_tokset").alias("_t"))
     if prefix_filter:
         tok_df = ex.groupBy("_t").agg(F.count(F.lit(1)).alias("_df"))

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from tts_data_pipeline_spark.conf import TOKENIZER_LOCAL_LEARN_VOCAB, dial
 from tts_data_pipeline_spark.plans.registry import query
+from tts_data_pipeline_spark.scratch import RoundStore
 from tts_data_pipeline_spark.session import memo_columns, scoped_conf
 from tts_data_pipeline_spark.sources import table
 from tts_data_pipeline_spark.sources.readers import spread
@@ -1285,15 +1286,13 @@ def learn_bpe_merges(
     corpus-sized — the word-frequency rollup is the only corpus-wide
     shuffle, done ONCE at the initial state persist; the old form redid it
     every round inside ``first()``), and lineage is truncated every
-    ``persist_every`` rounds via the same parquet round-trip
-    ``operators/components.py`` uses, with the same explicit file
-    lifecycle (the previous state's files are deleted once the next is
-    written, everything is gone when the loop ends — the returned frame is
-    a local merge table, so nothing lazy outlives the tempdir).  Without
-    truncation, round k recomputed all k-1 prior merges from the raw word
-    table and the plan deepened linearly — O(R²) work and driver
-    plan-compilation blowup at real merge counts (a production tokenizer
-    is R≈30k).  The interval is the standard iterative-job checkpoint
+    ``persist_every`` rounds through the ``scratch.RoundStore``
+    ``operators/components.py`` uses, closed when the loop ends (the
+    returned frame is a local merge table, so nothing lazy outlives the
+    state).  Without truncation, round k recomputed all k-1 prior merges
+    from the raw word table and the plan deepened linearly — O(R²) work
+    and driver plan-compilation blowup at real merge counts (a production
+    tokenizer is R≈30k).  The interval is the standard iterative-job checkpoint
     cadence (GraphX's ``checkpointInterval`` is the same knob): plan depth
     is bounded by ``persist_every`` regardless of R, total work is O(R)
     (each round's argmax recomputes at most ``persist_every - 1`` pending
@@ -1305,10 +1304,6 @@ def learn_bpe_merges(
     the state the NEXT round will read, so plan-depth bounds can be
     asserted from outside.
     """
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     d = spread(table(spark, sf_dir, "documents")).select("doc_id", "text")
     words = (
         d.select(F.explode(F.split("text", " ")).alias("word"))
@@ -1342,17 +1337,13 @@ def learn_bpe_merges(
         "freq",
         F.concat(F.lit(" "), F.array_join(chars, " "), F.lit(" ")).alias("s"),
     )
-    workdir = _tempfile.mkdtemp(prefix="bpe_state_")
+    store = RoundStore("bpe_state_")
     merges = []
     try:
-        _STATE = "word string, freq bigint, s string"
-        state_path = _os.path.join(workdir, "state_0")
-        cur.write.mode("overwrite").parquet(state_path)
+        cur = store.persist(cur)
         # probe persist released now the initial state is materialized
         # (no-op when the probe never ran / never persisted)
         words.unpersist()
-        # pinned schema: skips the per-read footer inference job
-        cur = spark.read.schema(_STATE).parquet(state_path)
         if on_round is not None:
             on_round(0, cur)
         for k in range(1, rounds + 1):
@@ -1395,15 +1386,11 @@ def learn_bpe_merges(
                     ),
                 )
                 if k % persist_every == 0:
-                    next_path = _os.path.join(workdir, f"state_{k}")
-                    cur.write.mode("overwrite").parquet(next_path)
-                    cur = spark.read.schema(_STATE).parquet(next_path)
-                    _shutil.rmtree(state_path, ignore_errors=True)
-                    state_path = next_path
+                    cur = store.persist(cur)
                 if on_round is not None:
                     on_round(k, cur)
     finally:
-        _shutil.rmtree(workdir, ignore_errors=True)
+        store.close()
     return spark.createDataFrame(
         merges, "rank bigint, pair string, merged string, cnt bigint"
     ).orderBy("rank")
@@ -1497,12 +1484,6 @@ def bpe_encode_corpus(
     (vocabulary-sized, never the corpus), so chunking costs
     R/chunk_size tiny write/read round-trips and keeps every chunk's
     expression inside whole-stage codegen."""
-    import atexit
-    import os as _os
-    import shutil as _shutil
-
-    from tts_data_pipeline_spark.scratch import scratch_mkdtemp
-
     d = spread(table(spark, sf_dir, "documents")).select("doc_id", "text")
     toks = d.select(
         "doc_id", F.explode(F.split("text", " ")).alias("w")
@@ -1572,24 +1553,17 @@ def bpe_encode_corpus(
             .select("w", _bpe_apply_merges(seg0, mrows).alias("seg"))
         )
     else:
-        workdir = scratch_mkdtemp("bpe_enc_state_")
-        atexit.register(_shutil.rmtree, workdir, ignore_errors=True)
+        store = RoundStore("bpe_enc_state_")
         enc = toks.select("w").distinct().select("w", seg0.alias("seg"))
         for ci in range(0, len(mrows), chunk_size):
-            enc = enc.select(
-                "w",
-                _bpe_apply_merges(
-                    F.col("seg"), mrows[ci: ci + chunk_size]
-                ).alias("seg"),
-            )
-            path = _os.path.join(workdir, f"seg_{ci}")
-            enc.write.mode("overwrite").parquet(path)
-            enc = spark.read.parquet(path)
-            if ci >= chunk_size:
-                _shutil.rmtree(
-                    _os.path.join(workdir, f"seg_{ci - chunk_size}"),
-                    ignore_errors=True,
+            enc = store.persist(
+                enc.select(
+                    "w",
+                    _bpe_apply_merges(
+                        F.col("seg"), mrows[ci: ci + chunk_size]
+                    ).alias("seg"),
                 )
+            )
     pieces = enc.select(
         "w", F.size(F.split(F.trim("seg"), " ")).cast("long").alias("pieces")
     )
@@ -1872,10 +1846,6 @@ def learn_wordpiece_merges(
     map-side-combinable), and one scalar row reaches the driver per round
     (model selection, not data).  The symbol-count join is
     vocabulary-sized × ~alphabet-sized — broadcast."""
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     d = spread(table(spark, sf_dir, "documents")).select("doc_id", "text")
     words = (
         d.select(F.explode(F.split("text", " ")).alias("word"))
@@ -1910,15 +1880,12 @@ def learn_wordpiece_merges(
         "freq",
         F.concat(F.lit(" "), F.array_join(chars, " "), F.lit(" ")).alias("s"),
     )
-    workdir = _tempfile.mkdtemp(prefix="wp_state_")
+    store = RoundStore("wp_state_")
     merges = []
     try:
-        _STATE = "word string, freq bigint, s string"
-        state_path = _os.path.join(workdir, "state_0")
-        cur.write.mode("overwrite").parquet(state_path)
+        cur = store.persist(cur)
         # probe persist released now the initial state is materialized
         words.unpersist()
-        cur = spark.read.schema(_STATE).parquet(state_path)
         for k in range(1, rounds + 1):
             toks = F.split(F.trim("s"), " ")
             tokd = cur.select("freq", toks.alias("toks"))
@@ -2010,13 +1977,9 @@ def learn_wordpiece_merges(
                     ),
                 )
                 if k % persist_every == 0:
-                    next_path = _os.path.join(workdir, f"state_{k}")
-                    cur.write.mode("overwrite").parquet(next_path)
-                    cur = spark.read.schema(_STATE).parquet(next_path)
-                    _shutil.rmtree(state_path, ignore_errors=True)
-                    state_path = next_path
+                    cur = store.persist(cur)
     finally:
-        _shutil.rmtree(workdir, ignore_errors=True)
+        store.close()
     return (
         spark.createDataFrame(
             merges,

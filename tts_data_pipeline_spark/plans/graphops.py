@@ -1,20 +1,21 @@
 """Graph analytics over the relational tables — fixed-iteration PageRank.
 
 The dedup family already exercises iterative graph dataflow at scale
-(``operators/components.py``: pointer-jumping connected components with
-disk checkpoints).  PageRank adds the weighted-propagation shape: a
-damped random walk over the nation-level trade graph (customer nation →
-supplier nation, edge weight = lineitem count), run for a FIXED number of
-iterations so the whole computation — edge build, transition normalize,
-three propagation rounds — is replayable as chained SQL CTEs in DuckDB
-and therefore value-checked, not rows-only.
+(``operators/components.py``: star-round connected components with a
+``scratch.RoundStore`` persist per round).  PageRank adds the
+weighted-propagation shape: a damped random walk over the nation-level
+trade graph (customer nation → supplier nation, edge weight = lineitem
+count), run for a FIXED number of iterations so the whole computation —
+edge build, transition normalize, three propagation rounds — is
+replayable as chained SQL CTEs in DuckDB and therefore value-checked, not
+rows-only.
 
 Scale shape: the edge build is the standard fact-to-dims star join
 (broadcast customer/supplier onto lineitem⋈orders); after the first
 aggregation the graph is tiny (≤ nations²) and every propagation round is
 a broadcast join.  For billion-edge graphs the same loop holds with the
-rank table as a keyed shuffle join plus a checkpoint per round — exactly
-the components-operator discipline."""
+rank table as a keyed shuffle join plus a ``RoundStore`` persist per
+round — exactly the components-operator discipline."""
 
 from __future__ import annotations
 
@@ -22,23 +23,12 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from tts_data_pipeline_spark.plans.registry import query
-from tts_data_pipeline_spark.session import scoped_conf
+from tts_data_pipeline_spark.scratch import RoundStore
+from tts_data_pipeline_spark.session import run_record, run_stats, scoped_conf
 from tts_data_pipeline_spark.sources import table
 
 _DAMP = 0.85
 _ITERS = 3
-
-# Convergence telemetry for the last graph_label_propagation run — the
-# same module-global channel operators.components.LAST_RUN_STATS uses.
-# Populated lazily: the Observation objects are stashed when the plan is
-# BUILT; lpa_run_stats() reads them (blocking .get) AFTER the caller's
-# action has executed the plan.  BUILD-TIME-STASH HAZARD: because the
-# stash happens at plan-build time, building two LPA plans before
-# executing either overwrites the first plan's observations — the stats
-# then describe whichever plan was built LAST, and reading before any
-# execution blocks forever on Observation.get.  Build → execute → read,
-# one plan at a time (or pass observations to lpa_run_stats explicitly).
-LPA_LAST_RUN: dict = {"observations": [], "iters": 0}
 
 
 def _pagerank_oracle() -> str:
@@ -497,12 +487,10 @@ def lpa_propagate_converged(
     (round-8 verdict #3): a caller who needs a fixpoint no longer polls
     ``lpa_run_stats`` and re-runs manually.  Mirrors
     ``operators.components.connected_components``'s loop discipline:
-    labels persist to a per-call scratch parquet dir (lineage
-    truncation — without it the plan doubles per round), the
+    labels persist through a ``scratch.RoundStore`` (lineage
+    truncation — without it the plan doubles per round) and the
     ``(n, hash-sum)`` set signature rides the write action via
-    ``observe`` (no extra job per round), the previous batch's files are
-    deleted as soon as the next lands, and the final labels dir is
-    removed at interpreter exit.
+    ``observe`` (no extra job per round).
 
     Rounds are BATCHED ``rounds_per_job`` per persisted job (r14): each
     job composes B rounds lazily — the per-round CollectMetrics nodes
@@ -547,15 +535,7 @@ def lpa_propagate_converged(
     that is the batch-end state, one of the two alternating labellings),
     stats has ``rounds_run`` / ``converged`` / ``oscillating``.
     """
-    import atexit
-    import os
-    import shutil
-
-    from tts_data_pipeline_spark.scratch import scratch_mkdtemp
-
-    spark = edges.sparkSession
-    workdir = scratch_mkdtemp("lpa_state_")
-    atexit.register(shutil.rmtree, workdir, ignore_errors=True)
+    store = RoundStore("lpa_state_")
 
     def _observe(df: DataFrame, obs: Observation) -> DataFrame:
         return df.observe(
@@ -566,22 +546,15 @@ def lpa_propagate_converged(
             ).alias("h"),
         )
 
-    def _persist(df: DataFrame, name: str) -> DataFrame:
-        path = os.path.join(workdir, name)
-        df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
-
     obs0 = Observation("lpa_cv_sig_0")
-    labels = _persist(
+    labels = store.persist(
         _observe(
             edges.select(F.col("src").alias("node"))
             .distinct()
             .select("node", F.col("node").alias("label")),
             obs0,
-        ),
-        "labels_0",
+        )
     )
-    prev_name = "labels_0"
     # seed signature in the history: a graph whose round-1 labelling
     # equals the seed (all-singleton components) converges at round 1
     sigs: list[tuple] = [(obs0.get["n"], obs0.get["h"])]
@@ -599,10 +572,7 @@ def lpa_propagate_converged(
             batch_obs.append(obs)
         # ONE job executes all b composed rounds; every round's
         # CollectMetrics collects during it
-        name = f"labels_{executed + b}"
-        labels = _persist(frame, name)
-        shutil.rmtree(os.path.join(workdir, prev_name), ignore_errors=True)
-        prev_name = name
+        labels = store.persist(frame)
         for j, obs in enumerate(batch_obs, start=1):
             got = obs.get
             sig = (got["n"], got["h"])
@@ -654,25 +624,17 @@ def lpa_run_stats(observations: list[Observation] | None = None) -> dict:
     ``(n, hash-sum)`` label signatures, whether consecutive rounds reached
     the fixpoint, and the first fixpoint round.  Blocks on
     ``Observation.get``, so only call after an action has run the frame
-    :func:`lpa_propagate` returned (defaults to the last
-    ``graph_label_propagation`` run via ``LPA_LAST_RUN``).  A signature
+    :func:`lpa_propagate` returned (defaults to the observations of the
+    last ``graph_label_propagation`` plan built under the calling
+    thread's job group, from its ``session.run_record``; raises
+    ``LookupError`` when there is none).  A signature
     collision masking a real change needs the per-round hash SUMS mod
     2³¹ to tie across different label multisets — the same accepted odds
     as the components checkpoint loop."""
     if observations is None:
-        observations = LPA_LAST_RUN["observations"]
-    if not observations:
-        # explicit misuse signal: no LPA plan has been BUILT yet this
-        # session.  Without this guard the empty default silently
-        # returned rounds_run=-1/converged=False, indistinguishable from
-        # a real non-converged run.  (If a plan WAS built but never
-        # executed, Observation.get below still blocks — that hazard is
-        # inherent to the channel and noted at LPA_LAST_RUN.)
-        raise RuntimeError(
-            "lpa_run_stats: no LPA run recorded — build AND execute a "
-            "graph_label_propagation plan (or pass observations "
-            "explicitly) first"
-        )
+        observations = run_stats(
+            SparkSession.active(), "graph_label_propagation"
+        )["observations"]
     sigs = [(o.get["n"], o.get["h"]) for o in observations]
     first_fix = next(
         (i for i in range(1, len(sigs)) if sigs[i] == sigs[i - 1]), None
@@ -756,11 +718,16 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     labels, observations = lpa_propagate(edges, _ITERS)
-    # stash the per-round signature observations so a caller that has run
-    # an action can ask lpa_run_stats() whether the fixed 3 rounds
-    # converged — the signal the fixed-round variant otherwise lacks
-    LPA_LAST_RUN["observations"] = observations
-    LPA_LAST_RUN["iters"] = _ITERS
+    # record the per-round signature observations so a caller that has
+    # run an action can ask lpa_run_stats() whether the fixed 3 rounds
+    # converged — the signal the fixed-round variant otherwise lacks.  The
+    # record is made when the plan is BUILT: build → execute → read, one
+    # plan per job group at a time, since a second build replaces it and
+    # reading before any execution blocks on Observation.get
+    run_record(
+        spark, "graph_label_propagation", observations=observations,
+        iters=_ITERS,
+    )
     return labels.select("node", F.col("label").alias("community")).orderBy(
         "node"
     )
@@ -1007,10 +974,6 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KCORE_K = 4
 _KCORE_ORACLE_ROUNDS = 15
 
-# convergence telemetry for the margin test (the entry is eager, so the
-# value is final when the query function returns)
-KCORE_LAST_RUN: dict = {"rounds_run": 0}
-
 
 def _kcore_oracle(k: int, rounds: int) -> str:
     """Unrolled replay of the k-core peel: iterative removal is not
@@ -1081,29 +1044,16 @@ def graph_kcore_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     (map-side combinable) plus two node-keyed semi-joins — all keyed
     shuffles on node ids, state is the shrinking edge set itself,
     persisted per round."""
-    import atexit
-    import os
-    import shutil
-
-    from tts_data_pipeline_spark.cachereg import cache_replacing
-    from tts_data_pipeline_spark.scratch import scratch_mkdtemp
-
     width = _lpa_build_width(spark)
     with scoped_conf(spark, {"spark.sql.shuffle.partitions": width}):
-        workdir = scratch_mkdtemp("kcore_state_")
-        atexit.register(shutil.rmtree, workdir, ignore_errors=True)
+        store = RoundStore("kcore_state_")
 
-        def _persist(df: DataFrame, name: str, obs: Observation) -> DataFrame:
-            path = os.path.join(workdir, name)
-            df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
-                "overwrite"
-            ).parquet(path)
-            return spark.read.parquet(path)
+        def _persist(df: DataFrame, obs: Observation) -> DataFrame:
+            return store.persist(df.observe(obs, F.count(F.lit(1)).alias("n")))
 
         obs0 = Observation("kcore_n_0")
-        e = _persist(cooccur_pairs(spark, sf_dir), "e_0", obs0)
+        e = _persist(cooccur_pairs(spark, sf_dir), obs0)
         prev_n = obs0.get["n"]
-        prev_name = "e_0"
         for r in range(1, _KCORE_ORACLE_ROUNDS + 1):
             deg = (
                 e.select(F.col("u").alias("x"))
@@ -1118,13 +1068,11 @@ def graph_kcore_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .join(keep.withColumnRenamed("x", "v"), "v", "semi")
                 .select("u", "v")
             )
-            name = f"e_{r}"
-            e = _persist(nxt, name, obs)
-            shutil.rmtree(os.path.join(workdir, prev_name), ignore_errors=True)
-            prev_name = name
+            e = _persist(nxt, obs)
             n = obs.get["n"]
-            KCORE_LAST_RUN["rounds_run"] = r
             if n == prev_n:
+                # the entry is eager, so the round count is final here
+                run_record(spark, "graph_kcore_decompose", rounds_run=r)
                 break
             prev_n = n
         else:

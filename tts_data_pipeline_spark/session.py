@@ -157,3 +157,35 @@ def scoped_conf(spark: SparkSession, conf: dict) -> Iterator[None]:
                     spark.conf.unset(key)
                 else:
                     spark.conf.set(key, value)
+
+
+# (job group, kind) -> fields of the latest run_record of that kind made
+# under that job group
+_RUN_RECORDS: dict[tuple[str | None, str], dict] = {}
+_RUN_RECORDS_LOCK = threading.Lock()
+
+
+def _job_group(spark: SparkSession) -> str | None:
+    return spark.sparkContext.getLocalProperty("spark.jobGroup.id")
+
+
+def run_record(spark: SparkSession, kind: str, **fields) -> None:
+    """Record what a ``kind`` operator run did (round counts, the path a
+    probe chose), replacing the previous record of that kind.  Records are
+    kept per job group of the calling thread, so two runs under two job
+    groups, e.g. in two threads, each read back their own."""
+    with _RUN_RECORDS_LOCK:
+        _RUN_RECORDS[(_job_group(spark), kind)] = fields
+
+
+def run_stats(spark: SparkSession, kind: str) -> dict:
+    """The latest :func:`run_record` fields of ``kind`` under the calling
+    thread's job group; raises ``LookupError`` when there is none."""
+    key = (_job_group(spark), kind)
+    with _RUN_RECORDS_LOCK:
+        if key not in _RUN_RECORDS:
+            raise LookupError(
+                f"no {kind} run recorded under job group {key[0]!r}: run "
+                f"the operator first, in this job group"
+            )
+        return dict(_RUN_RECORDS[key])

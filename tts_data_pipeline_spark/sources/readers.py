@@ -25,13 +25,35 @@ from tts_data_pipeline_spark import schemas
 # ---------------------------------------------------------------------------
 
 
+def events_nanos(spark: SparkSession, sf_dir: str) -> bool:
+    """Whether the events file stores its ts as TIMESTAMP(NANOS), from the
+    parquet footer; if so, turn on the nanos-as-long legacy read, which
+    Spark's vectorized parquet reader needs to scan such a column at all.
+
+    The driver's generator has shipped both NANOS and MICROS files across
+    rounds.  Micros files read natively, so the session-wide conf is set
+    only for a nanos file, and only here."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    path = os.path.join(sf_dir, "events.parquet")
+    if os.path.isdir(path):
+        part = next(f for f in sorted(os.listdir(path)) if f.endswith(".parquet"))
+        path = os.path.join(path, part)
+    nanos = getattr(pq.read_schema(path).field("ts").type, "unit", "us") == "ns"
+    if nanos:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return nanos
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Parquet scan of one driver test table (TESTDATA.md).
 
-    The ``events`` table stores ``TIMESTAMP(NANOS)`` which Spark's vectorized
-    parquet reader rejects; we read nanos as long (runtime legacy conf) and
-    rebuild a proper TimestampType column.  The driver data carries whole
-    microseconds only, so ``ts div 1000`` is lossless.
+    An ``events`` file storing ``TIMESTAMP(NANOS)`` reads its ts as long
+    (:func:`events_nanos`), rebuilt here as a proper TimestampType column;
+    the driver data carries whole microseconds only, so ``ts div 1000`` is
+    lossless.
     """
     if name == "events":
         # Pin the session to UTC whenever timestamps enter a plan: the
@@ -41,12 +63,11 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         from tts_data_pipeline_spark.session import ensure_utc
 
         ensure_utc(spark)
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        nanos = events_nanos(spark, sf_dir)
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
+        if nanos:
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        elif ts_type == "timestamp_ntz":
+        elif dict(df.dtypes).get("ts") == "timestamp_ntz":
             # micros parquet reads as NTZ; with the session pinned UTC the
             # cast to session-TZ TIMESTAMP is identity, and downstream code
             # (cast to long, unix_micros, window arithmetic) expects LTZ

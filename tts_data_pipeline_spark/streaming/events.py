@@ -62,25 +62,6 @@ def drain_to_memory(df: DataFrame, mode: str, conf: dict | None = None) -> DataF
     return out
 
 
-def _events_ts_unit(sf_dir: str) -> str:
-    """Probe the events parquet footer for the physical ts unit ('ns'/'us').
-
-    The driver's generator has shipped both TIMESTAMP(NANOS) and
-    TIMESTAMP(MICROS) across rounds; a streaming source needs an imposed
-    schema, so the right one must be chosen from the footer (the batch
-    reader in ``sources/readers.py`` adapts the same way via dtypes)."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    path = os.path.join(sf_dir, "events.parquet")
-    if os.path.isdir(path):
-        part = next(f for f in sorted(os.listdir(path)) if f.endswith(".parquet"))
-        path = os.path.join(path, part)
-    ts_type = pq.read_schema(path).field("ts").type
-    return getattr(ts_type, "unit", "us")
-
-
 def _state_partitions(spark: SparkSession) -> int:
     """Shuffle-partition count for the stateful replay streams.
 
@@ -132,9 +113,9 @@ def read_events_stream(
     """
     from pyspark.sql import types as T
 
-    nanos = _events_ts_unit(sf_dir) == "ns"
-    if nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    from tts_data_pipeline_spark.sources.readers import events_nanos
+
+    nanos = events_nanos(spark, sf_dir)
     raw_schema = T.StructType(
         [
             T.StructField("event_id", T.LongType()),
