@@ -377,9 +377,10 @@ def test_pre_contract_round_count_robust_to_adverse_partitioning(spark):
     component lands in a single partition — a widely-partitioned pair set
     (e.g. a cached frame whose output partitioning AQE can no longer
     coalesce) left duplicate families split and the star loop ran 6
-    rounds instead of 2 at sf0.1.  The ITERATED contraction (coalesce to
-    cores, contract, repartition by node, contract) must keep the round
-    count low for ANY input partitioning, with identical components."""
+    rounds instead of 2 at sf0.1.  Pre-contraction (coalesce to cores,
+    contract; when that forest is over the local-finish dial, repartition
+    by member and contract again) must keep the round count low for ANY
+    input partitioning, with identical components."""
     from tts_data_pipeline_spark.session import run_stats
 
     # clique-heavy graph: 30 families of 12 copies each -> 66 edges/family
@@ -477,7 +478,8 @@ def test_local_finish_identical_to_star_loop_and_stats(spark):
         for r in connected_components(df, pre_contract=True).collect()
     }
     assert got == base
-    assert run_stats(spark, "connected_components") == {
+    stats = run_stats(spark, "connected_components")
+    assert {k: stats[k] for k in ("rounds", "converged", "local_finish")} == {
         "rounds": 0,
         "converged": True,
         "local_finish": True,
@@ -544,3 +546,45 @@ def test_run_record_is_per_job_group_across_threads(spark):
     assert not any(t.is_alive() for t in threads)
     assert not errors, errors
     assert got == expected
+
+
+def test_pre_contract_records_contractions_and_gating_edge_count(spark):
+    """A forest within the local-finish dial takes the union-find finish
+    after ONE contraction; with the dial at 1 (its least value) the first
+    forest is over it, so the second contraction runs and the star loop
+    finishes.  The record names the path, the contraction count and the
+    edge count that gated it, and components are identical either way."""
+    from tts_data_pipeline_spark.conf import CC_LOCAL_FINISH_ROWS
+    from tts_data_pipeline_spark.session import run_stats, scoped_conf
+
+    # 10 families of 6 copies, scattered over 8 partitions
+    fams = [
+        (f * 10 + a, f * 10 + b)
+        for f in range(10)
+        for a in range(6)
+        for b in range(a + 1, 6)
+    ]
+    df = spark.createDataFrame(fams, ["id_a", "id_b"]).repartition(8)
+    expected = {f * 10 + a: f * 10 for f in range(10) for a in range(6)}
+
+    local = {
+        r.id: r.component
+        for r in connected_components(df, pre_contract=True).collect()
+    }
+    stats = run_stats(spark, "connected_components")
+    assert local == expected
+    assert stats["local_finish"] is True and stats["rounds"] == 0
+    assert stats["contractions"] == 1
+    # a forest hangs each family's 5 members on a root: 50 edges at least
+    assert 50 <= stats["n_edges"] < len(fams)
+
+    with scoped_conf(spark, {CC_LOCAL_FINISH_ROWS[0]: "1"}):
+        star = {
+            r.id: r.component
+            for r in connected_components(df, pre_contract=True).collect()
+        }
+    stats = run_stats(spark, "connected_components")
+    assert star == expected
+    assert "local_finish" not in stats
+    assert stats["contractions"] == 2 and stats["converged"] is True
+    assert stats["rounds"] >= 1 and stats["n_edges"] >= 50

@@ -674,8 +674,8 @@ def test_grid_blocked_pairs_match_naive_all_pairs(spark, grid_s, skew_labels):
     vecs = base[np.arange(n) % 12] + rng.normal(scale=0.35, size=(n, 16))
     # skewed case: one label carries ~67% of rows, so the adaptive grid
     # assigns it a LARGER per-label S — the pair set must stay identical
-    lab = (lambda i: f"L{i % 3}") if not skew_labels else (
-        lambda i: f"L{i % 3}" if i % 3 else "L0" if i % 2 else "L1"
+    lab = (lambda i: i % 3) if not skew_labels else (
+        lambda i: i % 3 if i % 3 else 0 if i % 2 else 1
     )
     rows = [(int(i), lab(i), [float(x) for x in vecs[i]]) for i in range(n)]
     import pyarrow as pa
@@ -690,7 +690,7 @@ def test_grid_blocked_pairs_match_naive_all_pairs(spark, grid_s, skew_labels):
                 "embedding": pa.array(
                     [r[2] for r in rows], type=pa.list_(pa.float32())
                 ),
-                "label": [r[1] for r in rows],
+                "label": pa.array([r[1] for r in rows], pa.int32()),
             }
         ),
         os.path.join(d, "embeddings.parquet"),
@@ -756,7 +756,7 @@ def test_semantic_apply_survivors_drops_planted_copies(spark, tmp_path):
     k = 100
     pert = v[:k] + rng.normal(0.0, 0.01 * v.std(), (k, v.shape[1]))
     planted_ids = ids.max() + 1 + np.arange(k)
-    labels = np.array(t.column("label").to_pylist())
+    labels = np.array(t.column("label").to_pylist(), dtype=np.int32)
     pq.write_table(
         pa.table(
             {

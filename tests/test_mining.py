@@ -64,7 +64,7 @@ def test_skyline_matches_naive_dominance_with_ties(spark):
             p_name="x",
             p_type="y",
         )[["p_partkey", "p_name", "p_brand", "p_type", "p_size", "p_retailprice"]]
-        part.to_parquet(f"{td}/part.parquet")
+        part.astype({"p_size": "int32"}).to_parquet(f"{td}/part.parquet")
         got = agg_skyline_pareto(spark, td).toPandas()
 
     want = _naive_skyline(pdf)
@@ -199,7 +199,7 @@ def test_skyline_ranged_equivalence_under_scattered_partitioning(spark):
 
     key = lambda df: set(zip(df["p_brand"], df["p_partkey"]))
     with tempfile.TemporaryDirectory() as td:
-        part.to_parquet(f"{td}/part.parquet")
+        part.astype({"p_size": "int32"}).to_parquet(f"{td}/part.parquet")
         want = key(agg_skyline_pareto(spark, td).toPandas())
         assert want == _naive_skyline(pdf)
         prev = spark.conf.get("spark.sql.shuffle.partitions")
@@ -244,7 +244,7 @@ def test_skyline_property_matches_naive(spark, rows):
     want = _naive_skyline(pdf)
     key = lambda df: set(zip(df["p_brand"], df["p_partkey"]))
     with tempfile.TemporaryDirectory() as td:
-        part.to_parquet(f"{td}/part.parquet")
+        part.astype({"p_size": "int32"}).to_parquet(f"{td}/part.parquet")
         assert key(agg_skyline_pareto(spark, td).toPandas()) == want
         assert key(agg_skyline_pareto_ranged(spark, td).toPandas()) == want
 

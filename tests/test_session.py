@@ -1,15 +1,19 @@
-"""``session.memo_columns``: one Column memo per live SparkContext; and
-the iteration state the learners and the round store keep on scratch."""
+"""``session.memo_columns``: one Column memo per live SparkContext; the
+iteration state the learners and the round store keep on scratch; and the
+worker daemon ``session.get_spark`` names."""
 
 from __future__ import annotations
 
 import gc
 import os
+import subprocess
 import sys
 import tempfile
 import threading
 import time
+import textwrap
 import weakref
+import zipfile
 
 from pyspark import SparkContext
 
@@ -145,3 +149,56 @@ def test_tokenizer_learners_keep_state_under_scratch_dir(
         (state,) = [p for p in made if os.path.basename(p).startswith(prefix)]
         assert os.path.dirname(state) == str(tmp_path), state
         assert not os.path.exists(state)
+
+
+def test_python_workers_run_under_the_worker_daemon(spark):
+    """Python tasks of a ``get_spark`` session fork from
+    ``tts_data_pipeline_spark.worker_daemon``, so they carry its
+    ``zipimporter.invalidate_caches``."""
+
+    def patched_by(_):
+        import zipimport
+
+        return zipimport.zipimporter.invalidate_caches.__module__
+
+    got = spark.sparkContext.parallelize([0], 1).map(patched_by).collect()
+    assert got == ["tts_data_pipeline_spark.worker_daemon"]
+
+
+def test_worker_daemon_keeps_spark_archives_and_refreshes_others(tmp_path):
+    """After ``importlib.invalidate_caches()`` under the daemon's patch, an
+    archive under ``$SPARK_HOME/python/lib`` keeps its directory object,
+    while any other archive is re-read: a module added to it imports."""
+    spark_zip = tmp_path / "spark" / "python" / "lib" / "x.zip"
+    spark_zip.parent.mkdir(parents=True)
+    other_zip = tmp_path / "other" / "y.zip"
+    other_zip.parent.mkdir()
+    with zipfile.ZipFile(spark_zip, "w") as z:
+        z.writestr("in_spark_zip.py", "")
+    with zipfile.ZipFile(other_zip, "w") as z:
+        z.writestr("first_module.py", "")
+    child = textwrap.dedent(
+        f"""
+        import importlib, sys, zipfile
+        from tts_data_pipeline_spark import worker_daemon
+        sys.path[:0] = [{str(spark_zip)!r}, {str(other_zip)!r}]
+        import in_spark_zip, first_module
+        worker_daemon.install()
+        spark_importer = sys.path_importer_cache[{str(spark_zip)!r}]
+        files = spark_importer._files
+        with zipfile.ZipFile({str(other_zip)!r}, "w") as z:
+            z.writestr("first_module.py", "")
+            z.writestr("added_module.py", "VALUE = 7")
+        importlib.invalidate_caches()
+        assert spark_importer._files is files
+        import added_module
+        assert added_module.VALUE == 7
+        """
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_HOME=str(tmp_path / "spark"), PYTHONPATH=repo)
+    proc = subprocess.run(
+        [sys.executable, "-c", child], env=env, capture_output=True, text=True,
+        timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr

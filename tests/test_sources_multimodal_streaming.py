@@ -833,6 +833,45 @@ def test_declared_test_table_schemas_match_files(spark):
         ], name
 
 
+def test_table_reads_fire_no_job(spark):
+    """``table()`` reads every driver table with its declared schema, so
+    building the scans runs no footer-inference job."""
+    from tts_data_pipeline_spark import schemas
+    from tts_data_pipeline_spark.sources import table
+
+    sc = spark.sparkContext
+    group = "test_table_reads_fire_no_job"
+    sc.setJobGroup(group, "declared table reads")
+    try:
+        for name in schemas.TEST_TABLES:
+            table(spark, SF_DIR, name)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
+def test_table_read_of_mistyped_file_raises(spark, tmp_path):
+    """A file whose column type differs from the declared one fails the
+    scan instead of returning converted or missing rows: ``region``
+    declares ``r_regionkey`` int and this file stores it as int64."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tts_data_pipeline_spark.sources import table
+
+    pq.write_table(
+        pa.table(
+            {
+                "r_regionkey": pa.array([0, 1, 2**40], pa.int64()),
+                "r_name": pa.array(["a", "b", "c"]),
+            }
+        ),
+        tmp_path / "region.parquet",
+    )
+    with pytest.raises(Exception, match="r_regionkey"):
+        table(spark, str(tmp_path), "region").collect()
+
+
 def test_events_read_leaves_nanos_as_long_at_default_for_micros_file(spark):
     """The nanos-as-long legacy read is turned on only for an events file
     that stores nanos; the shipped files store micros."""

@@ -19,11 +19,14 @@ signal is any slope meaningfully ABOVE 1.
 Queries in ``SF3_QUERIES`` get one more decade: an sf3 point
 (documents/events/embeddings tiles only).
 
-Queries driving ``connected_components`` also report the star-round count
-per scale (from its run record under the job group each query and scale
-runs in): their wall time is rounds x per-round cost and rounds grow
+Queries driving ``connected_components`` also report, per scale, its
+run record under the job group each query and scale runs in: the
+star-round count, and for pre-contracted runs the forest edge count that
+gated the local finish (``n_edges``) and the contraction passes run
+(``contractions``).  Wall time is rounds x per-round cost and rounds grow
 ~log² n, so a slope without the round count can overstate per-round
-scaling.
+scaling; a local-finish run has 0 rounds, and its ``n_edges`` says how
+close it came to the star loop.
 
 Usage: python tools/scaling_curve.py [--runs 2] [query ...]
 """
@@ -219,7 +222,7 @@ def main() -> None:
             if name in SF10E_QUERIES and os.path.isdir(SF10E[1]):
                 scales = scales + [SF10E]
         times: dict[float, float] = {}
-        cc_rounds: dict[float, int] = {}
+        cc: dict[float, dict] = {}
         for sf, d in scales:
             best = math.inf
             spark.sparkContext.setJobGroup(f"{name}@sf{sf}", name)
@@ -229,27 +232,35 @@ def main() -> None:
                 best = min(best, time.time() - t0)
             times[sf] = round(best, 3)
             try:
-                rounds = run_stats(spark, "connected_components")["rounds"]
+                stats = run_stats(spark, "connected_components")
             except LookupError:  # the query runs no connected_components
-                rounds = 0
-            if rounds:
-                cc_rounds[sf] = rounds
+                continue
+            cc[sf] = {
+                k: stats[k]
+                for k in ("rounds", "n_edges", "contractions")
+                if k in stats
+            }
         results[name] = {"times": times, "slope": round(_fit_slope(times), 2)}
-        if cc_rounds:
-            results[name]["cc_rounds"] = cc_rounds
+        if cc:
+            results[name]["cc"] = cc
         print(json.dumps({"query": name, **results[name]}), flush=True)
     print(
         "\n| query | sf0.1 s | sf0.3 s | sf1 s | sf3 s | sf10 s "
-        "| slope | cc rounds |"
+        "| slope | cc rounds / n_edges / contractions |"
     )
     print("|---|---|---|---|---|---|---|---|")
     for name, r in sorted(results.items(), key=lambda kv: -kv[1]["slope"]):
         t = r["times"]
-        rounds = r.get("cc_rounds")
+        cc = "; ".join(
+            f"sf{sf}: " + " / ".join(
+                str(st.get(k, "—")) for k in ("rounds", "n_edges", "contractions")
+            )
+            for sf, st in r.get("cc", {}).items()
+        )
         print(
             f"| `{name}` | {t[0.1]} | {t[0.3]} | {t[1.0]} "
             f"| {t.get(3.0, '—')} | {t.get(10.0, '—')} | {r['slope']} "
-            f"| {rounds if rounds else '—'} |"
+            f"| {cc or '—'} |"
         )
 
 

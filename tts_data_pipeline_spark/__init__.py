@@ -9,7 +9,8 @@ Design stance (SURVEY.md §7):
 
 - Pure DataFrame/SQL builders — declare the logical plan, let Catalyst +
   Tungsten pick the physical strategy. No RDDs, no custom Catalyst rules.
-- Explicit ``StructType`` schemas over Parquet (``schemas.py``).
+- Explicit ``StructType`` schemas over Parquet (``schemas.py``): every driver
+  table is read with its declared schema, never inferred from the footer.
 - Heavy non-relational work (NLP, audio) in Arrow-batched ``pandas_udf`` /
   ``applyInPandas`` / ``mapInPandas`` only where built-ins can't express the
   semantics.

@@ -111,9 +111,12 @@ def connected_components(
     ``require_converged=True`` so a capped run raises instead of silently
     returning extra survivors.  Each call writes a
     ``session.run_record`` of kind ``"connected_components"``: the round
-    count and convergence flag (plus ``local_finish`` on that path), so
-    the scaling harness can report rounds-vs-n (wall time is rounds x
-    per-round cost, and rounds grow ~log² n).
+    count and convergence flag, so the scaling harness can report
+    rounds-vs-n (wall time is rounds x per-round cost, and rounds grow
+    ~log² n).  A ``pre_contract`` run also records what chose its path:
+    ``n_edges``, the forest edge count checked against the local-finish
+    dial, ``contractions`` (1, or 2 when the first forest was over the
+    dial) and ``local_finish`` when it took that path.
 
     Iteration state: each round's edge set goes through a
     ``scratch.RoundStore`` (parquet write + schema-pinned read-back, the
@@ -123,32 +126,19 @@ def connected_components(
     caller's (possibly deep) pair-generation plan.
     """
     spark = pairs.sparkSession
+    width = spark.sparkContext.defaultParallelism
     if pre_contract:
         # collapse per-partition clique mass to forest edges before the
-        # iterative loop (see contract_pairs_locally) — components are
-        # provably identical, the loop's input drops from O(m) to O(n).
-        # ITERATED (r14): one pass's quality depends on how much of a
-        # component lands in one partition — a cached/widely-partitioned
-        # pair set (AQE cannot re-coalesce an InMemoryRelation's output)
-        # left families split across 32 partitions and the star loop ran
-        # 6 rounds instead of 2.  A second contraction over the forest
-        # repartitioned BY NODE re-merges stars that share a member
-        # (forest mass is ≤ O(n), so the extra shuffle is cheap at any
-        # scale) — this is the standard iterate-the-filtering step of
-        # Lattanzi et al., and it makes round count robust to input
-        # partitioning instead of reliant on small-scale AQE luck.
+        # iterative loop (see contract_pairs_locally): components are
+        # provably identical and the loop's input drops from O(m) to O(n).
         # width = cores, NOT the input's partition count: each partition
         # is one Arrow-batched Python invocation, and a cached pair frame
-        # under a plain session arrives at 200 shuffle partitions — 200
-        # tiny Python tasks AND a family split 200 ways (weak
+        # under a plain session arrives at 200 shuffle partitions (200
+        # tiny Python tasks AND a family split 200 ways: weak
         # contraction).  coalesce is NARROW (no shuffle of the full pair
         # mass, which is the whole point of contracting before the loop)
         # and merging partitions only IMPROVES contraction quality.
-        width = spark.sparkContext.defaultParallelism
         pairs = contract_pairs_locally(pairs.coalesce(width), src, dst)
-        pairs = contract_pairs_locally(
-            pairs.repartition(width, F.col(src)), src, dst
-        )
 
     # Alternating large-star / small-star (Kiveris et al., "Connected
     # Components in MapReduce and Beyond", SoCC'14).  Unlike min-label
@@ -193,19 +183,40 @@ def connected_components(
         center = m.select(F.col("u"), F.col("m").alias("v"))
         return rehung.union(center)
 
-    edges0 = _norm(
+    store = RoundStore("cc_state_")
+
+    def _persist_counted(e: DataFrame) -> tuple[DataFrame, int]:
+        # the edge count rides the persist action (no extra job); it gates
+        # the local-finish branch below
+        obs = Observation()
+        out = store.persist(_norm(e).observe(obs, F.count(F.lit(1)).alias("n")))
+        return out, obs.get["n"]
+
+    edges, n_edges = _persist_counted(
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v")).filter(
             F.col(src) != F.col(dst)
         )
     )
-    # edge count rides the persist action (no extra job) — it gates the
-    # local-finish branch below
-    store = RoundStore("cc_state_")
-    obs_e0 = Observation("cc_n_edges_0")
-    edges = store.persist(edges0.observe(obs_e0, F.count(F.lit(1)).alias("n")))
-    n_edges0 = obs_e0.get["n"]
+    local_rows = dial(spark, CC_LOCAL_FINISH_ROWS)
+    contractions = 1
+    if pre_contract and n_edges > local_rows:
+        # One pass's quality depends on how much of a component lands in
+        # one partition: a widely-partitioned pair set leaves families
+        # split into several stars, and the star loop then runs more
+        # rounds.  A second contraction over the persisted forest,
+        # repartitioned by the member endpoint (v: a forest edge always
+        # hangs a member on its smaller root), re-merges stars that share
+        # a member; forest mass is O(n), so the shuffle is cheap.  This
+        # is the iterate-the-filtering step of Lattanzi et al., taken
+        # only when the first forest is too big for the local finish.
+        edges, n_edges = _persist_counted(
+            contract_pairs_locally(
+                edges.repartition(width, F.col("v")), "u", "v"
+            )
+        )
+        contractions = 2
 
-    if pre_contract and n_edges0 <= dial(spark, CC_LOCAL_FINISH_ROWS):
+    if pre_contract and n_edges <= local_rows:
         # Local-finish tail of the filtering algorithm (Lattanzi et al.,
         # SPAA'11): pre-contraction already shrank the input to ≤ O(n)
         # forest edges; when that forest fits one task (dial above, 1M
@@ -250,7 +261,7 @@ def connected_components(
 
         run_record(
             spark, "connected_components", rounds=0, converged=True,
-            local_finish=True,
+            local_finish=True, n_edges=n_edges, contractions=contractions,
         )
         return edges.coalesce(1).mapInPandas(
             _uf_finish, schema=f"id {t}, component {t}"
@@ -287,8 +298,10 @@ def connected_components(
             converged = True
             break
         prev_sig = sig
+    path = {"n_edges": n_edges, "contractions": contractions} if pre_contract else {}
     run_record(
-        spark, "connected_components", rounds=rounds_run, converged=converged
+        spark, "connected_components", rounds=rounds_run, converged=converged,
+        **path,
     )
     if require_converged and not converged:
         raise RuntimeError(

@@ -16,6 +16,7 @@ from tts_data_pipeline_spark.cachereg import opt_in_sorted, sort_via_cache
 from tts_data_pipeline_spark.operators import dedup as D
 from tts_data_pipeline_spark.operators import similarity as S
 from tts_data_pipeline_spark.plans.registry import query
+from tts_data_pipeline_spark.session import memo_columns
 from tts_data_pipeline_spark.sources import table
 
 
@@ -215,6 +216,42 @@ _MH_SEEDS = 8
 _MH_BANDS = 4  # 2 rows per band
 
 
+@memo_columns
+def _minhash_lsh_cols() -> tuple:
+    """Memoized Columns of ``dedup_minhash_lsh``: the word split ``w``,
+    the 3-word shingle set ``toks``, the 8 seeded signature Columns
+    ``mh0..mh7`` and the band-explode ``band``.  The seeded lambdas and
+    the shingle tree cost ~0.5 s of Py4J calls per plan build while the
+    unresolved trees are immutable templates: build once per live
+    SparkContext (``session.memo_columns``)."""
+
+    def seeded(j: int):
+        # closure, not a default-arg lambda — the 2-param form receives
+        # (element, index) and the f-string rendered the index COLUMN's
+        # auto-generated repr as the seed prefix (see minhash_signature)
+        return lambda t: _md5_long(F.concat(F.lit(f"{j}:"), t))
+
+    words = F.split(F.lower(F.trim("text")), " ").alias("w")
+    toks = F.array_distinct(D.word_shingles(F.col("w"), 3)).alias("toks")
+    sigs = tuple(
+        F.array_min(F.transform("toks", seeded(j))).alias(f"mh{j}")
+        for j in range(_MH_SEEDS)
+    )
+    band = F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(b).alias("b"),
+                    F.col(f"mh{2 * b}").alias("v1"),
+                    F.col(f"mh{2 * b + 1}").alias("v2"),
+                )
+                for b in range(_MH_BANDS)
+            ]
+        )
+    ).alias("band")
+    return words, toks, sigs, band
+
+
 # MinHash-LSH pair pipeline as composable CTE parts (no leading WITH) so
 # consumers — dedup_minhash_lsh itself and the leakage-safe split twin in
 # plans/coverage.py — replay the IDENTICAL signature/banding/verify chain
@@ -285,45 +322,18 @@ def dedup_minhash_lsh(
     materialized shingle attribute (Column trees aren't DAGs — inlining
     would recompute the shingling per seed), and only (id, band, v1, v2)
     rides the candidate shuffle."""
+    from tts_data_pipeline_spark.cachereg import cache_replacing
     from tts_data_pipeline_spark.sources.readers import spread
 
+    words, toks, sigs, band = _minhash_lsh_cols()
     d = spread(table(spark, sf_dir, "documents"))
-    words = F.split(F.lower(F.trim("text")), " ")
-    sh = d.select("doc_id", words.alias("w")).select(
-        "doc_id", F.array_distinct(D.word_shingles(F.col("w"), 3)).alias("toks")
+    sh = d.select("doc_id", words).select("doc_id", toks)
+    signed = cache_replacing(
+        "dedup_minhash_lsh", sh.select("doc_id", "toks", *sigs)
     )
-    def seeded(j: int):
-        # closure, not a default-arg lambda — the 2-param form receives
-        # (element, index) and the f-string rendered the index COLUMN's
-        # auto-generated repr as the seed prefix (see minhash_signature)
-        return lambda t: _md5_long(F.concat(F.lit(f"{j}:"), t))
-
-    signed = sh.select(
-        "doc_id",
-        "toks",
-        *[
-            F.array_min(F.transform("toks", seeded(j))).alias(f"mh{j}")
-            for j in range(_MH_SEEDS)
-        ],
+    bands = signed.select("doc_id", band).select(
+        "doc_id", "band.b", "band.v1", "band.v2"
     )
-    from tts_data_pipeline_spark.cachereg import cache_replacing
-
-    signed = cache_replacing("dedup_minhash_lsh", signed)
-    bands = signed.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("b"),
-                        F.col(f"mh{2 * b}").alias("v1"),
-                        F.col(f"mh{2 * b + 1}").alias("v2"),
-                    )
-                    for b in range(_MH_BANDS)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "band.b", "band.v1", "band.v2")
     a, c = bands.alias("a"), bands.alias("c")
     cand = (
         a.join(c, ["b", "v1", "v2"])

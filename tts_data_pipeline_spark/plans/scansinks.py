@@ -823,7 +823,7 @@ def k8_zorder_layout_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         li, out_dir, cols=("l_partkey", "l_suppkey"), bits=_Z_BITS,
         n_files=8,
     )
-    back = spark.read.parquet(out_dir)
+    back = spark.read.schema(li.schema).parquet(out_dir)
     stats = back.agg(
         F.min(F.col("l_partkey").cast("double")),
         F.max(F.col("l_partkey").cast("double")),

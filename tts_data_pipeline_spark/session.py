@@ -5,6 +5,12 @@ re-plan, skew-join splitting, partition coalescing), shuffle partitions
 sized to cores rather than the 200 default, Arrow enabled for the Pandas-UDF
 slow path, and UTC session timezone so timestamp results are comparable with
 UTC-naive engines (parquet stores naive micros; DuckDB reads them naive).
+
+Python workers fork from ``worker_daemon`` instead of PySpark's stock
+daemon: stock workers re-read the directory of every zip archive on
+``sys.path`` before each task (~27k entries for ``pyspark.zip`` and py4j,
+0.1 s of a one-row task), and the daemon skips that for Spark's own
+archives, which cannot change while the application runs.
 """
 
 from __future__ import annotations
@@ -16,6 +22,9 @@ from collections.abc import Callable, Iterator
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+# the directory that holds this package
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -45,6 +54,9 @@ def get_spark(
         # multi-MB media = OOM at scale, 2048 keeps batches ~GB-safe
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "tts_data_pipeline_spark.worker_daemon")
+        # workers must import the daemon from any working directory
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         # Local mode: the driver JVM hosts all executor threads, so size the
         # heap for cores × per-task working set (32 threads on an 8g heap is
         # ~250 MB/task).  Do NOT add -XX:+AlwaysPreTouch here: pre-faulting

@@ -1,8 +1,10 @@
 """Scan operators (SURVEY.md §2.1, S1-S6).
 
 Each reader is a thin declarative wrapper over ``spark.read`` with the
-engine's explicit schemas — Catalyst gets pushdown/pruning for free because
-nothing here materializes driver-side.
+engine's explicit schemas (the driver test tables read with
+``schemas.TEST_TABLES``, so no scan runs a footer-inference job) —
+Catalyst gets pushdown/pruning for free because nothing here
+materializes driver-side.
 
 Ingest-only quirk handled here: the reference stores nested values as
 *stringified Python literals* in CSV (narrator dict-or-list at
@@ -48,32 +50,40 @@ def events_nanos(spark: SparkSession, sf_dir: str) -> bool:
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Parquet scan of one driver test table (TESTDATA.md).
+    """Parquet scan of one driver test table (TESTDATA.md) with its
+    declared schema, ``schemas.TEST_TABLES[name]``: no footer-inference
+    job, and a file whose column type differs from the declared one fails
+    at scan instead of reading as something else.  A declared column the
+    file lacks reads as null.
 
-    An ``events`` file storing ``TIMESTAMP(NANOS)`` reads its ts as long
-    (:func:`events_nanos`), rebuilt here as a proper TimestampType column;
-    the driver data carries whole microseconds only, so ``ts div 1000`` is
-    lossless.
+    ``events`` declares ``ts`` as TIMESTAMP_NTZ (what a micros file holds)
+    and returns it cast to TimestampType.  A file storing
+    ``TIMESTAMP(NANOS)`` reads its ts as long (:func:`events_nanos`),
+    rebuilt here as TimestampType; the driver data carries whole
+    microseconds only, so ``ts div 1000`` is lossless.
     """
-    if name == "events":
-        # Pin the session to UTC whenever timestamps enter a plan: the
-        # driver's session may run in any host timezone, and collected
-        # timestamps render in session-local time while DuckDB stays naive
-        # (caught by the TZ=America/New_York probe in the verify recipe).
-        from tts_data_pipeline_spark.session import ensure_utc
+    schema = schemas.TEST_TABLES[name]
+    path = f"{sf_dir}/{name}.parquet"
+    if name != "events":
+        return spark.read.schema(schema).parquet(path)
+    # Pin the session to UTC whenever timestamps enter a plan: the
+    # driver's session may run in any host timezone, and collected
+    # timestamps render in session-local time while DuckDB stays naive
+    # (caught by the TZ=America/New_York probe in the verify recipe).
+    from tts_data_pipeline_spark.session import ensure_utc
 
-        ensure_utc(spark)
-        nanos = events_nanos(spark, sf_dir)
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        if nanos:
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        elif dict(df.dtypes).get("ts") == "timestamp_ntz":
-            # micros parquet reads as NTZ; with the session pinned UTC the
-            # cast to session-TZ TIMESTAMP is identity, and downstream code
-            # (cast to long, unix_micros, window arithmetic) expects LTZ
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    ensure_utc(spark)
+    if events_nanos(spark, sf_dir):
+        schema = T.StructType(
+            [T.StructField("ts", T.LongType()) if f.name == "ts" else f for f in schema]
+        )
+        ts = F.expr("timestamp_micros(ts div 1000)")
+    else:
+        # with the session pinned UTC the cast to session-TZ TIMESTAMP is
+        # identity, and downstream code (cast to long, unix_micros, window
+        # arithmetic) expects LTZ
+        ts = F.col("ts").cast("timestamp")
+    return spark.read.schema(schema).parquet(path).withColumn("ts", ts)
 
 
 def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
