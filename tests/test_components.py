@@ -80,21 +80,19 @@ def test_random_graphs_match_union_find(spark):
 
 
 def test_require_converged_raises_at_cap_and_stats_record(spark):
-    """A capped (non-converged) run must fail loudly when the caller
-    requires the exact closure, and the run record reports rounds +
-    convergence for the scaling harness."""
+    """A capped (non-converged) run must fail loudly rather than return
+    an under-merge, and the run record reports rounds + convergence for
+    the scaling harness."""
     import pytest
 
     from tts_data_pipeline_spark.session import run_stats
 
-    # a 60-node path needs >1 star round; cap at 1 and demand convergence
+    # a 60-node path needs >1 star round; cap at 1
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(60)], ["id_a", "id_b"]
     )
     with pytest.raises(RuntimeError, match="under-merge"):
-        connected_components(
-            pairs, max_iterations=1, require_converged=True
-        ).collect()
+        connected_components(pairs, max_iterations=1).collect()
     stats = run_stats(spark, "connected_components")
     assert stats == {"rounds": 1, "converged": False}
 
@@ -266,20 +264,6 @@ def test_lpa_converged_entry_self_voting_breaks_pendant_oscillation(spark):
     assert {r.node: r.label for r in labels.collect()} == {10: 10, 20: 10}
 
 
-def test_w11_ordered_param_returns_total_order(spark):
-    """w11_gap_fill_ffill's catalog contract is an unordered row set
-    (skew-safe sortWithinPartitions); ordered=True must return the
-    total (user_id, h) order for order-sensitive consumers."""
-    from tts_data_pipeline_spark.plans.analytics import w11_gap_fill_ffill
-
-    rows = w11_gap_fill_ffill(
-        spark, "/root/testdata/sf0.001", ordered=True
-    ).collect()
-    keys = [(r.user_id, r.h) for r in rows]
-    assert keys == sorted(keys)
-    assert len(rows) > 0
-
-
 def test_lpa_dials_read_and_oracle_constants_derived(spark):
     """Round-11 dial promotion: the LPA/IVF semantic dials must (a) be
     DERIVED into the oracle-side constants so dial default and oracle
@@ -380,8 +364,10 @@ def test_pre_contract_round_count_robust_to_adverse_partitioning(spark):
     rounds instead of 2 at sf0.1.  Pre-contraction (coalesce to cores,
     contract; when that forest is over the local-finish dial, repartition
     by member and contract again) must keep the round count low for ANY
-    input partitioning, with identical components."""
-    from tts_data_pipeline_spark.session import run_stats
+    input partitioning, with identical components.  The local-finish
+    dial is 1 so both runs take the contractions and the star loop."""
+    from tts_data_pipeline_spark.conf import CC_LOCAL_FINISH_ROWS
+    from tts_data_pipeline_spark.session import run_stats, scoped_conf
 
     # clique-heavy graph: 30 families of 12 copies each -> 66 edges/family
     fams = [
@@ -391,18 +377,22 @@ def test_pre_contract_round_count_robust_to_adverse_partitioning(spark):
         for b in range(a + 1, 12)
     ]
     df = spark.createDataFrame(fams, ["id_a", "id_b"])
-    base = {
-        r.id: r.component
-        for r in connected_components(df.coalesce(1), pre_contract=True).collect()
-    }
-    rounds_best = run_stats(spark, "connected_components")["rounds"]
     # adverse: scatter every family across 64 partitions by row hash
     scattered = df.repartition(64)
-    got = {
-        r.id: r.component
-        for r in connected_components(scattered, pre_contract=True).collect()
-    }
-    rounds_adverse = run_stats(spark, "connected_components")["rounds"]
+    with scoped_conf(spark, {CC_LOCAL_FINISH_ROWS[0]: "1"}):
+        base = {
+            r.id: r.component
+            for r in connected_components(df.coalesce(1), pre_contract=True).collect()
+        }
+        best = run_stats(spark, "connected_components")
+        got = {
+            r.id: r.component
+            for r in connected_components(scattered, pre_contract=True).collect()
+        }
+        adverse = run_stats(spark, "connected_components")
+    assert "local_finish" not in best, best
+    assert "local_finish" not in adverse, adverse
+    rounds_best, rounds_adverse = best["rounds"], adverse["rounds"]
     assert got == base
     # identical-round-count is the robustness contract the iterated
     # contraction buys (pre-fix: adverse ran 3x the rounds)

@@ -44,9 +44,11 @@ def test_substring_span_dedup_semantics_on_crafted_corpus(spark, tmp_path):
         (5, "a b c d e f g h t1 t2 t3 t4"),  # both 6-grams again, OVERLAPPING
         (6, "r1 r2 r3 r4 r5 r6 r1 r2 r3 r4 r5 r6"),  # self-repetition
     ]
-    spark.createDataFrame(docs, "doc_id long, text string").write.mode(
-        "overwrite"
-    ).parquet(str(tmp_path / "documents.parquet"))
+    # the full declared documents table: a missing column fails the read
+    spark.createDataFrame(
+        [(i, t, "vi", "crafted", len(t)) for i, t in docs],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    ).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
     out = {
         r.doc_id: r
         for r in dedup_substring_spans(spark, str(tmp_path)).collect()
@@ -878,9 +880,9 @@ def test_sorted_neighborhood_recovers_adjacent_dups(spark, tmp_path):
         # word -> high jaccard but sorts far away (starts with 'zzz')
         + ["zzz " + base]
     ):
-        rows.append((i, txt, "vi", len(txt)))
+        rows.append((i, txt, "vi", "crafted", len(txt)))
     spark.createDataFrame(
-        rows, ["doc_id", "text", "lang", "n_chars"]
+        rows, ["doc_id", "text", "lang", "source", "n_chars"]
     ).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
 
     got = {

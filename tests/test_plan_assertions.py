@@ -551,9 +551,9 @@ def test_pair_entries_plan_no_terminal_sort(spark):
     """Round-10 unordered pair contracts: a terminal global Sort on a
     pair generator re-executes the verify subtree via the
     range-partitioner's sampling pass (measured 2.2× at skew-3).  The
-    catalog entries must plan NO global Sort; ordered=True is the
-    opt-in.  (Sort inside window functions doesn't appear as a
-    top-level Sort+RangePartitioning pair on these plans.)"""
+    catalog entries must plan NO global Sort.  (Sort inside window
+    functions doesn't appear as a top-level Sort+RangePartitioning pair
+    on these plans.)"""
     for name in (
         "dedup_embedding_cosine",
         "dedup_embedding_cosine_ivf",
@@ -566,68 +566,6 @@ def test_pair_entries_plan_no_terminal_sort(spark):
     ):
         plan = plan_of(spark, name)
         assert "rangepartitioning(" not in plan.lower(), (name, plan)
-
-
-def test_ordered_opt_in_sorts_over_cache(spark):
-    """Round-11 (r10 verdict #2): ``ordered=True`` must cost ONE
-    materialization, not a sampling-pass double run — the terminal
-    Sort's direct child must be the InMemoryRelation planted by
-    ``cachereg.sort_via_cache``, so the RangePartitioner's sampling job
-    fills the cache and the sort proper reads it.  Values are unchanged
-    by the cache+sort (spot-checked on one entry per family below)."""
-    from tts_data_pipeline_spark.plans import catalog
-
-    entries = {
-        "dedup_embedding_cosine": ("id_a", "id_b"),
-        "dedup_embedding_cosine_ivf": ("id_a", "id_b"),
-        "dedup_fuzzy_levenshtein": ("id_a", "id_b"),
-        "dedup_minhash_lsh": ("id_a", "id_b"),
-        "dedup_minhash_xx64": ("id_a", "id_b"),
-        "dedup_minhash_ml": ("id_a", "id_b"),
-        "dedup_ngram_jaccard_bucketed": ("id_a", "id_b"),
-        "dedup_shingle_containment": ("id_a", "id_b"),
-        "w11_gap_fill_ffill": ("user_id", "h"),
-        # round-11 bench-tail find: terminal sort over the applyInPandas
-        # fold ran the Python fold twice
-        "tx_sentence_grouping_exact": ("group_key", "group_idx"),
-        # round-11 catalog-wide sweep: every UDF-backed entry whose
-        # terminal sort sat over a Python node (the range-sampler runs
-        # the decode/fold twice — measured 1.96× on mm_video_motion)
-        "align_segments_pipeline": ("book_id", "line_id"),
-        "c13_nfc_normalize": ("doc_id",),
-        "k5_chunked_download": ("p_partkey",),
-        "mm_audio_book_concat": ("book_id",),
-        "mm_audio_fingerprint_dedup": ("fp",),
-        "mm_audio_qc": ("doc_id",),
-        "mm_audio_resample": ("doc_id",),
-        "mm_audio_segment_cut": ("doc_id",),
-        "mm_audio_silence_trim": ("doc_id",),
-        "mm_image_dhash_dedup": ("dhash_lo", "dhash_hi"),
-        "mm_image_features": ("path",),
-        "mm_video_motion": ("path",),
-        "pipeline_e2e_crawl": ("book_id",),
-        "pipeline_e2e_preprocess": ("doc_id",),
-        "qc_wer_gate": ("book_id",),
-        "s10_dynamic_render_scan": ("doc_id", "track_no"),
-        "s5_remote_csv_scan": ("id",),
-        "sim_lsh_ann_topk_rng": ("query_id", "rank"),
-    }
-    for name in entries:
-        df = catalog.queries()[name](spark, SF_DIR, ordered=True)
-        opt = df._jdf.queryExecution().optimizedPlan().toString()
-        lines = opt.splitlines()
-        assert lines[0].startswith("Sort "), (name, lines[0])
-        assert "InMemoryRelation" in lines[1], (name, lines[:3])
-    # value identity: ordered == unordered as a multiset (one pair
-    # entry and the window entry)
-    for name in ("dedup_embedding_cosine", "w11_gap_fill_ffill"):
-        fn = catalog.queries()[name]
-        unord = [tuple(r) for r in fn(spark, SF_DIR).collect()]
-        ordd = [tuple(r) for r in fn(spark, SF_DIR, ordered=True).collect()]
-        assert sorted(unord, key=repr) == sorted(ordd, key=repr), name
-        cols = entries[name]
-        keyed = [tuple(r[c] for c in cols) for r in fn(spark, SF_DIR, ordered=True).select(*cols).collect()]
-        assert keyed == sorted(keyed), name
 
 
 def test_weighted_reservoir_is_take_ordered(spark):

@@ -47,8 +47,7 @@ def test_cms_never_underestimates_and_sketch_is_fixed_size(spark):
     assert rows, "heavy-hitter set must be non-empty on the test corpus"
     assert all(r.overest_ok == 1 for r in rows)
     assert all(r.est_cms >= r.exact_cnt for r in rows)
-    # rebuild the cell table exactly as the operator does and bound it
-    from tts_data_pipeline_spark.plans.extensions import _md5_long
+    # rebuild the cell table from the operator's coordinates and bound it
     from tts_data_pipeline_spark.sources import table
 
     docs = table(spark, SF_DIR, "documents")
@@ -56,25 +55,44 @@ def test_cms_never_underestimates_and_sketch_is_fixed_size(spark):
         F.explode(F.split(F.lower(F.trim("text")), " ")).alias("tok")
     ).filter(F.col("tok") != "")
     n_cells = (
-        toks.select(
-            *[
-                F.pmod(
-                    _md5_long(F.concat(F.lit(f"{j}:"), F.col("tok"))),
-                    F.lit(SK._CMS_W),
-                ).alias(f"b{j}")
-                for j in range(SK._CMS_D)
-            ]
-        )
-        .agg(
-            sum(
-                [F.countDistinct(f"b{j}") for j in range(SK._CMS_D)],
-                F.lit(0),
-            ).alias("n")
-        )
-        .collect()[0]
-        .n
+        toks.select(F.explode(SK.cms_coords(F.col("tok"))).alias("h"))
+        .select("h.j", "h.bucket")
+        .distinct()
+        .count()
     )
     assert n_cells <= SK._CMS_D * SK._CMS_W
+
+
+def test_stream_cms_row0_sums_to_window_counts(spark):
+    """Every ingested event adds one count to each sketch row, so per
+    window the cells of row j = 0 sum to the window's event count — the
+    identity ``stream_heavy_hitters_cms`` uses for its threshold total.
+    It holds because the runner replays the events in one micro-batch
+    into a complete-mode sink: no late row is dropped."""
+    from tts_data_pipeline_spark.session import ensure_utc
+    from tts_data_pipeline_spark.sources import table
+    from tts_data_pipeline_spark.streaming.events import run_stream_cms_to_memory
+
+    ensure_utc(spark)
+    cells = run_stream_cms_to_memory(spark, SF_DIR)
+    assert {r.j for r in cells.select("j").distinct().collect()} == set(
+        range(SK._CMS_D)
+    )
+    row0 = {
+        r.win_start: r.n
+        for r in cells.filter(F.col("j") == 0)
+        .groupBy("win_start")
+        .agg(F.sum("cell").alias("n"))
+        .collect()
+    }
+    events = {
+        r.win_start: r.n
+        for r in table(spark, SF_DIR, "events")
+        .groupBy(F.window("ts", "1 day")["start"].alias("win_start"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    assert row0 and row0 == events
 
 
 def test_bloom_no_false_negatives_and_live_false_positives(spark):

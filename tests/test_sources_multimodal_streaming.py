@@ -503,13 +503,17 @@ def test_watermarked_dedup_absorbs_in_horizon_and_reemits_expired(
     def ts(minutes):
         return base + dt.timedelta(minutes=minutes)
 
+    # the full declared events table: a missing column fails the read
     tbl = pa.table(
         {
-            "user_id": pa.array([2, 4, 1, 3], pa.int64()),
-            "event_type": pa.array(["a"] * 4),
+            "event_id": pa.array([1, 2, 3, 4], pa.int64()),
             "ts": pa.array(
                 [ts(0), ts(100), ts(5), ts(90)], pa.timestamp("us")
             ),
+            "user_id": pa.array([2, 4, 1, 3], pa.int64()),
+            "event_type": pa.array(["a"] * 4),
+            "value": pa.array([1.0] * 4),
+            "props": pa.array(["{}"] * 4),
         }
     )
     pq.write_table(tbl, str(tmp_path / "events.parquet"))
@@ -870,6 +874,28 @@ def test_table_read_of_mistyped_file_raises(spark, tmp_path):
     )
     with pytest.raises(Exception, match="r_regionkey"):
         table(spark, str(tmp_path), "region").collect()
+
+
+def test_table_read_of_file_missing_a_declared_column_raises(spark, tmp_path):
+    """A declared column the file lacks fails the read, naming the
+    column, instead of reading as all null: this ``region`` file renamed
+    ``r_name`` to ``r_nam``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tts_data_pipeline_spark.sources import table
+
+    pq.write_table(
+        pa.table(
+            {
+                "r_regionkey": pa.array([0, 1], pa.int32()),
+                "r_nam": pa.array(["a", "b"]),
+            }
+        ),
+        tmp_path / "region.parquet",
+    )
+    with pytest.raises(ValueError, match="r_name"):
+        table(spark, str(tmp_path), "region")
 
 
 def test_events_read_leaves_nanos_as_long_at_default_for_micros_file(spark):

@@ -338,38 +338,18 @@ def main() -> None:
             # 3. CMS cells per 1-hour tumbling window (update mode):
             # state capped at active_windows * d * w whatever the key
             # cardinality does
-            from tts_data_pipeline_spark.plans.extensions import _md5_long
+            from tts_data_pipeline_spark.plans.sketches import cms_coords
 
-            d_rows, width = 4, 256
             if "cms" not in shapes_wanted:
                 results[label] = shapes
                 print(json.dumps({"scale": label, **shapes}), flush=True)
                 continue
             rows = (
                 _sliced_stream(spark, slice_dir)
-                .select("ts", "user_id")
                 .select(
                     "ts",
                     F.explode(
-                        F.array(
-                            *[
-                                F.struct(
-                                    F.lit(j).alias("j"),
-                                    F.pmod(
-                                        _md5_long(
-                                            F.concat(
-                                                F.lit(f"{j}:"),
-                                                F.col("user_id").cast(
-                                                    "string"
-                                                ),
-                                            )
-                                        ),
-                                        F.lit(width),
-                                    ).alias("bucket"),
-                                )
-                                for j in range(d_rows)
-                            ]
-                        )
+                        cms_coords(F.col("user_id").cast("string"))
                     ).alias("h"),
                 )
                 .select("ts", "h.j", "h.bucket")

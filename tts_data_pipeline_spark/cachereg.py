@@ -33,6 +33,12 @@ pass (measured 1.1 s → 7.9 s).  A session therefore holds at most one
 cached base per operator, and the previous invocation's returned frame
 stays CORRECT if re-collected (unpersist only drops the
 materialization; the plan recomputes).
+
+:func:`cache_replacing` is the registry's one entry point.  Catalog
+entries return unordered frames (the driver's hash and the oracles are
+row-order-insensitive), so nothing here sorts: a terminal global sort
+would re-run the cached child under the range partitioner's sampling
+job.
 """
 
 from __future__ import annotations
@@ -77,30 +83,3 @@ def cache_replacing(key: str, df: DataFrame) -> DataFrame:
         _CACHED[key] = (h, out)
         return out
 
-
-def sort_via_cache(key: str, df: DataFrame, *cols: str) -> DataFrame:
-    """Terminal sort that costs ONE materialization, not two subtree
-    runs: a global ``orderBy``'s RangePartitioner fires a separate
-    SAMPLING job that re-executes the entire child subtree (the r9/r10
-    sampling-pass defect class — measured 2× on the pair verifies).
-    Caching the child first makes the sampling pass the run that FILLS
-    the cache and the sort proper a cache read.  Used by the pair
-    entries' ``ordered=True`` opt-in branch (round-11, r10 verdict #2:
-    the unordered default was right, but the opt-in was a loaded
-    footgun paying the exact tax the contract change removed)."""
-    return cache_replacing(key, df).orderBy(*cols)
-
-
-def opt_in_sorted(key: str, ordered: bool, *cols: str):
-    """``DataFrame.transform`` form of the ordered opt-in contract: the
-    catalog's UDF-backed entries return UNORDERED rows by default (a
-    terminal global sort's range-sampler re-executes the whole child —
-    2× the Python decode/fold; round-11 measured 1.96× on
-    mm_video_motion) and restore the total order through
-    :func:`sort_via_cache` when the caller passes ``ordered=True``.
-    Usage: ``df.transform(opt_in_sorted(key, ordered, *cols))``."""
-
-    def _t(df: DataFrame) -> DataFrame:
-        return sort_via_cache(key, df, *cols) if ordered else df
-
-    return _t

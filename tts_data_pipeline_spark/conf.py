@@ -157,16 +157,6 @@ SEMDEDUP_NPROBE_SUPER = ("spark.graft.semdedup.nprobe_super", 3)
 IVF_NPROBE = ("spark.graft.ivf.nprobe", 2)
 LPA_MAX_ROUNDS = ("spark.graft.lpa.max_rounds", 40)
 LPA_MIN_COOCCUR = ("spark.graft.lpa.min_cooccur", 4)
-# physical-only: shuffle width for the converged-LPA entry's EAGER
-# build+loop (scoped set/restore of spark.sql.shuffle.partitions, the
-# streaming entries' guard pattern).  0 = auto (defaultParallelism —
-# cores-wide on any cluster).  The driver's plain session leaves shuffle
-# partitions at 200, and this entry executes ~10 build stages plus one
-# stage per LPA round at that width; 200-task scheduling overhead on a
-# node-sized graph dominated its sf0.01 wall (measured 31 → 7 s at
-# width 8 in a plain local[8] session).  At 100 TB raise it toward the
-# deployment's tuned shuffle width — identical labelling for any value.
-LPA_BUILD_WIDTH = ("spark.graft.lpa.build_width", 0)
 # physical-only: when a PRE-CONTRACTED connected-components forest lands
 # at or under this many edges, the exact closure is finished by ONE
 # single-task union-find pass over the persisted forest instead of the
@@ -197,26 +187,6 @@ TOKENIZER_LOCAL_LEARN_VOCAB = (
     "spark.graft.tokenizer.local_learn_vocab",
     1_000_000,
 )
-# physical-only: range-partition width for the interpreted Vietnamese
-# cardinal projection (c15b) — the expression tree exceeds the codegen
-# splitting threshold and evaluates interpreted, so the projection's
-# parallelism IS this width (AQE's small-output coalescing otherwise
-# folds the tiny local frame to ONE partition and serializes it).
-# 0 = auto (defaultParallelism — cores-wide on any cluster); the r14
-# literal 32 baked the local core count into the plan, capping the
-# projection at 32 tasks at scale (r14 verdict #2).  Identical rows for
-# any value — pure partitioning.
-CARDINAL_RANGE_WIDTH = ("spark.graft.cardinal.range_width", 0)
-
-
-def width_dial(spark: SparkSession, key_default: tuple[str, int]) -> int:
-    """Read a parallelism-width dial where 0 means auto (cores —
-    ``defaultParallelism``).  The ``dial()`` helper's ≥ 1 contract can't
-    express auto, so width dials resolve through this one (the
-    ``_lpa_build_width`` pattern, generalized in r15)."""
-    key, default = key_default
-    raw = int(spark.conf.get(key, str(default)))
-    return raw if raw >= 1 else spark.sparkContext.defaultParallelism
 
 
 def dial(spark: SparkSession, key_default: tuple[str, int]) -> int:

@@ -22,6 +22,38 @@ from tts_data_pipeline_spark.scratch import RoundStore
 from tts_data_pipeline_spark.session import run_record
 
 
+def _union_find(batches, with_roots: bool) -> tuple[list, list]:
+    """Union-find (path compression, the smaller root wins) over the
+    ``(u, v)`` rows of an Arrow batch iterator.  Returns ``(nodes,
+    roots)``: every node seen with its root, the minimum id of its
+    component among the rows given; ``with_roots=False`` leaves out the
+    roots themselves (``x == root``), which is a spanning forest."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent.setdefault(root, root) != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for pdf in batches:
+        for a, b in zip(pdf["u"].tolist(), pdf["v"].tolist()):
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                if rb < ra:
+                    ra, rb = rb, ra
+                parent[rb] = ra
+    nodes, roots = [], []
+    for x in parent:
+        r = find(x)
+        if with_roots or r != x:
+            nodes.append(x)
+            roots.append(r)
+    return nodes, roots
+
+
 def contract_pairs_locally(
     pairs: DataFrame, src: str = "id_a", dst: str = "id_b"
 ) -> DataFrame:
@@ -53,30 +85,8 @@ def contract_pairs_locally(
     def _contract(batches):
         import pandas as pd
 
-        parent: dict = {}
-
-        def find(x):
-            root = x
-            while parent.setdefault(root, root) != root:
-                root = parent[root]
-            while parent[x] != root:
-                parent[x], x = root, parent[x]
-            return root
-
-        for pdf in batches:
-            for a, b in zip(pdf["u"].tolist(), pdf["v"].tolist()):
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    if rb < ra:
-                        ra, rb = rb, ra
-                    parent[rb] = ra
-        out_u, out_v = [], []
-        for x in parent:
-            r = find(x)
-            if r != x:
-                out_u.append(x)
-                out_v.append(r)
-        yield pd.DataFrame({"u": out_u, "v": out_v})
+        u, v = _union_find(batches, with_roots=False)
+        yield pd.DataFrame({"u": u, "v": v})
 
     return (
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -91,7 +101,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iterations: int = 20,
-    require_converged: bool = False,
     pre_contract: bool = False,
 ) -> DataFrame:
     """(src, dst) pairs → (id, component) with component = min id reachable.
@@ -105,11 +114,10 @@ def connected_components(
     propagation + pointer jumping moved the min label a bounded number of
     hops per round and DID NOT converge in 25 rounds on the sf0.1 fuzzy
     graph, while the star rewrite converges in ~5.  ``max_iterations``
-    still bounds runtime; labels at the cap are a valid UNDER-merge
-    (never wrong merges).  Callers whose downstream semantics REQUIRE the
-    exact transitive closure (oracle-checked survivor anti-joins) pass
-    ``require_converged=True`` so a capped run raises instead of silently
-    returning extra survivors.  Each call writes a
+    still bounds runtime: a run that reaches it before the star fixpoint
+    raises ``RuntimeError``, since its labels would be an UNDER-merge and
+    every caller (oracle-checked survivor anti-joins) needs the exact
+    transitive closure.  Each call writes a
     ``session.run_record`` of kind ``"connected_components"``: the round
     count and convergence flag, so the scaling harness can report
     rounds-vs-n (wall time is rounds x per-round cost, and rounds grow
@@ -227,35 +235,15 @@ def connected_components(
         # per-round parquet round-trips.  Measured at sf0.1 (fuzzy
         # near-dup graph, 10.4k pairs → ~4k forest edges): the eager CC
         # build drops from ~3.3-5.6 s (4-6 star rounds × write+read+job)
-        # to ~0.3 s.  require_converged is satisfied exactly.  Output
-        # matches the star path: every node of the pair graph appears,
-        # component = min reachable id, centers map to themselves.
+        # to ~0.3 s.  The closure is exact, so the record says converged.
+        # Output matches the star path: every node of the pair graph
+        # appears, component = min reachable id, centers map to themselves.
         t = edges.schema["u"].dataType.simpleString()
 
         def _uf_finish(batches):
             import pandas as pd
 
-            parent: dict = {}
-
-            def find(x):
-                root = x
-                while parent.setdefault(root, root) != root:
-                    root = parent[root]
-                while parent[x] != root:
-                    parent[x], x = root, parent[x]
-                return root
-
-            for pdf in batches:
-                for a, b in zip(pdf["u"].tolist(), pdf["v"].tolist()):
-                    ra, rb = find(a), find(b)
-                    if ra != rb:
-                        if rb < ra:
-                            ra, rb = rb, ra
-                        parent[rb] = ra
-            ids, comps = [], []
-            for x in parent:
-                ids.append(x)
-                comps.append(find(x))
+            ids, comps = _union_find(batches, with_roots=True)
             if ids:
                 yield pd.DataFrame({"id": ids, "component": comps})
 
@@ -303,7 +291,7 @@ def connected_components(
         spark, "connected_components", rounds=rounds_run, converged=converged,
         **path,
     )
-    if require_converged and not converged:
+    if not converged:
         raise RuntimeError(
             f"connected_components did not reach the star fixpoint in "
             f"{max_iterations} rounds; labels would be an under-merge. "

@@ -1200,7 +1200,7 @@ def j12_cdc_apply_log(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM grid g LEFT JOIN m ON g.user_id = m.user_id AND g.h = m.h
     )
     -- no trailing ORDER BY: the catalog entry returns an UNORDERED row
-    -- set (see docstring); pass ordered=True for the total-order form
+    -- set (see docstring)
     SELECT user_id, CAST(h AS TIMESTAMP) AS h, observed,
            COALESCE(v, LAST_VALUE(v IGNORE NULLS) OVER (
              PARTITION BY user_id ORDER BY h
@@ -1208,9 +1208,7 @@ def j12_cdc_apply_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM joined
     """,
 )
-def w11_gap_fill_ffill(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def w11_gap_fill_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-series gap filling: densify each key's hourly grid between its
     first and last observation (``sequence`` + explode — generated
     server-side, no driver loop), left-join the observed aggregates, and
@@ -1224,10 +1222,8 @@ def w11_gap_fill_ffill(
     Ordering contract: the catalog entry returns an UNORDERED row set
     (within-partition (user_id, h) order only — the skew-safe form; a
     global range sort of the data-sized output was the one stage that
-    degraded under Zipfian keys).  Order-sensitive consumers pass
-    ``ordered=True`` for the total (user_id, h) order; the oracle states
-    the unordered contract and the driver's value hash is
-    row-order-insensitive either way."""
+    degraded under Zipfian keys).  The oracle states the unordered
+    contract and the driver's value hash is row-order-insensitive."""
     from tts_data_pipeline_spark.cachereg import cache_replacing
 
     e = table(spark, sf_dir, "events")
@@ -1272,12 +1268,6 @@ def w11_gap_fill_ffill(
         "observed",
         F.coalesce("v", ffill).alias("v_ffill"),
     )
-    if ordered:
-        # opt-in global sort rides sort_via_cache: one materialization,
-        # not a range-sampler double run of the grid+window subtree
-        from tts_data_pipeline_spark.cachereg import sort_via_cache
-
-        return sort_via_cache("w11_gap_fill_ordered", out, "user_id", "h")
     # sortWithinPartitions, NOT a global orderBy: the output here is
     # DATA-sized (one row per key-hour), and a global range sort of a
     # data-sized result was the one stage of this plan that degraded

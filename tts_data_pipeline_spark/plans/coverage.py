@@ -12,7 +12,6 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from tts_data_pipeline_spark.cachereg import opt_in_sorted, sort_via_cache
 from tts_data_pipeline_spark.functions import vi_text
 from tts_data_pipeline_spark.operators import dedup as D
 from tts_data_pipeline_spark.functions import exact as X
@@ -235,9 +234,7 @@ def c10_typographic_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY doc_id
     """,
 )
-def c13_nfc_normalize(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def c13_nfc_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C13 — Unicode NFC normalization (reference ``process_all.py:174``).
     Arrow-batched pandas UDF (no Catalyst builtin); DuckDB's nfc_normalize is
     the oracle.  A decomposed Vietnamese prefix is prepended so the
@@ -246,8 +243,6 @@ def c13_nfc_normalize(
     decomposed = F.concat(F.lit("Vieệt "), F.col("text"))
     return d.select(
         "doc_id", vi_text.nfc_normalize(decomposed).alias("nfc_text")
-    ).transform(
-        opt_in_sorted("c13_nfc_normalize_ordered", ordered, "doc_id")
     )
 
 
@@ -372,9 +367,7 @@ def _embedding_cosine_pairs(
     WHERE cosine_sim >= 0.40
     """,
 )
-def dedup_embedding_cosine(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs within label buckets.
 
     The bucketed-pair-space pattern at the vector layer: the label bounds
@@ -400,20 +393,12 @@ def dedup_embedding_cosine(
     growth here is the semantics being asked for, not a plan defect;
     at scale, reach for the IVF form.
 
-    Ordering contract (round-10, the w11 precedent): UNORDERED pair set
-    by default — the TERMINAL sort's range-sampler re-executes the whole
-    verify subtree (measured 239 vs ~112 s at skew-3, pairs vs
-    pairs+CC-unsorted); ``ordered=True`` restores the total (id_a, id_b)
-    order for order-sensitive consumers.  Driver hash is
-    row-order-insensitive; the oracle states the unordered contract."""
-    out = _embedding_cosine_pairs(spark, sf_dir)
-    if ordered:
-        # opt-in sort costs ONE materialization, not a sampling-pass
-        # double run of the verify subtree (cachereg.sort_via_cache)
-        return sort_via_cache(
-            "dedup_embedding_cosine_ordered", out, "id_a", "id_b"
-        )
-    return out
+    Ordering contract (round-10, the w11 precedent): an UNORDERED pair
+    set — a TERMINAL sort's range-sampler re-executes the whole verify
+    subtree (measured 239 vs ~112 s at skew-3, pairs vs
+    pairs+CC-unsorted).  Driver hash is row-order-insensitive; the
+    oracle states the unordered contract."""
+    return _embedding_cosine_pairs(spark, sf_dir)
 
 
 def _ivf_dedup_planes():
@@ -512,7 +497,7 @@ def _ivf_dedup_oracle(nprobe: int) -> str:
         + _ivf_dedup_ctes(nprobe)
         + """
     -- no ORDER BY: the catalog entry returns an UNORDERED pair set
-    -- (see docstring); ordered=True restores the total order
+    -- (see docstring)
     SELECT id_a, id_b, cosine_sim
     FROM pairs
     WHERE cosine_sim >= 0.40
@@ -543,7 +528,6 @@ def dedup_embedding_cosine_ivf(
     spark: SparkSession,
     sf_dir: str,
     nprobe: int | None = None,
-    ordered: bool = False,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs with a DATA-SCALED bucket — the
     100 TB form of ``dedup_embedding_cosine`` (which verifies all pairs
@@ -552,9 +536,8 @@ def dedup_embedding_cosine_ivf(
     Ordering contract (round-10, the w11 precedent): the catalog entry
     returns an UNORDERED pair set — a TERMINAL sort costs the same
     range-sampler re-execution of the verify subtree the r9 fix removed
-    for downstream consumers (2× the operator); pass ``ordered=True``
-    for the total (id_a, id_b) order.  The driver's value hash is
-    row-order-insensitive; the oracle states the unordered contract.
+    for downstream consumers (2× the operator).  The driver's value hash
+    is row-order-insensitive; the oracle states the unordered contract.
 
     Candidate bound, two independent keys:
 
@@ -670,7 +653,7 @@ def dedup_embedding_cosine_ivf(
         / F.greatest(F.col("a.nrm") * F.col("b.nrm"), F.lit(1e-12)),
         6,
     )
-    out = (
+    return (
         a.join(
             b,
             (F.col("a.cid") == F.col("b.cid"))
@@ -691,15 +674,6 @@ def dedup_embedding_cosine_ivf(
         # deterministic.  The oracle's SELECT DISTINCT mirrors this.
         .dropDuplicates(["id_a", "id_b"])
     )
-    # ordered=False for pair CONSUMERS (connected components): a trailing
-    # sort under a downstream mapInPandas survives optimization and its
-    # range-partitioner sampling pass re-executes the subtree (see
-    # _embedding_cosine_pairs); the opt-in rides sort_via_cache
-    if ordered:
-        return sort_via_cache(
-            "dedup_embedding_cosine_ivf_ordered", out, "id_a", "id_b"
-        )
-    return out
 
 
 @query(
@@ -812,18 +786,15 @@ def u6_unpivot_melt(spark: SparkSession, sf_dir: str) -> DataFrame:
     -- no ORDER BY: unordered catalog contract (see docstring)
     """,
 )
-def dedup_fuzzy_levenshtein(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def dedup_fuzzy_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fuzzy-match dedup: edit-distance-≤1 pairs within a nation — the
     typo-level near-dup modality (exact hash, MinHash, SimHash, embedding
     cosine cover the other granularities).
 
     Ordering contract (round-10, the w11 precedent): the catalog entry
     returns an UNORDERED pair set (the terminal sort's range-sampler
-    re-executes the verify subtree — 2×); ``ordered=True`` restores the
-    total (id_a, id_b) order.  Oracle states the unordered contract;
-    the driver's value hash is row-order-insensitive.
+    re-executes the verify subtree — 2×).  Oracle states the unordered
+    contract; the driver's value hash is row-order-insensitive.
 
     Candidate bounding is DELETION-NEIGHBORHOOD banding (the FastSS /
     SymSpell symmetric-delete scheme): every name emits itself plus its L
@@ -880,7 +851,7 @@ def dedup_fuzzy_levenshtein(
         "_band",
     )
     dist = F.levenshtein(F.col("name_a"), F.col("name_b"))
-    out = (
+    return (
         a.join(b, ["nat", "_band"])
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "name_a", "id_b", "name_b")
@@ -888,16 +859,6 @@ def dedup_fuzzy_levenshtein(
         .select("id_a", "id_b", D.eval_once(dist.cast("long")).alias("dist"))
         .filter(F.col("dist") <= 1)
     )
-    # ordered=False for pair CONSUMERS (connected components with local
-    # contraction): the trailing sort survives under a downstream
-    # mapInPandas and its range-partitioner sampling pass re-executes the
-    # verify subtree (see _embedding_cosine_pairs); opt-in via
-    # sort_via_cache
-    if ordered:
-        return sort_via_cache(
-            "dedup_fuzzy_levenshtein_ordered", out, "id_a", "id_b"
-        )
-    return out
 
 
 @query(
@@ -936,11 +897,11 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a recursive CTE, so cluster assignments are value-checked."""
     from tts_data_pipeline_spark.operators.components import connected_components
 
-    pairs = dedup_fuzzy_levenshtein(spark, sf_dir, ordered=False).select(
+    pairs = dedup_fuzzy_levenshtein(spark, sf_dir).select(
         "id_a", "id_b"
     )
     return (
-        connected_components(pairs, require_converged=True, pre_contract=True)
+        connected_components(pairs, pre_contract=True)
         .select(F.col("id"), F.col("component"))
         .orderBy("id")
     )
@@ -1102,10 +1063,10 @@ def dedup_apply_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tts_data_pipeline_spark.operators.components import connected_components
 
     c = table(spark, sf_dir, "customer")
-    pairs = dedup_fuzzy_levenshtein(spark, sf_dir, ordered=False).select(
+    pairs = dedup_fuzzy_levenshtein(spark, sf_dir).select(
         "id_a", "id_b"
     )
-    clusters = connected_components(pairs, require_converged=True, pre_contract=True)
+    clusters = connected_components(pairs, pre_contract=True)
     dropped = clusters.filter(F.col("id") != F.col("component")).select("id")
     return (
         c.join(dropped, c.c_custkey == dropped.id, "left_anti")
@@ -1203,9 +1164,7 @@ def s11_url_probe_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY id
     """,
 )
-def s5_remote_csv_scan(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def s5_remote_csv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S5 — remote CSV feeds end-to-end: URL table → distributed fake-HTTP
     GET (``sources/http.py:fetch_csv``) → declarative parse: split the
     body into lines, drop the header positionally, ``from_csv`` each
@@ -1234,9 +1193,6 @@ def s5_remote_csv_scan(
     return (
         parsed.select(F.col("rec.id").alias("id"), F.col("rec.label").alias("label"), "feed")
         .filter(F.col("id").isNotNull())
-        .transform(
-        opt_in_sorted("s5_remote_csv_scan_ordered", ordered, "id")
-    )
     )
 
 
@@ -1301,9 +1257,7 @@ def s9_html_css_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY d.doc_id, track_no
     """,
 )
-def s10_dynamic_render_scan(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def s10_dynamic_render_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S10 end-to-end: catalog URLs → browser render (deterministic fake
     hydrated DOM; Playwright slots into the same per-partition seam,
     reference ``crawler/utils.py:395-416`` + ``playwright_server.py:7-84``)
@@ -1336,9 +1290,6 @@ def s10_dynamic_render_scan(
             F.col("track_no").cast("long").alias("track_no"),
             "href",
         )
-        .transform(
-        opt_in_sorted("s10_dynamic_render_scan_ordered", ordered, "doc_id", "track_no")
-    )
     )
 
 
@@ -1459,7 +1410,7 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedup_ngram_jaccard_bucketed,
     )
 
-    pairs = dedup_ngram_jaccard_bucketed(spark, sf_dir, ordered=False).select(
+    pairs = dedup_ngram_jaccard_bucketed(spark, sf_dir).select(
         "id_a", "id_b"
     )
     return _cluster_inherited_split(spark, sf_dir, pairs)
@@ -1476,9 +1427,7 @@ def _cluster_inherited_split(
         connected_components,
     )
 
-    comps = connected_components(
-        pairs, require_converged=True, pre_contract=True
-    )
+    comps = connected_components(pairs, pre_contract=True)
     d = table(spark, sf_dir, "documents").select("doc_id")
     asg = d.join(comps, d["doc_id"] == comps["id"], "left").select(
         d["doc_id"],
@@ -1523,7 +1472,7 @@ def split_leakage_safe_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     two twins can't drift."""
     from tts_data_pipeline_spark.plans.extensions import dedup_minhash_lsh
 
-    pairs = dedup_minhash_lsh(spark, sf_dir, ordered=False).select(
+    pairs = dedup_minhash_lsh(spark, sf_dir).select(
         "id_a", "id_b"
     )
     return _cluster_inherited_split(spark, sf_dir, pairs)
@@ -1589,7 +1538,7 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         warn_as=("dedup_semantic_clusters", "dedup_semantic_clusters_ivf"),
     ).select("id_a", "id_b")
     return (
-        connected_components(pairs, require_converged=True, pre_contract=True)
+        connected_components(pairs, pre_contract=True)
         .select("id", "component")
         .orderBy("id")
     )
@@ -1631,11 +1580,11 @@ def dedup_semantic_clusters_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle replays the full IVF pair chain plus the recursive closure."""
     from tts_data_pipeline_spark.operators.components import connected_components
 
-    pairs = dedup_embedding_cosine_ivf(spark, sf_dir, ordered=False).select(
+    pairs = dedup_embedding_cosine_ivf(spark, sf_dir).select(
         "id_a", "id_b"
     )
     return (
-        connected_components(pairs, require_converged=True, pre_contract=True)
+        connected_components(pairs, pre_contract=True)
         .select("id", "component")
         .orderBy("id")
     )
@@ -1684,12 +1633,10 @@ def dedup_semantic_apply_survivors(
     rate of the corpus."""
     from tts_data_pipeline_spark.operators.components import connected_components
 
-    pairs = dedup_embedding_cosine_ivf(spark, sf_dir, ordered=False).select(
+    pairs = dedup_embedding_cosine_ivf(spark, sf_dir).select(
         "id_a", "id_b"
     )
-    clusters = connected_components(
-        pairs, require_converged=True, pre_contract=True
-    )
+    clusters = connected_components(pairs, pre_contract=True)
     dropped = clusters.filter(F.col("id") != F.col("component")).select("id")
     e = table(spark, sf_dir, "embeddings")
     return (
@@ -1736,9 +1683,7 @@ def dedup_semantic_apply_survivors(
     ORDER BY c.p_partkey
     """,
 )
-def k5_chunked_download(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def k5_chunked_download(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K5 — streamed chunked download end-to-end (reference
     ``crawler/download.py:62-117``: 8 KB ranged chunks, exponential
     backoff, 3 retries): a URL table fans out across partitions, each URL
@@ -1770,9 +1715,6 @@ def k5_chunked_download(
             F.md5("content").alias("checksum"),
             F.col("length_ok").cast("bigint").alias("length_ok"),
         )
-        .transform(
-        opt_in_sorted("k5_chunked_download_ordered", ordered, "p_partkey")
-    )
     )
 
 
@@ -1818,9 +1760,7 @@ def k5_chunked_download(
     ORDER BY f.book_id
     """,
 )
-def pipeline_e2e_crawl(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def pipeline_e2e_crawl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's crawler/metadata entry point
     (``crawler/metadata.py`` + ``crawler/utils.py``, SURVEY.md §3.1) as
     ONE Spark lineage:
@@ -1942,7 +1882,4 @@ def pipeline_e2e_crawl(
             "narrator_1_name",
             "books_in_category",
         )
-        .transform(
-        opt_in_sorted("pipeline_e2e_crawl_ordered", ordered, "book_id")
-    )
     )

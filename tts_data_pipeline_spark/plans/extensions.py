@@ -12,7 +12,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tts_data_pipeline_spark.cachereg import opt_in_sorted, sort_via_cache
 from tts_data_pipeline_spark.operators import dedup as D
 from tts_data_pipeline_spark.operators import similarity as S
 from tts_data_pipeline_spark.plans.registry import query
@@ -92,27 +91,18 @@ JACCARD_PAIR_CTES = """base AS (
     -- no ORDER BY: unordered catalog contract (see docstring)
     """,
 )
-def dedup_ngram_jaccard_bucketed(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def dedup_ngram_jaccard_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup verification stage: exact token-set Jaccard over (lang,
     size-bucket) candidate pairs — the bounded-pair-space pattern; LSH
-    (below) replaces the bucketing at scale.  UNORDERED pair set by
-    default (round-10: a terminal sort's range-sampler re-executes the
-    verify subtree — 2×); ``ordered=True`` restores the total order."""
+    (below) replaces the bucketing at scale.  UNORDERED pair set
+    (round-10: a terminal sort's range-sampler re-executes the verify
+    subtree — 2×)."""
     d = table(spark, sf_dir, "documents").withColumn(
         "size_bucket", F.floor(F.col("n_chars") / 100.0).cast("long")
     )
-    out = D.ngram_jaccard_pairs(
+    return D.ngram_jaccard_pairs(
         d, bucket_cols=("lang", "size_bucket"), threshold=0.5
     )
-    if ordered:
-        # opt-in sort costs one materialization, not a sampling-pass
-        # double run of the verify subtree (cachereg.sort_via_cache)
-        return sort_via_cache(
-            "dedup_ngram_jaccard_bucketed_ordered", out, "id_a", "id_b"
-        )
-    return out
 
 
 @query(
@@ -142,9 +132,7 @@ def dedup_ngram_jaccard_bucketed(
     -- no ORDER BY: unordered catalog contract (see docstring)
     """,
 )
-def dedup_shingle_containment(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def dedup_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric CONTAINMENT near-dup pairs over 3-word shingle sets
     within language buckets — the quote/subset detector resemblance
     misses (``operators/dedup.py::shingle_containment_pairs``: a
@@ -160,32 +148,19 @@ def dedup_shingle_containment(
     route.  Exact verify keeps results identical either way
     (property-tested)."""
     d = table(spark, sf_dir, "documents")
-    out = D.shingle_containment_pairs(d, bucket_cols=("lang",), threshold=0.8)
-    if ordered:
-        return sort_via_cache(
-            "dedup_shingle_containment_ordered", out, "id_a", "id_b"
-        )
-    return out
+    return D.shingle_containment_pairs(d, bucket_cols=("lang",), threshold=0.8)
 
 
 @query("dedup_minhash_xx64")
-def dedup_minhash_xx64(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def dedup_minhash_xx64(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH on engine-native xxhash64 seeds — the production hash
     (fastest, codegen'd) but rows-only checkable: xxhash64 has no DuckDB
     equivalent.  The FULL pipeline (signature→bands→verify) is value-checked
     by ``dedup_minhash_lsh`` below on the engine-portable md5 hash.
     shingle→minhash→band→bucket-join: O(n·bands) shuffle, never O(n²).
-    UNORDERED pair set by default (round-10); ordered=True restores the
-    total order."""
+    UNORDERED pair set (round-10)."""
     d = table(spark, sf_dir, "documents")
-    out = D.minhash_lsh_pairs(d, jaccard_threshold=0.5)
-    if ordered:
-        return sort_via_cache(
-            "dedup_minhash_xx64_ordered", out, "id_a", "id_b"
-        )
-    return out
+    return D.minhash_lsh_pairs(d, jaccard_threshold=0.5)
 
 
 @query("dedup_simhash_blake2b")
@@ -308,9 +283,7 @@ MINHASH_PAIR_CTES = f"""t AS (
     -- no ORDER BY: unordered catalog contract (see docstring)
     """,
 )
-def dedup_minhash_lsh(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH with the FULL pipeline value-checked: 3-word shingles →
     8-seed md5 MinHash signature → 4 bands × 2 rows → within-band
     equi-join candidates → exact shingle-Jaccard ≥ 0.5 verify.  Same
@@ -351,7 +324,7 @@ def dedup_minhash_lsh(
     )
     inter = F.size(F.array_intersect("tok_a", "tok_b"))
     union = F.size("tok_a") + F.size("tok_b") - inter
-    out = (
+    return (
         pairs.withColumn(
             "jaccard",
             D.eval_once(
@@ -361,14 +334,6 @@ def dedup_minhash_lsh(
         .filter(F.col("jaccard") >= 0.5)
         .select("id_a", "id_b", "jaccard")
     )
-    # ordered=False for pair CONSUMERS feeding mapInPandas (see
-    # coverage._embedding_cosine_pairs: the sampling-pass double-run);
-    # opt-in via sort_via_cache
-    if ordered:
-        return sort_via_cache(
-            "dedup_minhash_lsh_ordered", out, "id_a", "id_b"
-        )
-    return out
 
 
 @query(
@@ -446,10 +411,10 @@ def dedup_minhash_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
         connected_components,
     )
 
-    pairs = dedup_minhash_lsh(spark, sf_dir, ordered=False).select(
+    pairs = dedup_minhash_lsh(spark, sf_dir).select(
         "id_a", "id_b"
     )
-    clusters = connected_components(pairs, require_converged=True, pre_contract=True)
+    clusters = connected_components(pairs, pre_contract=True)
     dropped = clusters.filter(F.col("id") != F.col("component")).select("id")
     d = table(spark, sf_dir, "documents")
     return (
@@ -554,9 +519,7 @@ def sim_bruteforce_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query("sim_lsh_ann_topk_rng")
-def sim_lsh_ann_topk_rng(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def sim_lsh_ann_topk_rng(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale-path ANN on seeded-numpy random hyperplanes (rows-only: the
     RNG has no DuckDB equivalent — ``sim_lsh_ann_topk`` below is the
     value-checked fixed-plane twin): hyperplane bucket join + exact cosine
@@ -564,9 +527,7 @@ def sim_lsh_ann_topk_rng(
     tests/test_dedup_similarity.py (test_lsh_ann_recall_vs_bruteforce)."""
     em = table(spark, sf_dir, "embeddings")
     q = em.filter(F.col("vec_id") < 8)
-    return S.lsh_ann_topk(em, q, k=5).transform(
-        opt_in_sorted("sim_lsh_ann_topk_rng_ordered", ordered, "query_id", "rank")
-    )
+    return S.lsh_ann_topk(em, q, k=5)
 
 
 @query(
@@ -718,9 +679,7 @@ def emb_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query("dedup_minhash_ml")
-def dedup_minhash_ml(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def dedup_minhash_ml(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dup pairs via Spark ML's MinHashLSH /
     approxSimilarityJoin (rows-only: ml hash coefficients aren't
     DuckDB-replayable; the hand-built LSH above is the oracle-adjacent
@@ -746,7 +705,9 @@ def dedup_minhash_ml(
     feats = tf.transform(d)
     lsh = MinHashLSH(inputCol="features", outputCol="hashes", seed=42, numHashTables=8)
     model = lsh.fit(feats)
-    pairs = (
+    # unordered (round-10): rows-only entry, a terminal sort pays the
+    # range-sampler re-execution for no checkable benefit
+    return (
         model.approxSimilarityJoin(feats, feats, 0.5, distCol="jaccard_dist")
         .select(
             F.col("datasetA.doc_id").alias("id_a"),
@@ -755,14 +716,6 @@ def dedup_minhash_ml(
         )
         .filter(F.col("id_a") < F.col("id_b"))
     )
-    # unordered (round-10): rows-only entry, terminal sort pays the
-    # range-sampler re-execution for no checkable benefit; round-11
-    # (ADVICE): same ordered opt-in as the rest of the pair family
-    if ordered:
-        return sort_via_cache(
-            "dedup_minhash_ml_ordered", pairs, "id_a", "id_b"
-        )
-    return pairs
 
 
 def _lsh_planes(n_planes: int = 8, dim: int = 64, seed: int = 7):
@@ -1216,9 +1169,7 @@ def _snm_key_col(tag: str):
     -- no ORDER BY: unordered catalog contract (see docstring)
     """,
 )
-def dedup_sorted_neighborhood(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sorted-neighborhood near-dup detection (Hernandez & Stolfo,
     SIGMOD'95 — the SORT-based blocking family, complementing the
     hash-based LSH/grid entries): rank every document by a content sort
@@ -1241,17 +1192,11 @@ def dedup_sorted_neighborhood(
     over |buckets| rows (same bounded-histogram adjudication as
     ``operators/pairgrid``); the neighbor join shuffles on the
     high-cardinality rank, not a 10-key bucket column.  UNORDERED pair
-    set by default (terminal-sort sampling-pass rule, the w11
-    precedent); ``ordered=True`` restores the total order."""
+    set (terminal-sort sampling-pass rule, the w11 precedent)."""
     d = table(spark, sf_dir, "documents")
-    out = _snm_pass(d, _snm_key_col("p1"), "p1").select(
+    return _snm_pass(d, _snm_key_col("p1"), "p1").select(
         "id_a", "id_b", "rank_dist", F.round("j", 4).alias("jaccard")
     )
-    if ordered:
-        return sort_via_cache(
-            "dedup_sorted_neighborhood_ordered", out, "id_a", "id_b"
-        )
-    return out
 
 
 @query(
@@ -1269,9 +1214,7 @@ def dedup_sorted_neighborhood(
     -- no ORDER BY: unordered catalog contract (see docstring)
     """,
 )
-def dedup_snm_multipass(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def dedup_snm_multipass(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-pass sorted-neighborhood dedup — the classic fix for the
     single-pass recall trade (Hernandez & Stolfo run several passes with
     independent sort keys and union the matches): pass 1 sorts by the
@@ -1290,15 +1233,10 @@ def dedup_snm_multipass(
     allp = _snm_pass(d, _snm_key_col("p1"), "p1").unionByName(
         _snm_pass(d, _snm_key_col("p2"), "p2")
     )
-    out = allp.groupBy("id_a", "id_b").agg(
+    return allp.groupBy("id_a", "id_b").agg(
         F.round(F.max("j"), 4).alias("jaccard"),
         F.count(F.lit(1)).alias("n_passes"),
     )
-    if ordered:
-        return sort_via_cache(
-            "dedup_snm_multipass_ordered", out, "id_a", "id_b"
-        )
-    return out
 
 
 @query(

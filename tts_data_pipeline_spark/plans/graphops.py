@@ -320,7 +320,6 @@ SELECT node, label AS community FROM l{rounds} ORDER BY node"""
 # fixpoint is round 2 (sf0.001: 4 nodes / 2 communities) and round 20
 # (sf0.01: 145 nodes / 5 communities).
 from tts_data_pipeline_spark.conf import (  # noqa: E402
-    LPA_BUILD_WIDTH,
     LPA_MAX_ROUNDS,
     LPA_MIN_COOCCUR,
     PAIRGRID_S_MAX,
@@ -328,15 +327,6 @@ from tts_data_pipeline_spark.conf import (  # noqa: E402
     dial,
 )
 
-
-def _lpa_build_width(spark: SparkSession) -> int:
-    """Resolve the converged-LPA build width: the dial if set (≥ 1),
-    else cores (``defaultParallelism``) — the dial's 0 default means
-    auto, which ``conf.dial``'s ≥ 1 contract can't express.  Delegates
-    to :func:`conf.width_dial` (the pattern, generalized in r15)."""
-    from tts_data_pipeline_spark.conf import width_dial
-
-    return width_dial(spark, LPA_BUILD_WIDTH)
 
 # SEMANTIC dial default (spark.graft.lpa.min_cooccur): the shipped
 # oracle pins this value; the Spark side reads the dial at plan build
@@ -856,10 +846,10 @@ def graph_label_propagation_converged(
     # cleanly: the ~10 build stages + one stage per round otherwise run
     # at the session's shuffle width — 200 in the driver's plain session,
     # where task-scheduling overhead on this node-sized graph dominated
-    # the sf0.01 wall (31 s; 7 s under the guard).  Width dial:
-    # spark.graft.lpa.build_width, 0 = auto (cores).  Labelling is
-    # identical for any width — pure partitioning.
-    width = _lpa_build_width(spark)
+    # the sf0.01 wall (31 s; 7 s under the guard).  Width = cores
+    # (defaultParallelism); labelling is identical for any width — pure
+    # partitioning.
+    width = spark.sparkContext.defaultParallelism
     with scoped_conf(spark, {"spark.sql.shuffle.partitions": width}):
         edges = conv_cooccur_edges(spark, sf_dir)
         edges = cache_replacing(
@@ -1033,7 +1023,7 @@ def graph_kcore_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixpoint (no probabilistic signature, no confirm job; the count
     rides the persist action's ``observe``).  Like the converged-LPA
     entry this loop EXECUTES at build time under the same scoped
-    shuffle-width guard (``spark.graft.lpa.build_width``), with
+    shuffle-width guard (cores wide), with
     per-round scratch-parquet persists for lineage truncation.  The
     oracle replays a static {rounds}-round unroll — valid because the
     peel is idempotent past convergence; the margin over the measured
@@ -1044,7 +1034,7 @@ def graph_kcore_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     (map-side combinable) plus two node-keyed semi-joins — all keyed
     shuffles on node ids, state is the shrinking edge set itself,
     persisted per round."""
-    width = _lpa_build_width(spark)
+    width = spark.sparkContext.defaultParallelism
     with scoped_conf(spark, {"spark.sql.shuffle.partitions": width}):
         store = RoundStore("kcore_state_")
 

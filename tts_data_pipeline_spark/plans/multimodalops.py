@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 from tts_data_pipeline_spark.multimodal import audio as A
 from tts_data_pipeline_spark.multimodal import image as I
 from tts_data_pipeline_spark.multimodal import video as V
-from tts_data_pipeline_spark.cachereg import opt_in_sorted
 from tts_data_pipeline_spark.plans.registry import query
 from tts_data_pipeline_spark.session import memo_columns
 from tts_data_pipeline_spark.sources import table
@@ -65,9 +64,7 @@ def _payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY ch.path
     """,
 )
-def mm_image_features(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def mm_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary → decode (fake codec, real plumbing) → per-image channel
     stats.  One mapInPandas chain, no shuffle until the final sort.
 
@@ -91,8 +88,6 @@ def mm_image_features(
         feats.std_rgb[1].alias("std_g"),
         feats.std_rgb[2].alias("std_b"),
         "brightness",
-    ).transform(
-        opt_in_sorted("mm_image_features_ordered", ordered, "path")
     )
 
 
@@ -134,9 +129,7 @@ FROM nfs n LEFT JOIN agg a ON n.path = a.path
 ORDER BY n.path
 """,
 )
-def mm_video_motion(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def mm_video_motion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary → frame-sample+decode (one row per sampled frame) → per-video
     motion aggregate.  Frame rows shuffle by video key; per-group state is
     bounded by sampled-frame count, not video length.
@@ -153,9 +146,7 @@ def mm_video_motion(
         (20 + F.col("doc_id") % 30).cast("int").alias("n_frames"),
     )
     frames = V.decode_sampled_frames(p, every_k=10, height=8, width=8)
-    return V.frame_motion_features(frames).transform(
-        opt_in_sorted("mm_video_motion_ordered", ordered, "path")
-    )
+    return V.frame_motion_features(frames)
 
 
 @query(
@@ -168,9 +159,7 @@ def mm_video_motion(
     FROM documents GROUP BY source ORDER BY book_id
     """,
 )
-def mm_audio_book_concat(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def mm_audio_book_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2-X4 end-to-end: per-part decode (fake codec) → per-book ordered
     concat + resample + peak-normalize (reference ``process_all.py:409-438``)
     — grouped-map with per-book bounded state.  Parts = documents grouped by
@@ -196,8 +185,6 @@ def mm_audio_book_concat(
         "n_parts",
         "sr",
         F.size("samples").cast("long").alias("n_samples"),
-    ).transform(
-        opt_in_sorted("mm_audio_book_concat_ordered", ordered, "book_id")
     )
 
 
@@ -271,9 +258,7 @@ SELECT doc_id,
 FROM agg ORDER BY doc_id
 """,
 )
-def mm_audio_qc(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def mm_audio_qc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio QC stats — the gate the reference applies before accepting a
     book's audio (``process_all.py:465-510`` checks sample rate/duration;
     peak/RMS/clipping are the standard additions): binary payload → fake
@@ -304,9 +289,6 @@ def mm_audio_qc(
             r4(F.sqrt(sumsq / n)).alias("rms"),
             r4(clip.cast("double") / n).alias("clip_ratio"),
         )
-        .transform(
-        opt_in_sorted("mm_audio_qc_ordered", ordered, "doc_id")
-    )
     )
 
 
@@ -338,9 +320,7 @@ SELECT doc_id,
 FROM agg ORDER BY doc_id
 """,
 )
-def mm_audio_silence_trim(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def mm_audio_silence_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X3' — leading/trailing silence trim over decoded audio (the gate a
     TTS segmenter applies before alignment), as pure array expressions:
     decode (fake codec: bytes tiled 4x), flag ``|x| < 0.125`` (exactly
@@ -366,9 +346,6 @@ def mm_audio_silence_trim(
             F.col("t.trail").alias("trail"),
             F.size("t.trimmed").cast("bigint").alias("n_trimmed"),
         )
-        .transform(
-        opt_in_sorted("mm_audio_silence_trim_ordered", ordered, "doc_id")
-    )
     )
 
 
@@ -396,9 +373,7 @@ FROM d LEFT JOIN agg ON d.doc_id = agg.doc_id
 ORDER BY d.doc_id
 """,
 )
-def mm_audio_segment_cut(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def mm_audio_segment_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X6 — segment cut as a pure array slice: decode, cut
     [0.01 s, 0.06 s) at 16 kHz (0-based samples 160..959), report exact
     integer stats of the cut window.  The reference shells out to ffmpeg
@@ -433,9 +408,6 @@ def mm_audio_segment_cut(
             .cast("bigint")
             .alias("max_abs_u"),
         )
-        .transform(
-        opt_in_sorted("mm_audio_segment_cut_ordered", ordered, "doc_id")
-    )
     )
 
 
@@ -472,9 +444,7 @@ FROM d LEFT JOIN agg ON d.doc_id = agg.doc_id
 ORDER BY d.doc_id
 """,
 )
-def mm_audio_resample(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def mm_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X4 — linear-interpolation resample (librosa.resample stand-in,
     reference ``process_all.py:394-398``) at an exact 2x upsample
     (16 kHz → 32 kHz), Arrow-batched ``mapInPandas`` over the decoded
@@ -528,9 +498,6 @@ def mm_audio_resample(
             .cast("bigint")
             .alias("max_abs_q"),
         )
-        .transform(
-        opt_in_sorted("mm_audio_resample_ordered", ordered, "doc_id")
-    )
     )
 
 
@@ -561,9 +528,7 @@ SELECT fp, CAST(COUNT(*) AS BIGINT) AS n_docs, MIN(doc_id) AS rep_doc_id
 FROM fps GROUP BY fp ORDER BY fp
 """,
 )
-def mm_audio_fingerprint_dedup(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def mm_audio_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio NEAR-dup via acoustic fingerprint (Haitsma & Kalker 2002,
     the energy-difference scheme behind industrial audio matching):
     decode → 16-sample frame energies → one bit per adjacent-frame
@@ -622,9 +587,6 @@ def mm_audio_fingerprint_dedup(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
             F.min("doc_id").alias("rep_doc_id"),
         )
-        .transform(
-        opt_in_sorted("mm_audio_fingerprint_dedup_ordered", ordered, "fp")
-    )
     )
 
 
@@ -696,9 +658,7 @@ def _dhash_word_cols() -> tuple:
 
 
 @query("mm_image_dhash_dedup", oracle=_dhash_oracle())
-def mm_image_dhash_dedup(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def mm_image_dhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image NEAR-dup via difference hash (dHash — the standard cheap
     perceptual hash: downsample to a 9×8 gray grid, one bit per
     horizontal gradient sign, 64 bits): re-encoded/resized copies of an
@@ -724,7 +684,4 @@ def mm_image_dhash_dedup(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
             F.min("path").alias("rep_path"),
         )
-        .transform(
-        opt_in_sorted("mm_image_dhash_dedup_ordered", ordered, "dhash_lo", "dhash_hi")
-    )
     )

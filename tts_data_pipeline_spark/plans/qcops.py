@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 
 from tts_data_pipeline_spark.multimodal import align
 from tts_data_pipeline_spark.operators import qc
-from tts_data_pipeline_spark.cachereg import opt_in_sorted
 from tts_data_pipeline_spark.plans.registry import query
 from tts_data_pipeline_spark.sources import table
 
@@ -45,9 +44,7 @@ from tts_data_pipeline_spark.sources import table
     ORDER BY book_id
     """,
 )
-def qc_wer_gate(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def qc_wer_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X7+X8+O4+F7 — the reference's QC flow (``post_process.py:125-376``)
     as one keyed plan: per-book 20% sample → ASR → WER → avg → gate."""
     d = table(spark, sf_dir, "documents")
@@ -58,8 +55,6 @@ def qc_wer_gate(
     )
     return qc.qc_wer_gate(
         seg, sample_pct=0.2, wer_threshold=0.3
-    ).transform(
-        opt_in_sorted("qc_wer_gate_ordered", ordered, "book_id")
     )
 
 
@@ -102,9 +97,7 @@ ORDER BY book_id, line_id
 
 
 @query("align_segments_pipeline", oracle=ALIGN_ORACLE)
-def align_segments_pipeline(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def align_segments_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X5+F5 — forced-alignment pipeline.  ORACLE-BACKED: the fake aligner
     is closed-form over integer cumulative weights with the shared
     floor-rounding rule (``multimodal/align.py``), so DuckDB replays the
@@ -128,9 +121,7 @@ def align_segments_pipeline(
     )
     segments = align.align_books(books)
     kept, _ = align.filter_segment_outliers(segments, 3.0, 12.0)
-    return kept.transform(
-        opt_in_sorted("align_segments_pipeline_ordered", ordered, "book_id", "line_id")
-    )
+    return kept
 
 
 _E2E_ALIGN_ORACLE = """

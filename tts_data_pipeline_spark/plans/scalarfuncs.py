@@ -419,16 +419,14 @@ def c15b_cardinal_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection).  The explicit partition count bypasses AQE's
     small-output coalescing, which otherwise folds the tiny sf0.1 frame
     to ONE partition and serializes the interpreted eval.  Width is the
-    ``spark.graft.cardinal.range_width`` dial, 0 = auto (cores) — the
-    r14 literal 32 capped the projection at 32 tasks on any cluster
-    (r14 verdict #3); rows identical for any width."""
-    from tts_data_pipeline_spark.conf import CARDINAL_RANGE_WIDTH, width_dial
-
+    core count (``defaultParallelism``) — the r14 literal 32 capped the
+    projection at 32 tasks on any cluster (r14 verdict #3); rows
+    identical for any width."""
     o = table(spark, sf_dir, "orders")
     num = (F.col("o_orderkey") * 37) % 1000000
     return (
         o.select("o_orderkey", num.alias("num"))
-        .repartitionByRange(width_dial(spark, CARDINAL_RANGE_WIDTH), "o_orderkey")
+        .repartitionByRange(spark.sparkContext.defaultParallelism, "o_orderkey")
         .select(
             "o_orderkey",
             "num",

@@ -17,7 +17,7 @@ plans/registry.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from tts_data_pipeline_spark.operators import dedup as D
@@ -30,6 +30,25 @@ from tts_data_pipeline_spark.plans.extensions import _md5_long
 # the whole point is that the sketch does not grow with the corpus.
 _CMS_D = 4
 _CMS_W = 256
+
+
+def cms_coords(key: Column) -> Column:
+    """The Count-Min coordinates of a string Column: an array of
+    ``_CMS_D`` structs ``(j, bucket)``, bucket = md5 of ``"{j}:{key}"``
+    mod ``_CMS_W``.  Explode it to get one row per sketch row; the
+    oracles replay the same hash from the same two constants."""
+    return F.array(
+        *[
+            F.struct(
+                F.lit(j).alias("j"),
+                F.pmod(
+                    _md5_long(F.concat(F.lit(f"{j}:"), key)), F.lit(_CMS_W)
+                ).alias("bucket"),
+            )
+            for j in range(_CMS_D)
+        ]
+    )
+
 # Heavy-hitter threshold φ = 1/50 = 2% of the token stream, compared in
 # integers (est·50 ≥ N) so no float crosses the engine boundary.
 _CMS_PHI_DEN = 50
@@ -152,7 +171,8 @@ def agg_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     and take the same min, so a Spark-side hashing or combine regression
     flips the driver hash — the exact count rides along only to pin the
     one-sided error contract (``overest_ok``: CMS never underestimates);
-    geometry constants at module top (``_CMS_D``/``_CMS_W``).
+    geometry constants and the coordinate builder at module top
+    (``_CMS_D``/``_CMS_W``, ``cms_coords``).
 
     100 TB shape: the sketch build is ONE aggregation whose output is
     fixed at d·w cells no matter the corpus — partial (map-side) combine
@@ -183,22 +203,7 @@ def agg_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
         toks.groupBy("tok").agg(F.count("*").alias("exact_cnt")),
     )
     hrows = cnt.select(
-        "tok",
-        "exact_cnt",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("j"),
-                        F.pmod(
-                            _md5_long(F.concat(F.lit(f"{j}:"), F.col("tok"))),
-                            F.lit(_CMS_W),
-                        ).alias("bucket"),
-                    )
-                    for j in range(_CMS_D)
-                ]
-            )
-        ).alias("h"),
+        "tok", "exact_cnt", F.explode(cms_coords(F.col("tok"))).alias("h")
     ).select("tok", "exact_cnt", "h.j", "h.bucket")
     cells = hrows.groupBy("j", "bucket").agg(F.sum("exact_cnt").alias("cell"))
     tot = cnt.agg(F.sum("exact_cnt").alias("n"))

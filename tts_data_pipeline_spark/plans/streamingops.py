@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tts_data_pipeline_spark.plans.registry import query
+from tts_data_pipeline_spark.plans.sketches import _CMS_D, _CMS_W, cms_coords
 from tts_data_pipeline_spark.session import ensure_utc
 from tts_data_pipeline_spark.streaming.events import (
     run_stateful_sessions_to_memory,
@@ -513,7 +514,7 @@ def stream_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("user_id", "event_type", "hr", "ts")
 
 
-STREAM_CMS_ORACLE = """
+STREAM_CMS_ORACLE = f"""
 WITH e AS (
   SELECT time_bucket(INTERVAL '1 day', ts) AS win_start, user_id
   FROM events
@@ -525,8 +526,8 @@ WITH e AS (
   SELECT pu.win_start, pu.user_id, pu.c, j.j,
          ('0x' || substr(md5(CAST(j.j AS VARCHAR) || ':'
                              || CAST(pu.user_id AS VARCHAR)), 1, 15))
-           ::BIGINT % 256 AS bucket
-  FROM pu CROSS JOIN (SELECT unnest(range(4)) AS j) j
+           ::BIGINT % {_CMS_W} AS bucket
+  FROM pu CROSS JOIN (SELECT unnest(range({_CMS_D})) AS j) j
 ), cells AS (
   SELECT win_start, j, bucket, SUM(c) AS cell
   FROM hr GROUP BY 1, 2, 3
@@ -572,8 +573,6 @@ def stream_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tts_data_pipeline_spark.streaming.events import (
         run_stream_cms_to_memory,
     )
-    from tts_data_pipeline_spark.plans.extensions import _md5_long
-
     from tts_data_pipeline_spark.sources import table
 
     ensure_utc(spark)
@@ -583,11 +582,16 @@ def stream_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pu = ev.groupBy("win_start", "user_id").agg(F.count("*").alias("c"))
     # window totals FROM THE SKETCH (r15, §2.4 remove a shuffle branch):
-    # every event contributes exactly one count to each of the d rows, so
-    # Σ cell over the buckets of any fixed row j IS the window's event
-    # count — identical to re-aggregating pu (the oracle's tot), without
-    # the second pass over the per-user rollup.  cells is the d·w-bounded
-    # memory-sink table, so this branch is sketch-sized, not data-sized.
+    # every event the stream ingests adds exactly one count to each of
+    # the d rows, so Σ cell over the buckets of row j = 0 is the window's
+    # ingested event count.  That equals re-aggregating pu (the oracle's
+    # tot) only because the runner replays the events in ONE micro-batch
+    # into a COMPLETE-mode sink, so the 30-minute watermark never drops a
+    # late row; a multi-batch replay or an append/update sink would let
+    # tot fall below pu's totals and move the threshold.  Pinned by
+    # tests/test_sketches.py::test_stream_cms_row0_sums_to_window_counts.
+    # cells is the d·w-bounded memory-sink table, so this branch is
+    # sketch-sized, not data-sized.
     tot = (
         cells.filter(F.col("j") == 0)
         .groupBy("win_start")
@@ -597,25 +601,7 @@ def stream_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
         "win_start",
         "user_id",
         "c",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("j"),
-                        F.pmod(
-                            _md5_long(
-                                F.concat(
-                                    F.lit(f"{j}:"),
-                                    F.col("user_id").cast("string"),
-                                )
-                            ),
-                            F.lit(256),
-                        ).alias("bucket"),
-                    )
-                    for j in range(4)
-                ]
-            )
-        ).alias("h"),
+        F.explode(cms_coords(F.col("user_id").cast("string"))).alias("h"),
     ).select("win_start", "user_id", "c", "h.j", "h.bucket")
     est = (
         hr.join(F.broadcast(cells), ["win_start", "j", "bucket"])

@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from tts_data_pipeline_spark.functions import vi_text as V
 from tts_data_pipeline_spark.operators.grouping import sentence_group_by_threshold
-from tts_data_pipeline_spark.cachereg import opt_in_sorted
 from tts_data_pipeline_spark.plans.registry import query
 from tts_data_pipeline_spark.sources import table
 from tts_data_pipeline_spark.sources.readers import spread
@@ -320,9 +319,7 @@ ORDER BY group_key, group_idx
 
 
 @query("tx_sentence_grouping_exact", oracle=X1_EXACT_ORACLE)
-def tx_sentence_grouping_exact(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def tx_sentence_grouping_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X1 exact: sentences derived from documents (sentence = 10-word
     slices), folded per-doc until >=20 words per group via applyInPandas —
     the reference's genuinely stateful operator (``process_all.py:305-335``).
@@ -332,13 +329,11 @@ def tx_sentence_grouping_exact(
     Invariants additionally property-tested in tests/test_grouping.py.
 
     Ordering contract (round-11, found by the bench-tail audit at
-    29 s/sf0.1): UNORDERED row set by default — the terminal global sort
-    sat directly over the applyInPandas fold, so the range-sampler ran
-    the whole Python fold TWICE (measured 22.1 → 10.7 s warm without
-    it; the r9/r10 sampling-pass class, this time on a grouped-map).
-    ``ordered=True`` restores the total (group_key, group_idx) order
-    through ``sort_via_cache`` (one materialization).  The driver's
-    value hash is row-order-insensitive."""
+    29 s/sf0.1): UNORDERED row set — a terminal global sort sat
+    directly over the applyInPandas fold, so the range-sampler ran the
+    whole Python fold TWICE (measured 22.1 → 10.7 s warm without it;
+    the r9/r10 sampling-pass class, this time on a grouped-map).  The
+    driver's value hash is row-order-insensitive."""
     d = spread(table(spark, sf_dir, "documents"))
     words = F.split("text", " ")
     sentences = (
@@ -361,17 +356,7 @@ def tx_sentence_grouping_exact(
         )
         .filter(F.length("sentence") > 0)
     )
-    out = sentence_group_by_threshold(sentences, threshold=20)
-    if ordered:
-        from tts_data_pipeline_spark.cachereg import opt_in_sorted, sort_via_cache
-
-        return sort_via_cache(
-            "tx_sentence_grouping_exact_ordered",
-            out,
-            "group_key",
-            "group_idx",
-        )
-    return out
+    return sentence_group_by_threshold(sentences, threshold=20)
 
 
 @query(
@@ -1127,9 +1112,7 @@ _E2E_ORACLE = (
 
 
 @query("pipeline_e2e_preprocess", oracle=_E2E_ORACLE)
-def pipeline_e2e_preprocess(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def pipeline_e2e_preprocess(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's ENTIRE pre-processing entry point
     (``process_all.py`` §3.2: PDF → extract → normalize → sentence split →
     filter → sequential grouping → metadata upsert) as ONE Spark lineage,
@@ -1274,9 +1257,6 @@ def pipeline_e2e_preprocess(
             ),
             status.alias("status"),
         )
-        .transform(
-        opt_in_sorted("pipeline_e2e_preprocess_ordered", ordered, "doc_id")
-    )
     )
 
 

@@ -27,23 +27,38 @@ from tts_data_pipeline_spark import schemas
 # ---------------------------------------------------------------------------
 
 
+def _checked_footer(sf_dir: str, name: str):
+    """The parquet footer schema of driver table ``name``, read with
+    pyarrow (no Spark job; a directory dataset is read from its first part
+    file).  Raises ``ValueError`` naming every column that
+    ``schemas.TEST_TABLES[name]`` declares and the file lacks: a
+    schema-pinned scan would read such a column as all null."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    if os.path.isdir(path):
+        part = next(f for f in sorted(os.listdir(path)) if f.endswith(".parquet"))
+        path = os.path.join(path, part)
+    footer = pq.read_schema(path)
+    missing = [c for c in schemas.TEST_TABLES[name].names if c not in footer.names]
+    if missing:
+        raise ValueError(f"{path} lacks declared column(s) {missing}")
+    return footer
+
+
 def events_nanos(spark: SparkSession, sf_dir: str) -> bool:
     """Whether the events file stores its ts as TIMESTAMP(NANOS), from the
-    parquet footer; if so, turn on the nanos-as-long legacy read, which
+    parquet footer (:func:`_checked_footer`, so a file missing a declared
+    column raises); if so, turn on the nanos-as-long legacy read, which
     Spark's vectorized parquet reader needs to scan such a column at all.
 
     The driver's generator has shipped both NANOS and MICROS files across
     rounds.  Micros files read natively, so the session-wide conf is set
     only for a nanos file, and only here."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    path = os.path.join(sf_dir, "events.parquet")
-    if os.path.isdir(path):
-        part = next(f for f in sorted(os.listdir(path)) if f.endswith(".parquet"))
-        path = os.path.join(path, part)
-    nanos = getattr(pq.read_schema(path).field("ts").type, "unit", "us") == "ns"
+    footer = _checked_footer(sf_dir, "events")
+    nanos = getattr(footer.field("ts").type, "unit", "us") == "ns"
     if nanos:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return nanos
@@ -54,7 +69,8 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     declared schema, ``schemas.TEST_TABLES[name]``: no footer-inference
     job, and a file whose column type differs from the declared one fails
     at scan instead of reading as something else.  A declared column the
-    file lacks reads as null.
+    file lacks raises ``ValueError`` here (:func:`_checked_footer`; the
+    footer is read once per call, by pyarrow).
 
     ``events`` declares ``ts`` as TIMESTAMP_NTZ (what a micros file holds)
     and returns it cast to TimestampType.  A file storing
@@ -65,6 +81,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     schema = schemas.TEST_TABLES[name]
     path = f"{sf_dir}/{name}.parquet"
     if name != "events":
+        _checked_footer(sf_dir, name)
         return spark.read.schema(schema).parquet(path)
     # Pin the session to UTC whenever timestamps enter a plan: the
     # driver's session may run in any host timezone, and collected

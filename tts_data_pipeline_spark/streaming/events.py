@@ -1189,13 +1189,7 @@ def run_stream_dedup_watermarked(
     )
 
 
-def run_stream_cms_to_memory(
-    spark: SparkSession,
-    sf_dir: str,
-    n_rows: int = 4,
-    width: int = 256,
-    window: str = "1 day",
-) -> DataFrame:
+def run_stream_cms_to_memory(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min cells per tumbling window maintained BY THE STREAMING
     RUNTIME: each event explodes into its d portable-md5 (row, bucket)
     coordinates pre-watermark, and the windowed count aggregate IS the
@@ -1203,35 +1197,18 @@ def run_stream_cms_to_memory(
     distinct keys the stream carries, which is the whole reason to sketch
     a stream instead of counting it (a per-key windowed count's state
     grows with key cardinality; this one cannot).  Complete-mode memory
-    sink for the finite replay, same contract as ``run_stream_to_memory``."""
-    from tts_data_pipeline_spark.plans.extensions import _md5_long
+    sink for the finite replay, same contract as ``run_stream_to_memory``.
+    The (row, bucket) coordinates come from ``plans.sketches.cms_coords``;
+    windows are one day."""
+    from tts_data_pipeline_spark.plans.sketches import cms_coords
 
     ev = read_events_stream(spark, sf_dir).select("ts", "user_id")
     rows = ev.select(
-        "ts",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("j"),
-                        F.pmod(
-                            _md5_long(
-                                F.concat(
-                                    F.lit(f"{j}:"),
-                                    F.col("user_id").cast("string"),
-                                )
-                            ),
-                            F.lit(width),
-                        ).alias("bucket"),
-                    )
-                    for j in range(n_rows)
-                ]
-            )
-        ).alias("h"),
+        "ts", F.explode(cms_coords(F.col("user_id").cast("string"))).alias("h")
     ).select("ts", "h.j", "h.bucket")
     agg = (
         rows.withWatermark("ts", "30 minutes")
-        .groupBy(F.window("ts", window).alias("win"), "j", "bucket")
+        .groupBy(F.window("ts", "1 day").alias("win"), "j", "bucket")
         .count()
         .select(
             F.col("win.start").alias("win_start"),
