@@ -163,7 +163,7 @@ def test_lpa_propagate_converged_fixpoint_and_oscillation(spark):
     on the min label (hand-traced: [1,2,3,4,5] -> [2,1,2,3,1] ->
     [1,2,1,1,2] -> [2,1,1,1,1] -> all-1 -> all-1), i.e. MORE than the
     catalog's fixed 3; a single edge oscillates with period 2 and must
-    be detected, not spun to the cap."""
+    be detected and raised, not spun to the cap."""
     import pytest
     from pyspark.sql import functions as F
 
@@ -185,15 +185,11 @@ def test_lpa_propagate_converged_fixpoint_and_oscillation(spark):
     assert stats["rounds_run"] == 5  # > the fixed-round entry's 3
 
     edge = both_ways([(10, 20)])
-    with pytest.raises(RuntimeError, match="oscillation"):
-        lpa_propagate_converged(edge, max_rounds=10)
-    _, stats = lpa_propagate_converged(
-        edge, max_rounds=10, require_convergence=False
-    )
-    assert stats["converged"] is False
-    assert stats["oscillating"] is True
     # detected as soon as round k's signature matches round k-2's
-    assert stats["rounds_run"] <= 3
+    with pytest.raises(
+        RuntimeError, match=r"no fixpoint in [1-3] rounds \(period-2"
+    ):
+        lpa_propagate_converged(edge, max_rounds=10)
 
 
 def test_pre_contract_components_identical_and_forest_sized(spark):
@@ -264,72 +260,34 @@ def test_lpa_converged_entry_self_voting_breaks_pendant_oscillation(spark):
     assert {r.node: r.label for r in labels.collect()} == {10: 10, 20: 10}
 
 
-def test_lpa_dials_read_and_oracle_constants_derived(spark):
-    """Round-11 dial promotion: the LPA/IVF semantic dials must (a) be
-    DERIVED into the oracle-side constants so dial default and oracle
-    unroll can't drift (the r10 ADVICE defect: a 28-round oracle beside
-    a 40-round cap), and (b) actually be READ at plan build — proven by
-    observing the behavior change when set."""
-    from tts_data_pipeline_spark.conf import (
-        IVF_NPROBE,
-        LPA_MAX_ROUNDS,
-        LPA_MIN_COOCCUR,
-    )
-    from tts_data_pipeline_spark.plans import coverage, graphops
-
-    # (a) derivation equalities — these ARE the no-drift guarantee
-    assert graphops._CONV_ORACLE_ROUNDS == LPA_MAX_ROUNDS[1]
-    assert graphops._CONV_MIN_COOCCUR == LPA_MIN_COOCCUR[1]
-    assert coverage._IVF_DEDUP_NPROBE == IVF_NPROBE[1]
-
-    sf = "/root/testdata/sf0.001"
-    # (b) min_cooccur dial: loosening the threshold to 1 must admit
-    # strictly more co-occurrence edges than the default 4
-    n_default = graphops.conv_cooccur_edges(spark, sf).count()
-    spark.conf.set("spark.graft.lpa.min_cooccur", "1")
-    try:
-        n_loose = graphops.conv_cooccur_edges(spark, sf).count()
-    finally:
-        spark.conf.unset("spark.graft.lpa.min_cooccur")
-    assert n_loose > n_default, (n_loose, n_default)
-
-    # (b) max_rounds dial: sf0.001 converges at round 2, so a cap of 1
-    # must hit the require_convergence raise — proving the entry passes
-    # the dial through to the loop
+def test_lpa_round_cap_raises_and_ivf_nprobe_is_monotone(spark):
+    """The converged LPA's round cap reaches the loop, and the IVF-dedup
+    probe width is monotone: sf0.001 converges at round 2, so a cap of
+    1 must raise rather than return a non-fixpoint labelling; top-1
+    cells ⊆ top-2, so the nprobe=1 pair set is a subset of the default
+    set."""
     import pytest
 
-    spark.conf.set("spark.graft.lpa.max_rounds", "1")
-    try:
-        with pytest.raises(RuntimeError, match="no fixpoint"):
-            graphops.graph_label_propagation_converged(spark, sf)
-    finally:
-        spark.conf.unset("spark.graft.lpa.max_rounds")
-
-    # (b) ivf.nprobe dial: setting it must equal passing the same value
-    # explicitly, and differ from the default-2 pair set (nprobe is
-    # monotone: top-1 cells ⊆ top-2, so the dial=1 set is a subset)
+    from tests.conftest import SF_DIR as sf
+    from tts_data_pipeline_spark.plans import graphops
     from tts_data_pipeline_spark.plans.coverage import (
         dedup_embedding_cosine_ivf,
     )
+
+    with pytest.raises(RuntimeError, match="cap hit"):
+        graphops.lpa_propagate_converged(
+            graphops.conv_cooccur_edges(spark, sf), max_rounds=1
+        )
 
     explicit = {
         (r.id_a, r.id_b)
         for r in dedup_embedding_cosine_ivf(spark, sf, nprobe=1).collect()
     }
-    spark.conf.set("spark.graft.ivf.nprobe", "1")
-    try:
-        via_dial = {
-            (r.id_a, r.id_b)
-            for r in dedup_embedding_cosine_ivf(spark, sf).collect()
-        }
-    finally:
-        spark.conf.unset("spark.graft.ivf.nprobe")
-    assert via_dial == explicit
     default_set = {
         (r.id_a, r.id_b)
         for r in dedup_embedding_cosine_ivf(spark, sf).collect()
     }
-    assert via_dial <= default_set
+    assert explicit <= default_set
 
 
 def test_lpa_conv_oracle_margin(spark):

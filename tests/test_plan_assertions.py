@@ -85,13 +85,23 @@ def test_ivf_broadcasts_codebook(spark):
 def test_no_cartesian_products_anywhere(spark):
     """No catalog query may plan an unintended cartesian product (the IVF
     n×k assignment is an intended broadcast nested-loop; plain
-    CartesianProduct = both sides big = death at scale)."""
+    CartesianProduct = both sides big = death at scale).  The same loop
+    pins the ordering contract (plans/registry.py): no entry but the
+    flagship ends in a global Sort — a sort consumed by a LIMIT roots at
+    the limit, so top-k entries pass."""
+    sorted_roots = []
     for name, fn in catalog.queries().items():
         if name.startswith("stream_"):
             continue  # streaming queries execute at build time
-        df = fn(spark, SF_DIR)
-        plan = df._jdf.queryExecution().executedPlan().toString()
+        qe = fn(spark, SF_DIR)._jdf.queryExecution()
+        plan = qe.executedPlan().toString()
         assert "CartesianProduct" not in plan, f"{name} plans a cartesian:\n{plan}"
+        root = qe.optimizedPlan()
+        while root.nodeName() == "Project":
+            root = root.children().apply(0)
+        if root.nodeName() == "Sort" and getattr(root, "global")():
+            sorted_roots.append(name)
+    assert sorted_roots == ["flagship_revenue_by_nation"], sorted_roots
 
 
 def test_similarity_never_evaluated_in_join_condition(spark):
@@ -579,9 +589,8 @@ def test_weighted_reservoir_is_take_ordered(spark):
 
 def test_c15b_single_exchange_parallel_projection(spark):
     """r14: the interpreted Vietnamese-cardinal tree must project over
-    the 32 explicit range partitions, ONCE — exactly one exchange (the
-    repartitionByRange), with the terminal sort satisfied by it (no
-    second exchange, so the range sampler never re-evaluates the
+    the explicit range partitions, ONCE — exactly one exchange (the
+    repartitionByRange, so the range sampler never re-evaluates the
     expensive projection), and the projection must not collapse below
     the exchange (where it would both serialize on the single-file scan
     partition and run again in the sampler)."""
@@ -605,13 +614,12 @@ def test_skyline_has_no_quadratic_join(spark):
     with two range-frame prefix-max windows: the plan must contain NO
     join of any kind (the quadratic form would appear as
     BroadcastNestedLoopJoin or CartesianProduct) and exactly one
-    brand-keyed hash exchange feeding the window plus the terminal
-    range sort."""
+    exchange: the brand-keyed hash exchange feeding the window."""
     plan = plan_of(spark, "agg_skyline_pareto")
     for bad in ("CartesianProduct", "BroadcastNestedLoop", "SortMergeJoin",
                 "BroadcastHashJoin"):
         assert bad not in plan, (bad, plan)
-    assert plan.count("Exchange") == 2, plan
+    assert plan.count("Exchange") == 1, plan
     assert "Window" in plan, plan
 
 
@@ -739,7 +747,8 @@ def test_bpe_encode_local_matches_distributed(spark, tmp_path):
     finally:
         spark.conf.unset(key)
     assert len(local) == 120
-    assert [tuple(r) for r in local] == [tuple(r) for r in dist]
+    # row sets (plans/registry.py): compare in a canonical row order
+    assert sorted(map(tuple, local)) == sorted(map(tuple, dist))
 
 
 def test_wordpiece_encode_local_matches_distributed(spark, tmp_path):
@@ -759,4 +768,5 @@ def test_wordpiece_encode_local_matches_distributed(spark, tmp_path):
     finally:
         spark.conf.unset(key)
     assert len(local) == 120
-    assert [tuple(r) for r in local] == [tuple(r) for r in dist]
+    # row sets (plans/registry.py): compare in a canonical row order
+    assert sorted(map(tuple, local)) == sorted(map(tuple, dist))

@@ -229,10 +229,11 @@ def test_unigram_local_entries_match_distributed(spark, tmp_path):
         ta_unigram_lm_learn_em,
         ta_unigram_lm_encode,
     ):
-        local = [tuple(r) for r in entry(spark, sf_dir).collect()]
+        # entries return row sets: compare in a canonical row order
+        local = sorted(tuple(r) for r in entry(spark, sf_dir).collect())
         spark.conf.set(key, "1")  # vocab exceeds cap -> distributed
         try:
-            dist = [tuple(r) for r in entry(spark, sf_dir).collect()]
+            dist = sorted(tuple(r) for r in entry(spark, sf_dir).collect())
         finally:
             spark.conf.unset(key)
         assert len(local) > 30, entry.__name__

@@ -35,8 +35,8 @@ stays CORRECT if re-collected (unpersist only drops the
 materialization; the plan recomputes).
 
 :func:`cache_replacing` is the registry's one entry point.  Catalog
-entries return unordered frames (the driver's hash and the oracles are
-row-order-insensitive), so nothing here sorts: a terminal global sort
+entries return unordered frames (the ordering contract in
+``plans/registry.py``), so nothing here sorts: a terminal global sort
 would re-run the cached child under the range partitioner's sampling
 job.
 """

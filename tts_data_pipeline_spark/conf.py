@@ -60,49 +60,26 @@ spark.graft.codebook.broadcast_max_mb    32         physical-only: the
                                                     (identical
                                                     assignments either
                                                     way — pinned).
-spark.graft.semdedup.kmax                65536      SEMANTIC: the cell-
-                                                    count clamp.  Changes
-                                                    assignments, so the
-                                                    shipped DuckDB
-                                                    oracles pin the
-                                                    DEFAULT — override on
-                                                    deployments, not
-                                                    under the oracle
-                                                    gate.
-spark.graft.semdedup.nprobe_super        3          SEMANTIC: super-cell
-                                                    multi-probe width,
-                                                    same caveat as kmax.
-spark.graft.ivf.nprobe                   2          SEMANTIC: IVF-dedup
-                                                    multiple-assignment
-                                                    width (recall dial —
-                                                    1→0.18 / 2→0.41 /
-                                                    4→0.74 on the
-                                                    adversarial band).
-                                                    Oracles pin the
-                                                    default.
-spark.graft.lpa.max_rounds               40         Termination cap of
-                                                    the until-convergence
-                                                    LPA.  Never changes a
-                                                    RETURNED labelling
-                                                    (non-fixpoint runs
-                                                    RAISE) — but the
-                                                    shipped oracle unroll
-                                                    equals this default,
-                                                    so RAISING it past 40
-                                                    leaves the oracle
-                                                    gate (a run converging
-                                                    at round 41+ replays a
-                                                    pre-fixpoint oracle).
-spark.graft.lpa.min_cooccur              4          SEMANTIC: co-occurrence
-                                                    edge threshold of the
-                                                    LPA user graph.
-                                                    Oracles pin the
-                                                    default.
+spark.graft.cc.local_finish_rows         1000000    physical-only: forest
+                                                    size under which
+                                                    connected components
+                                                    finish in one union-
+                                                    find task (identical
+                                                    components).
+spark.graft.tokenizer.local_learn_vocab  1000000    physical-only: distinct-
+                                                    word count under which
+                                                    BPE/WordPiece merges
+                                                    are learned in the
+                                                    driver (bit-identical
+                                                    merge tables).
 ======================================= ========== =====================
 
-Physical-only dials are safe to change anywhere: they re-partition the
-same candidate space.  SEMANTIC dials trade recall/cost and therefore
-change results by design; the oracle suite asserts the defaults.
+Every dial here is physical-only: it re-partitions the same candidate
+space, so any value returns the same rows.  The recall/cost knobs that
+change results (the semantic-dedup cell clamp and super-cell probes,
+the IVF-dedup probe width, the LPA round cap and co-occurrence
+threshold) are module literals beside the DuckDB oracles that embed
+them.
 """
 
 from __future__ import annotations
@@ -150,13 +127,6 @@ PAIRGRID_S_MAX = ("spark.graft.pairgrid.s_max", 1024)
 # set is identical for any value (edge-count assert in the operator).
 PAIRGRID_TARGET_ROWS = ("spark.graft.pairgrid.target_rows", 256)
 CODEBOOK_BROADCAST_MAX_MB = ("spark.graft.codebook.broadcast_max_mb", 32)
-SEMDEDUP_KMAX = ("spark.graft.semdedup.kmax", 65536)
-SEMDEDUP_NPROBE_SUPER = ("spark.graft.semdedup.nprobe_super", 3)
-# SEMANTIC dials (docstring table): overrides change results by design
-# and therefore leave the shipped-oracle gate
-IVF_NPROBE = ("spark.graft.ivf.nprobe", 2)
-LPA_MAX_ROUNDS = ("spark.graft.lpa.max_rounds", 40)
-LPA_MIN_COOCCUR = ("spark.graft.lpa.min_cooccur", 4)
 # physical-only: when a PRE-CONTRACTED connected-components forest lands
 # at or under this many edges, the exact closure is finished by ONE
 # single-task union-find pass over the persisted forest instead of the

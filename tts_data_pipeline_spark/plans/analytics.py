@@ -48,7 +48,6 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_qty",
             "n",
         )
-        .orderBy("returnflag", "linestatus")
     )
 
 
@@ -80,7 +79,6 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
             "avg_price",
             "n",
         )
-        .orderBy("orderstatus", "orderpriority")
     )
 
 
@@ -105,7 +103,6 @@ def agg_distinct_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("l_orderkey").alias("n_orders"),
             F.countDistinct("l_partkey").alias("n_parts"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -174,7 +171,6 @@ def agg_distinct_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("parts_within_bound"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -248,7 +244,7 @@ def ta_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("rank"),
     )
-    return ranked.filter(F.col("rank") <= 3).orderBy("doc_id", "rank")
+    return ranked.filter(F.col("rank") <= 3)
 
 
 @query(
@@ -283,7 +279,7 @@ def j8_salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return joined.select(
         F.col("key").alias("l_orderkey"), "l_quantity", "o_orderstatus"
-    ).orderBy("l_orderkey", "l_quantity", "o_orderstatus")
+    )
 
 
 @query(
@@ -308,7 +304,6 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
                ROUND(SUM(l_extendedprice), 2) AS sum_price
         FROM v_lineitem_gs
         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        ORDER BY returnflag, linestatus
         """
     )
 
@@ -355,7 +350,7 @@ def agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("rn") == hi) & (hi != lo), F.col("l_extendedprice") * frac
         )
         aggs.append(F.round(F.sum(contrib), 4).alias(name))
-    return ranked.groupBy("l_returnflag").agg(*aggs).orderBy("l_returnflag")
+    return ranked.groupBy("l_returnflag").agg(*aggs)
 
 
 @query(
@@ -381,7 +376,6 @@ def w6_calendar_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.hour("ts").cast("long").alias("hour"),
         )
         .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
-        .orderBy("day", "hour")
     )
 
 
@@ -420,7 +414,6 @@ def j9_null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         l.join(r, l["k"].eqNullSafe(r["k"]))
         .select(l["doc_id"], l["k"])
-        .orderBy("doc_id")
     )
 
 
@@ -466,7 +459,7 @@ def j10_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("value", 2).alias("trade_value"),
         F.col("r_event_id"),
         F.round("r_value", 2).alias("r_value"),
-    ).orderBy("event_id")
+    )
 
 
 @query(
@@ -502,7 +495,7 @@ def j11_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = interval_join(mk("click"), mk("error"), key="user_id", bucket_width=50.0)
     return out.select(
         F.col("l_event_id"), F.col("r_event_id")
-    ).orderBy("l_event_id", "r_event_id")
+    )
 
 
 @query(
@@ -540,7 +533,7 @@ def w7_hierarchical_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("sum_value"), 2).alias("total_value"),
         )
     )
-    return hour.orderBy("hour", "event_type")
+    return hour
 
 
 @query(
@@ -595,7 +588,7 @@ def agg_percentiles_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.col("p95") >= F.col("b")[2]) & (F.col("p95") <= F.col("b")[3]))
         .cast("bigint")
         .alias("p95_within_bound"),
-    ).orderBy("l_returnflag")
+    )
 
 
 @query(
@@ -700,7 +693,6 @@ def ev_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         activity.groupBy("cohort_day", "day_offset")
         .agg(F.count("*").alias("n_users"))
-        .orderBy("cohort_day", "day_offset")
     )
 
 
@@ -737,7 +729,6 @@ def w8_window_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.ntile(4).over(w).cast("long").alias("quartile"),
             F.round(F.percent_rank().over(w), 6).alias("pct_rank"),
         )
-        .orderBy("event_id")
     )
 
 
@@ -802,7 +793,7 @@ def dq_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    return out.orderBy("col")
+    return out
 
 
 @query(
@@ -835,7 +826,6 @@ def agg_dispersion_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "qty_price_covar"
             ),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -867,7 +857,6 @@ def emb_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         un.groupBy("label", F.col("idx").cast("long").alias("dim"))
         .agg(F.round(F.avg("val"), 6).alias("dim_avg"))
-        .orderBy("label", "dim")
     )
 
 
@@ -907,7 +896,6 @@ def a11_salted_aggregation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("p_n").alias("n"),
             F.round(F.max("p_max"), 2).alias("max_price"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -925,10 +913,11 @@ def a11_salted_aggregation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def sql_front_door(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The engine's SQL front door: the IDENTICAL SQL text runs on Spark
+    """The engine's SQL front door: the oracle's SQL text runs on Spark
     (over registered temp views) and on DuckDB — same plan semantics from
     either API, since both feed the same Catalyst pipeline as the
-    DataFrame builders."""
+    DataFrame builders.  Only the oracle keeps the ``ORDER BY``: the
+    entry returns a row set (``plans/registry.py``)."""
     from tts_data_pipeline_spark.sources.readers import load_tables
 
     load_tables(spark, sf_dir, ("nation", "customer", "orders"))
@@ -941,7 +930,6 @@ def sql_front_door(spark: SparkSession, sf_dir: str) -> DataFrame:
         JOIN customer c ON c.c_nationkey = n.n_nationkey
         JOIN orders o   ON o.o_custkey = c.c_custkey
         GROUP BY n.n_name
-        ORDER BY n.n_name
         """
     )
 
@@ -984,7 +972,6 @@ def ev_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.max("value"), 2).alias("hi"),
             X.mean_fixed(F.col("value")).alias("mean_value"),
         )
-        .orderBy("event_type", "decile")
     )
 
 
@@ -1049,7 +1036,6 @@ def qc_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("value", 2).alias("value"),
             F.round(z, 4).alias("zscore"),
         )
-        .orderBy("event_id")
     )
 
 
@@ -1107,7 +1093,6 @@ def ev_pattern_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("n_lazy_funnels"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -1173,7 +1158,6 @@ def j12_cdc_apply_log(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("live_value"),
             (F.col("is_delete") == 0).cast("bigint").alias("is_live"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -1316,7 +1300,6 @@ def agg_histogram_equiwidth(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_type", bin_.alias("bin"))
         .groupBy("event_type", "bin")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        .orderBy("event_type", "bin")
     )
 
 
@@ -1375,7 +1358,6 @@ def qc_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_outliers",
             "n",
         )
-        .orderBy("event_type")
     )
 
 
@@ -1414,7 +1396,6 @@ def ev_new_users_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         daily.select("day", "new_users", cum.cast("bigint").alias("cum_users"))
-        .orderBy("day")
     )
 
 
@@ -1514,7 +1495,6 @@ def ev_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("n_outliers"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -1601,7 +1581,6 @@ def agg_incremental_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("total_cents").alias("total_cents"),
         )
         .filter(F.col("n_orders") > 0)
-        .orderBy("o_custkey")
     )
 
 
@@ -1715,7 +1694,7 @@ def dq_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return out.withColumn(
         "passed", (F.col("n_violations") == 0).cast("long")
-    ).orderBy("expectation")
+    )
 
 
 @query(
@@ -1792,7 +1771,6 @@ def agg_sample_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("within_5sigma"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -1858,7 +1836,6 @@ def agg_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
         p.withColumn("_dom", dominated)
         .filter(~F.col("_dom"))
         .select("p_brand", "p_partkey", "price_cents", "p_size")
-        .orderBy("p_brand", "price_cents", "p_partkey")
     )
 
 
@@ -1925,7 +1902,6 @@ def agg_skyline_pareto_ranged(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("_dom", dominated)
         .filter(~F.col("_dom"))
         .select("p_brand", "p_partkey", "price_cents", "p_size")
-        .orderBy("p_brand", "price_cents", "p_partkey")
     )
 
 
@@ -1999,7 +1975,7 @@ def agg_hll_union_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("within_bound"),
         )
     )
-    return per.unionByName(union_row).orderBy("grp")
+    return per.unionByName(union_row)
 
 
 @query(
@@ -2083,7 +2059,6 @@ def ev_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("lag_us"),
             F.col("a_pid").isNotNull().cast("long").alias("attributed"),
         )
-        .orderBy("purchase_id")
     )
 
 
@@ -2163,5 +2138,4 @@ def ev_attribution_touchpoints(spark: SparkSession, sf_dir: str) -> DataFrame:
             "first_click_id",
             "last_click_id",
         )
-        .orderBy("purchase_id")
     )

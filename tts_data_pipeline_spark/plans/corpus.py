@@ -114,7 +114,6 @@ def dedup_paragraph_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             ).alias("new_text"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -262,7 +261,6 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             ).alias("new_text"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -341,7 +339,6 @@ def ta_decontaminate_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("contaminated"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -415,7 +412,6 @@ def ta_decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("contaminated"),
         )
-        .orderBy("vec_id")
     )
 
 
@@ -455,7 +451,6 @@ def o6_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         d.select("doc_id", "lang", rn.cast("bigint").alias("rn"))
         .filter(F.col("rn") <= 10)
-        .orderBy("lang", "rn")
     )
 
 
@@ -520,7 +515,6 @@ def mix_temperature_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rate",
             (u < F.col("rate") * 1000000).cast("bigint").alias("kept"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -586,7 +580,6 @@ def emb_int8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("q_csv"),
             F.round(F.sqrt(sse / 64.0), 6).alias("rms_err"),
         )
-        .orderBy("vec_id")
     )
 
 
@@ -684,7 +677,6 @@ def sim_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id", "vec_id", "sim_q8", F.col("rank").cast("long").alias("rank")
         )
-        .orderBy("query_id", "rank")
     )
 
 
@@ -748,7 +740,7 @@ def emb_binary_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.bit_count("code_lo") + F.bit_count("code_hi"))
         .cast("bigint")
         .alias("n_bits"),
-    ).orderBy("vec_id")
+    )
 
 
 @query(
@@ -833,7 +825,6 @@ def sim_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.lit(1.0) - F.col("hamming") / F.lit(32.0)).alias("sign_corr"),
             F.col("rank").cast("long").alias("rank"),
         )
-        .orderBy("query_id", "rank")
     )
 
 
@@ -886,7 +877,6 @@ def mix_source_caps(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.floor(kept * 10000.0 / F.count(F.lit(1)) + 0.5) / 10000.0
             ).alias("keep_ratio"),
         )
-        .orderBy("source")
     )
 
 
@@ -986,7 +976,6 @@ def ta_perplexity_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("logp"), 4).alias("avg_logp"),
             F.round(F.exp(-F.avg("logp")), 2).alias("ppl"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -1110,7 +1099,6 @@ def ta_perplexity_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("logp"), 4).alias("avg_logp"),
             F.round(F.exp(-F.avg("logp")), 2).alias("ppl"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -1289,7 +1277,8 @@ def learn_bpe_merges(
     ``persist_every`` rounds through the ``scratch.RoundStore``
     ``operators/components.py`` uses, closed when the loop ends (the
     returned frame is a local merge table, so nothing lazy outlives the
-    state).  Without truncation, round k recomputed all k-1 prior merges
+    state; created from the in-order merge list with no shuffle above it,
+    it collects in rank order — the order the encoder applies them).  Without truncation, round k recomputed all k-1 prior merges
     from the raw word table and the plan deepened linearly — O(R²) work
     and driver plan-compilation blowup at real merge counts (a production
     tokenizer is R≈30k).  The interval is the standard iterative-job checkpoint
@@ -1327,7 +1316,7 @@ def learn_bpe_merges(
             return spark.createDataFrame(
                 _bpe_learn_local(head, rounds),
                 "rank bigint, pair string, merged string, cnt bigint",
-            ).orderBy("rank")
+            )
     chars = F.transform(
         F.sequence(F.lit(0), F.length("word") - 1),
         lambda i: F.col("word").substr(i + 1, F.lit(1)),
@@ -1393,7 +1382,7 @@ def learn_bpe_merges(
         store.close()
     return spark.createDataFrame(
         merges, "rank bigint, pair string, merged string, cnt bigint"
-    ).orderBy("rank")
+    )
 
 
 @query("ta_bpe_learn_merges", oracle=_bpe_oracle(3))
@@ -1537,7 +1526,6 @@ def bpe_encode_corpus(
                 F.count(F.lit(1)).cast("bigint").alias("n_words"),
                 F.sum("pieces").cast("bigint").alias("n_pieces"),
             )
-            .orderBy("doc_id")
         )
     mrows = learn_bpe_merges(spark, sf_dir, rounds=rounds).collect()
     words_probe.unpersist()
@@ -1574,7 +1562,6 @@ def bpe_encode_corpus(
             F.count(F.lit(1)).cast("bigint").alias("n_words"),
             F.sum("pieces").cast("bigint").alias("n_pieces"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -1867,7 +1854,6 @@ def learn_wordpiece_merges(
                 " cnt_left bigint, cnt_right bigint, score double",
             )
             .withColumn("score", F.round("score", 9))
-            .orderBy("rank")
         )
     chars = F.transform(
         F.sequence(F.lit(0), F.length("word") - 1),
@@ -1989,7 +1975,6 @@ def learn_wordpiece_merges(
         # engine-side ROUND (same continuous-value convention as every
         # other emitted float; Python's round() is a third semantics)
         .withColumn("score", F.round("score", 9))
-        .orderBy("rank")
     )
 
 
@@ -2099,7 +2084,6 @@ def ta_wordpiece_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("bigint")
                 .alias("n_unk_words"),
             )
-            .orderBy("doc_id")
         )
     merges = learn_wordpiece_merges(spark, sf_dir, rounds=3).collect()
     words.unpersist()
@@ -2209,7 +2193,6 @@ def ta_wordpiece_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("n_unk_words"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -2905,7 +2888,6 @@ def ta_unigram_lm_learn_em(spark: SparkSession, sf_dir: str) -> DataFrame:
                 _uni_em_local(head),
                 "piece string, cnt_milli bigint, logp double",
             )
-            .orderBy(F.desc("cnt_milli"), "piece")
         )
     words = _uni_word_table(spark, sf_dir)
     spans = _uni_spans(words)
@@ -2932,7 +2914,6 @@ def ta_unigram_lm_learn_em(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "logp"
             ),
         )
-        .orderBy(F.desc("cnt_milli"), "piece")
     )
 
 
@@ -2969,10 +2950,9 @@ def ta_unigram_lm_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
                 [(p, vocab[p], lp[p]) for p in vocab],
                 "piece string, cnt bigint, logp double",
             )
-            .orderBy(F.desc("cnt"), "piece")
         )
     v = _uni_piece_table(spark, sf_dir, _UNI_ROUNDS)
-    return v.select("piece", "cnt", "logp").orderBy(F.desc("cnt"), "piece")
+    return v.select("piece", "cnt", "logp")
 
 
 @query("ta_unigram_lm_encode", oracle=_uni_encode_oracle(_UNI_ROUNDS))
@@ -3028,7 +3008,7 @@ def ta_unigram_lm_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_words",
         "n_tokens",
         F.concat_ws(" ", F.slice(flat, 1, 8)).alias("tokens_head"),
-    ).orderBy("doc_id")
+    )
 
 
 # --- linear quality classifier ---------------------------------------------
@@ -3096,7 +3076,6 @@ def ta_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("keep"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -3163,7 +3142,6 @@ def tx_truncate_max_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("content_fingerprint"),
         )
-        .orderBy("lang")
     )
 
 
@@ -3239,7 +3217,6 @@ def emb_pq_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("recon_err"),
         )
-        .orderBy("vec_id")
     )
 
 
@@ -3285,9 +3262,7 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tts_data_pipeline_spark.operators.similarity import pq_adc_topk
 
     e = spread(table(spark, sf_dir, "embeddings"))
-    return pq_adc_topk(e, query_pred=F.col("vec_id") % 125 == 0, k=5).orderBy(
-        "query_id", "rank"
-    )
+    return pq_adc_topk(e, query_pred=F.col("vec_id") % 125 == 0, k=5)
 
 
 @query(
@@ -3356,7 +3331,7 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = spread(table(spark, sf_dir, "embeddings"))
     return ivfpq_topk(
         e, query_pred=F.col("vec_id") < 8, k=5, n_centroids=32, nprobe=2
-    ).orderBy("query_id", "rank")
+    )
 
 
 # --- Johnson-Lindenstrauss random projection ---------------------------------
@@ -3457,7 +3432,6 @@ def emb_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sqrt(ssq) / F.greatest(F.col("nrm_v"), F.lit(1e-12)), 4
             ).alias("norm_ratio"),
         )
-        .orderBy("vec_id")
     )
 
 
@@ -3634,5 +3608,4 @@ def sim_jl_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cosine_sim",
             F.col("rank").cast("long").alias("rank"),
         )
-        .orderBy("query_id", "rank")
     )

@@ -45,7 +45,6 @@ def f3_project_null_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
         )
         .na.drop(subset=["text_field"])
-        .orderBy("doc_id")
         .select("text_field")
     )
 
@@ -68,7 +67,6 @@ def f8_pairing_predicate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         o.join(li, o.o_orderkey == li.l_orderkey, "left_semi")
         .select("o_orderkey", "o_totalprice")
-        .orderBy("o_orderkey")
     )
 
 
@@ -144,7 +142,7 @@ def u3_u4_literal_parse_normalize(spark: SparkSession, sf_dir: str) -> DataFrame
         "doc_id",
         F.size(parsed).cast("long").alias("n_entries"),
         parsed[0]["name"].alias("first_name"),
-    ).orderBy("doc_id")
+    )
 
 
 @query(
@@ -170,7 +168,7 @@ def c3_c4_alignment_derive(spark: SparkSession, sf_dir: str) -> DataFrame:
         vi_text.segment_duration(F.col("value"), F.col("value") * 1.5).alias(
             "duration"
         ),
-    ).orderBy("event_id")
+    )
 
 
 @query(
@@ -201,7 +199,6 @@ def c7_sequence_number_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             vi_text.sequence_number(F.col("fname")).cast("long").alias("seq"),
             "p_partkey",
         )
-        .orderBy("p_partkey")
         .select("fname", "seq")
     )
 
@@ -223,7 +220,7 @@ def c10_typographic_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     wrapped = F.concat(F.lit("“"), F.col("text"), F.lit("”…"))
     return d.select(
         "doc_id", vi_text.strip_typographic(wrapped).alias("clean")
-    ).orderBy("doc_id")
+    )
 
 
 @query(
@@ -277,12 +274,12 @@ def _embedding_cosine_pairs(
     """UNSORTED embedding-cosine near-dup pairs (grid-blocked self-join).
 
     Factored from :func:`dedup_embedding_cosine` for consumers that feed
-    the pairs onward (connected components): the catalog entry's
-    trailing ``orderBy`` is NOT harmless mid-plan — under a downstream
-    ``mapInPandas`` the sort survives optimization (``EliminateSorts``
-    fires below aggregates/joins only) and its range-partitioner runs a
-    SAMPLING PASS that re-executes the entire verify subtree — measured
-    2× the whole operator at sf3 (493 s vs 256 s) before this split.
+    the pairs onward (connected components): a trailing ``orderBy`` is
+    NOT harmless mid-plan — under a downstream ``mapInPandas`` the sort
+    survives optimization (``EliminateSorts`` fires below
+    aggregates/joins only) and its range-partitioner runs a SAMPLING PASS
+    that re-executes the entire verify subtree — measured 2× the whole
+    operator at sf3 (493 s vs 256 s) before this split.
 
     Grid + adaptive-S mechanics live in
     ``operators.pairgrid.adaptive_grid_pair_join`` (round-11: factored to
@@ -435,12 +432,9 @@ def _ivf_dedup_sub_sql():
 # adversarial 0.40-0.60 cosine band (test_ivf_dedup_recall_vs_exact):
 # nprobe 1 → recall 0.18, 2 → 0.41, 4 → 0.74, at candidate fractions
 # ~3% / ~12% / ~42% of all pairs — the recall dial is candidate-bounded
-# (≈ p² bucket growth), never all-pairs.  Round-11: the default is the
-# spark.graft.ivf.nprobe conf dial's (SEMANTIC — the shipped oracles pin
-# it; derived here so oracle and dial can't drift).
-from tts_data_pipeline_spark.conf import IVF_NPROBE as _IVF_NPROBE_DIAL  # noqa: E402
-
-_IVF_DEDUP_NPROBE = _IVF_NPROBE_DIAL[1]
+# (≈ p² bucket growth), never all-pairs.  The catalog entries and their
+# oracles both use this value.
+_IVF_DEDUP_NPROBE = 2
 
 
 def _ivf_dedup_ctes(nprobe: int) -> str:
@@ -527,7 +521,7 @@ _IVF_CLOSURE_CTES = """, fp AS (
 def dedup_embedding_cosine_ivf(
     spark: SparkSession,
     sf_dir: str,
-    nprobe: int | None = None,
+    nprobe: int = _IVF_DEDUP_NPROBE,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs with a DATA-SCALED bucket — the
     100 TB form of ``dedup_embedding_cosine`` (which verifies all pairs
@@ -563,11 +557,10 @@ def dedup_embedding_cosine_ivf(
     ``COUNT(*)``.  Recall < 1 by construction (near-dups split by a plane
     are still missed); the CELL boundary is bought back by ``nprobe``
     multiple assignment — each vector enters the pair space under its
-    ``nprobe`` nearest cells.  ``nprobe=None`` (the catalog path) reads
-    the ``spark.graft.ivf.nprobe`` dial (default ``_IVF_DEDUP_NPROBE`` =
-    2; SEMANTIC — an override changes the pair set by design and leaves
-    the shipped-oracle gate, the ``conf.py`` convention); candidate cost
-    grows ~p² per bucket while staying bucket-bounded.
+    ``nprobe`` nearest cells (default ``_IVF_DEDUP_NPROBE`` = 2, the
+    value the oracles embed; another value changes the pair set by
+    design); candidate cost grows ~p² per bucket while staying
+    bucket-bounded.
     tests/test_dedup_similarity.py::test_ivf_dedup_recall_vs_exact
     measures the SHIPPED operator at nprobe 1/2/4 against the UNBUCKETED
     all-pairs ground truth on the adversarial 0.40-0.60 band and pins
@@ -583,13 +576,10 @@ def dedup_embedding_cosine_ivf(
     """
     import math
 
-    from tts_data_pipeline_spark.conf import IVF_NPROBE, dial
     from tts_data_pipeline_spark.operators.similarity import dot, ivf_assign
     from tts_data_pipeline_spark.plans.extensions import _bucket_expr
     from tts_data_pipeline_spark.sources.readers import spread
 
-    if nprobe is None:
-        nprobe = dial(spark, IVF_NPROBE)
     em = spread(table(spark, sf_dir, "embeddings"))
     n = em.count()
     bits = min(
@@ -739,7 +729,7 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = spread(table(spark, sf_dir, "embeddings"))
     return ivf_topk(
         e, query_pred=F.col("vec_id") < 8, k=5, n_centroids=32, nprobe=2
-    ).orderBy("query_id", "rank")
+    )
 
 
 @query(
@@ -771,7 +761,6 @@ def u6_unpivot_melt(spark: SparkSession, sf_dir: str) -> DataFrame:
             variableColumnName="metric",
             valueColumnName="val",
         )
-        .orderBy("doc_id", "metric")
     )
 
 
@@ -903,7 +892,6 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         connected_components(pairs, pre_contract=True)
         .select(F.col("id"), F.col("component"))
-        .orderBy("id")
     )
 
 
@@ -936,7 +924,7 @@ def u7_set_operations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     inter = big.intersect(building).select(F.lit("intersect").alias("op"), "c")
     exc = big.subtract(building).select(F.lit("except").alias("op"), "c")
-    return inter.unionByName(exc).orderBy("op", "c")
+    return inter.unionByName(exc)
 
 
 @query(
@@ -965,7 +953,6 @@ def a10_string_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             F.count("*").alias("n"),
         )
-        .orderBy("n_nationkey")
     )
 
 
@@ -992,7 +979,6 @@ def c21_json_map_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.select(m.getItem("k").alias("k_value"), "value")
         .groupBy("k_value")
         .agg(F.count("*").alias("n"), X.mean_fixed(F.col("value")).alias("avg_value"))
-        .orderBy("k_value")
     )
 
 
@@ -1018,7 +1004,6 @@ def c22_regexp_extract_all(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.size("m").cast("long").alias("n_ing_words"),
             F.array_join(F.slice("m", 1, 3), ",").alias("first_ing"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -1071,7 +1056,6 @@ def dedup_apply_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         c.join(dropped, c.c_custkey == dropped.id, "left_anti")
         .select("c_custkey", "c_name")
-        .orderBy("c_custkey")
     )
 
 
@@ -1149,7 +1133,6 @@ def s11_url_probe_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / 10000.0
             ).alias("pct"),
         )
-        .orderBy("status")
     )
 
 
@@ -1242,7 +1225,7 @@ def s9_html_css_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         css_text(F.col("html"), "title").alias("title"),
         css_text(F.col("html"), ".lang").alias("lang"),
         css_text(F.col("html"), "#nchars").cast("long").alias("n_chars"),
-    ).orderBy("doc_id")
+    )
 
 
 @query(
@@ -1338,7 +1321,6 @@ def split_train_val_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_docs"),
             X.mean_fixed(F.col("n_chars"), dp=2, in_dp=0).alias("avg_chars"),
         )
-        .orderBy("split", "lang")
     )
 
 
@@ -1443,9 +1425,7 @@ def _cluster_inherited_split(
     split = (
         F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
     )
-    return asg.select(
-        "doc_id", "rep_id", split.alias("split")
-    ).orderBy("doc_id")
+    return asg.select("doc_id", "rep_id", split.alias("split"))
 
 
 from tts_data_pipeline_spark.plans.extensions import (  # noqa: E402
@@ -1526,10 +1506,9 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     growth law and the re-measured sf0.1→3 decade are in PLANS.md
     round 9.
 
-    The pair source is the UNSORTED generator: consuming the catalog
-    entry's ordered frame re-executed the whole verify subtree through
-    the range-partitioner's sampling pass (measured 2× at sf3 — see
-    ``_embedding_cosine_pairs``)."""
+    The pair source is the UNSORTED generator: a sorted pair frame
+    re-executed the whole verify subtree through the range-partitioner's
+    sampling pass (measured 2× at sf3 — see ``_embedding_cosine_pairs``)."""
     from tts_data_pipeline_spark.operators.components import connected_components
 
     pairs = _embedding_cosine_pairs(
@@ -1540,7 +1519,6 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         connected_components(pairs, pre_contract=True)
         .select("id", "component")
-        .orderBy("id")
     )
 
 
@@ -1586,7 +1564,6 @@ def dedup_semantic_clusters_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         connected_components(pairs, pre_contract=True)
         .select("id", "component")
-        .orderBy("id")
     )
 
 
@@ -1642,7 +1619,6 @@ def dedup_semantic_apply_survivors(
     return (
         e.join(dropped, e.vec_id == dropped.id, "left_anti")
         .select("vec_id", "label")
-        .orderBy("vec_id")
     )
 
 

@@ -92,7 +92,7 @@ def ta_gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("dup_word_fraction") < 0.55)
         & (F.col("n_stop_distinct") >= 2)
     )
-    return base.withColumn("gopher_pass", gate.cast("long")).orderBy("doc_id")
+    return base.withColumn("gopher_pass", gate.cast("long"))
 
 
 @query(
@@ -166,7 +166,6 @@ def ta_repetition_topbigram(spark: SparkSession, sf_dir: str) -> DataFrame:
                 4,
             ).alias("top_bigram_fraction"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -227,7 +226,7 @@ def ta_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             _PHONE_PAT,
             "[PHONE]",
         ).alias("redacted"),
-    ).orderBy("doc_id")
+    )
 
 
 @query(
@@ -293,7 +292,6 @@ def mix_weighted_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.floor(F.sum("kept") * 10000.0 / F.count("*") + 0.5) / 10000.0
             ).alias("kept_rate"),
         )
-        .orderBy("source")
     )
 
 
@@ -347,7 +345,6 @@ def pack_sequences_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_docs"),
             F.sum("n_tokens").cast("long").alias("bin_tokens"),
         )
-        .orderBy("lang", "bin_id")
     )
 
 
@@ -416,7 +413,7 @@ def ta_domain_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("doc_id").cast("string"),
         ).alias("url"),
         blocked.cast("bigint").alias("blocked"),
-    ).orderBy("doc_id")
+    )
 
 
 # --- DSIR importance resampling ---------------------------------------------
@@ -545,7 +542,6 @@ def mix_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
             "weight",
             (rn <= _DSIR_K).cast("bigint").alias("selected"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -619,7 +615,7 @@ def ta_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return base.select(
         "doc_id", "url", canonical.alias("canonical"), host.alias("domain")
-    ).orderBy("doc_id")
+    )
 
 
 # --- overlapping chunking for embeddings -------------------------------------
@@ -681,7 +677,6 @@ def corpus_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         d.select("doc_id", F.explode(chunks).alias("c"))
         .select("doc_id", "c.chunk_idx", "c.chunk", "c.n_tokens")
-        .orderBy("doc_id", "chunk_idx")
     )
 
 
@@ -804,7 +799,6 @@ def pipeline_e2e_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 kept * F.size(F.split("seg", " ")).cast("bigint")
             ).alias("post_dedup_tokens"),
         )
-        .orderBy("lang")
     )
 
 
@@ -1127,7 +1121,6 @@ def pipeline_e2e_ccnet(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("ppl").alias("min_ppl"),
             F.max("ppl").alias("max_ppl"),
         )
-        .orderBy("lang", "bucket")
     )
 
 
@@ -1251,5 +1244,4 @@ def sample_weighted_reservoir_stratified(
         keyed.withColumn("rn", rn)
         .filter(F.col("rn") <= _RES_STRAT_K)
         .select("source", "doc_id", "n_chars", "key")
-        .orderBy("source", F.desc("key"), "doc_id")
     )

@@ -32,7 +32,7 @@ def dedup_exact_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup — one shuffle on the content hash; keeps the min-id
     representative per distinct text."""
     d = table(spark, sf_dir, "documents")
-    return D.exact_dedup(d).orderBy("fp")
+    return D.exact_dedup(d)
 
 
 @query(
@@ -52,7 +52,6 @@ def dedup_drop_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         d.join(survivors, "doc_id", "left_semi")
         .select("doc_id", "lang")
-        .orderBy("doc_id")
     )
 
 
@@ -420,7 +419,6 @@ def dedup_minhash_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         d.join(dropped, d.doc_id == dropped.id, "left_anti")
         .select("doc_id", "lang")
-        .orderBy("doc_id")
     )
 
 
@@ -477,7 +475,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         fp = term if fp is None else fp + term
     return hashed.select(
         "doc_id", fp.cast("long").alias("simhash32")
-    ).orderBy("doc_id")
+    )
 
 
 @query(
@@ -515,7 +513,7 @@ def sim_bruteforce_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k on rounded similarity (engine-reproducible ranking)."""
     em = table(spark, sf_dir, "embeddings")
     q = em.filter(F.col("vec_id") < 8)
-    return S.brute_force_topk(em, q, k=5).orderBy("query_id", "rank")
+    return S.brute_force_topk(em, q, k=5)
 
 
 @query("sim_lsh_ann_topk_rng")
@@ -552,7 +550,6 @@ def emb_norm_stats_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
         em.select("label", norm.alias("_norm"))
         .groupBy("label")
         .agg(F.count("*").alias("n"), F.round(F.avg("_norm"), 4).alias("avg_norm"))
-        .orderBy("label")
     )
 
 
@@ -675,7 +672,7 @@ def emb_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
         base.unpersist()
     return assign.select(
         "vec_id", F.col("cid").cast("long").alias("cid")
-    ).orderBy("vec_id")
+    )
 
 
 @query("dedup_minhash_ml")
@@ -818,7 +815,6 @@ def sim_lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         cand.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= 5)
         .select("query_id", "neighbor_id", "cosine_sim", "rank")
-        .orderBy("query_id", "rank")
     )
 
 
@@ -1019,7 +1015,6 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("matched_doc_id"),
             F.coalesce(F.round("j", 4), F.lit(0.0)).alias("jaccard"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -1314,7 +1309,6 @@ def sim_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cosine_sim",
             "rank",
         )
-        .orderBy("query_id", "rank")
     )
 
 
@@ -1389,5 +1383,4 @@ def sample_contrastive_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id", "anchor_label", "neighbor_id", "neighbor_label",
             "prand", "rank",
         )
-        .orderBy("query_id", "rank")
     )

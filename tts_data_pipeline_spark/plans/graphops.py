@@ -127,7 +127,6 @@ def graph_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         nation.join(ranks, "node")
         .select("n_name", F.round("rank", 6).alias("pagerank"))
-        .orderBy("n_name")
     )
 
 
@@ -320,29 +319,26 @@ SELECT node, label AS community FROM l{rounds} ORDER BY node"""
 # fixpoint is round 2 (sf0.001: 4 nodes / 2 communities) and round 20
 # (sf0.01: 145 nodes / 5 communities).
 from tts_data_pipeline_spark.conf import (  # noqa: E402
-    LPA_MAX_ROUNDS,
-    LPA_MIN_COOCCUR,
     PAIRGRID_S_MAX,
     PAIRGRID_TARGET_ROWS,
     dial,
 )
 
 
-# SEMANTIC dial default (spark.graft.lpa.min_cooccur): the shipped
-# oracle pins this value; the Spark side reads the dial at plan build
-_CONV_MIN_COOCCUR = LPA_MIN_COOCCUR[1]
-# oracle unroll depth: past the fixpoint every extra round reproduces
-# the same labelling (that is what fixpoint MEANS, and the Spark side
-# confirms it exactly via exceptAll), so one static unroll ≥ the
-# convergence round of any run that PASSES the Spark side replays the
-# converged labelling.  Round-11 (ADVICE): derived from the max_rounds
-# dial default rather than an independent constant — a 28-round unroll
-# beside a 40-round cap let a dataset converging in rounds 29-40 pass
-# Spark while the oracle replayed a pre-fixpoint labelling, a spurious
-# gate failure far from its cause.  Equality means the two CANNOT
-# drift; the measured margin (20 rounds at sf0.01, the max anywhere) is
-# pinned by tests/test_components.py::test_lpa_conv_oracle_margin.
-_CONV_ORACLE_ROUNDS = LPA_MAX_ROUNDS[1]
+# co-occurrence edge threshold (distinct shared (type, hour) buckets);
+# Spark side and oracle both read it
+_CONV_MIN_COOCCUR = 4
+# oracle unroll depth AND the Spark side's round cap: past the fixpoint
+# every extra round reproduces the same labelling (that is what
+# fixpoint MEANS, and the Spark side confirms it exactly via
+# exceptAll), so one static unroll ≥ the convergence round of any run
+# that PASSES the Spark side replays the converged labelling.  One
+# constant for both (round-11 ADVICE: a 28-round unroll beside a
+# 40-round cap let a dataset converging in rounds 29-40 pass Spark
+# while the oracle replayed a pre-fixpoint labelling).  The measured
+# margin (20 rounds at sf0.01, the max anywhere) is pinned by
+# tests/test_components.py::test_lpa_conv_oracle_margin.
+_CONV_ORACLE_ROUNDS = 40
 
 
 def _lpa_conv_oracle(rounds: int) -> str:
@@ -466,11 +462,13 @@ def _lpa_round(edges: DataFrame, labels: DataFrame) -> DataFrame:
     )
 
 
+# rounds composed into one persisted job (lpa_propagate_converged)
+_LPA_ROUNDS_PER_JOB = 3
+
+
 def lpa_propagate_converged(
     edges: DataFrame,
     max_rounds: int = 25,
-    require_convergence: bool = True,
-    rounds_per_job: int = 3,
 ) -> tuple[DataFrame, dict]:
     """Label propagation iterated UNTIL THE LABELLING REPEATS — the
     convergence-required mode the fixed-round catalog entry lacks
@@ -482,8 +480,8 @@ def lpa_propagate_converged(
     ``(n, hash-sum)`` set signature rides the write action via
     ``observe`` (no extra job per round).
 
-    Rounds are BATCHED ``rounds_per_job`` per persisted job (r14): each
-    job composes B rounds lazily — the per-round CollectMetrics nodes
+    Rounds are BATCHED ``_LPA_ROUNDS_PER_JOB`` per persisted job (r14):
+    each job composes B rounds lazily — the per-round CollectMetrics nodes
     all collect during the ONE write action, so the per-round
     convergence signal is intact — and only the batch end hits scratch
     disk.  Per-job fixed cost (scheduling + parquet round-trip + Py4J
@@ -493,7 +491,7 @@ def lpa_propagate_converged(
     SEQUENTIALLY (each round's join broadcasts the previous round's agg
     output), so deep batches only add planning weight — measured b=3
     8.2 s vs b=1 10.5 s vs b=5 12.2 s on the 20-round sf0.01 graph,
-    hence the default.  A fixpoint reached MID-batch is safe by
+    hence 3.  A fixpoint reached MID-batch is safe by
     idempotence: every round after the fixpoint reproduces the same
     labelling, so the batch-end frame IS the fixpoint labelling, and
     ``rounds_run`` reports the round where consecutive signatures first
@@ -502,15 +500,13 @@ def lpa_propagate_converged(
     Termination: synchronous LPA is NOT guaranteed to converge — a
     bipartite pair swaps labels forever — so the loop also stops when a
     signature repeats ONE ROUND BACK but not the last (period-2
-    oscillation), reported as ``converged=False, oscillating=True``.
-    ``require_convergence=True`` raises at ``max_rounds`` (or on
-    detected oscillation) instead of returning a non-fixpoint labelling.
+    oscillation).  Either way — cap hit or detected oscillation — it
+    raises instead of returning a non-fixpoint labelling.
 
     Signature collisions: the free per-round check is the ``(n,
     hash-sum)`` set signature, which two DIFFERENT labellings can
     collide on (~2⁻³¹ per round).  Because this mode PROMISES a
-    fixpoint, ``require_convergence=True`` confirms a signature match
-    exactly: one more round is computed from the persisted batch end and
+    fixpoint, it confirms a signature match exactly: one more round is computed from the persisted batch end and
     an empty one-way ``exceptAll`` against it proves the batch end is a
     true fixpoint (round(L) = L; counts are equal by construction, so
     one direction suffices for multiset equality).  A collision keeps
@@ -519,11 +515,9 @@ def lpa_propagate_converged(
     spurious RAISE, never a wrong labelling (same convention as the
     components loop).
 
-    Returns ``(labels, stats)``: labels is the (node, label) frame of the
-    LAST EXECUTED round (already materialized on scratch disk — for a
-    detected period-2 oscillation under ``require_convergence=False``
-    that is the batch-end state, one of the two alternating labellings),
-    stats has ``rounds_run`` / ``converged`` / ``oscillating``.
+    Returns ``(labels, stats)``: labels is the (node, label) fixpoint
+    frame (already materialized on scratch disk), stats has
+    ``rounds_run`` / ``converged`` / ``oscillating``.
     """
     store = RoundStore("lpa_state_")
 
@@ -553,7 +547,7 @@ def lpa_propagate_converged(
     rounds_run = 0
     executed = 0
     while executed < max_rounds and not (converged or oscillating):
-        b = min(rounds_per_job, max_rounds - executed)
+        b = min(_LPA_ROUNDS_PER_JOB, max_rounds - executed)
         frame = labels
         batch_obs: list[Observation] = []
         for j in range(1, b + 1):
@@ -575,11 +569,7 @@ def lpa_propagate_converged(
                 # signature tie was real; one extra lazy round feeds the
                 # one-way exceptAll, a single cheap terminal job.
                 if (
-                    not require_convergence
-                    or _lpa_round(edges, labels)
-                    .exceptAll(labels)
-                    .limit(1)
-                    .count()
+                    _lpa_round(edges, labels).exceptAll(labels).limit(1).count()
                     == 0
                 ):
                     converged = True
@@ -599,7 +589,7 @@ def lpa_propagate_converged(
         "converged": converged,
         "oscillating": oscillating,
     }
-    if require_convergence and not converged:
+    if not converged:
         raise RuntimeError(
             f"lpa_propagate_converged: no fixpoint in {rounds_run} rounds "
             f"({'period-2 oscillation detected' if oscillating else 'cap hit'}); "
@@ -718,9 +708,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, "graph_label_propagation", observations=observations,
         iters=_ITERS,
     )
-    return labels.select("node", F.col("label").alias("community")).orderBy(
-        "node"
-    )
+    return labels.select("node", F.col("label").alias("community"))
 
 
 def cooccur_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -764,7 +752,7 @@ def cooccur_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("u", "v")
         .agg(F.count("*").alias("w"))
-        .filter(F.col("w") >= dial(spark, LPA_MIN_COOCCUR))
+        .filter(F.col("w") >= _CONV_MIN_COOCCUR)
         .select("u", "v")
     )
 
@@ -837,8 +825,8 @@ def graph_label_propagation_converged(
     user-density decade (PLANS.md table).  Each LPA round is one keyed
     shuffle join against dst-clustered cached edges; label state is
     node-sized, persisted per round with lineage truncation, round
-    count bounded by the ``spark.graft.lpa.max_rounds`` dial with a
-    hard raise rather than a silent non-fixpoint return."""
+    count bounded by ``_CONV_ORACLE_ROUNDS`` with a hard raise rather
+    than a silent non-fixpoint return."""
     from tts_data_pipeline_spark.cachereg import cache_replacing
 
     # This entry EXECUTES at build time (eager per-round jobs), so a
@@ -857,11 +845,9 @@ def graph_label_propagation_converged(
             edges.repartition(width, F.col("dst")),
         )
         labels, _stats = lpa_propagate_converged(
-            edges, max_rounds=dial(spark, LPA_MAX_ROUNDS)
+            edges, max_rounds=_CONV_ORACLE_ROUNDS
         )
-    return labels.select(
-        "node", F.col("label").alias("community")
-    ).orderBy("node")
+    return labels.select("node", F.col("label").alias("community"))
 
 
 _BFS_ROUNDS = 4
@@ -957,7 +943,6 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         nation.join(dist, "node")
         .select("n_name", F.col("d").alias("hops"))
-        .orderBy("n_name")
     )
 
 
@@ -1078,7 +1063,6 @@ def graph_kcore_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("x")
         .agg(F.count(F.lit(1)).cast("long").alias("core_degree"))
         .select(F.col("x").alias("user_id"), "core_degree")
-        .orderBy("user_id")
     )
 
 

@@ -66,7 +66,7 @@ def _payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def mm_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary → decode (fake codec, real plumbing) → per-image channel
-    stats.  One mapInPandas chain, no shuffle until the final sort.
+    stats.  One mapInPandas chain, no shuffle.
 
     ORACLE-BACKED: the fake codec tiles payload bytes over the 16x16x3
     grid, so every channel mean/std is exact integer arithmetic over the

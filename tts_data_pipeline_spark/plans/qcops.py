@@ -277,7 +277,6 @@ def pipeline_e2e_align_qc(spark: SparkSession, sf_dir: str) -> DataFrame:
             "qualified",
             label.alias("speaker_label"),
         )
-        .orderBy("book_id")
     )
 
 
@@ -400,4 +399,4 @@ def qc_corpus_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
             < 85
         )
     )
-    return corpus_validate(txt, audio, lexicon).orderBy("book_id")
+    return corpus_validate(txt, audio, lexicon)

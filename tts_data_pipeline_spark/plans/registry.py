@@ -12,6 +12,15 @@ differently in Spark (shortest-decimal-string HALF_UP) vs DuckDB (binary),
 and discrete data hits the half-boundary ~1/n per group — those use the
 exact fixed-point form in ``functions/exact.py`` (integer units + shared
 ``floor(x+0.5)``) on both sides.
+
+Ordering contract: an entry returns a row set.  Both hashes ignore row
+order, and a terminal global sort costs a range-partitioner sampling job
+(which re-runs the subtree) plus a shuffle, so an entry sorts only where
+a LIMIT consumes the sort (top-k) or inside a window.  The one exception
+is ``flagship_revenue_by_nation``: it is what ``__spark_entry__.entry``
+returns, and ordered output (O1) is part of its shape.
+``tests/test_plan_assertions.py::test_no_cartesian_products_anywhere``
+pins this over every non-streaming entry.
 """
 
 from __future__ import annotations

@@ -37,7 +37,6 @@ def f1_negated_substring_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         d.filter(~F.col("text").contains("spark"))
         .select("doc_id", "source")
-        .orderBy("doc_id")
     )
 
 
@@ -61,7 +60,6 @@ def f2_conjunctive_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("c_acctbal") > 0)
         )
         .select("c_custkey", "c_name", "c_acctbal")
-        .orderBy("c_custkey")
     )
 
 
@@ -88,7 +86,6 @@ def f4_quality_gate_route(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_parts"),
             X.mean_fixed(F.col("p_retailprice")).alias("avg_price"),
         )
-        .orderBy("qualified")
     )
 
 
@@ -110,7 +107,6 @@ def f5_range_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.filter(F.col("l_quantity").between(3.0, 12.0))
         .groupBy("l_returnflag")
         .agg(F.count("*").alias("n_in_range"))
-        .orderBy("l_returnflag")
     )
 
 
@@ -132,7 +128,6 @@ def f6_min_word_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.withColumn("word_count", wc)
         .filter(F.col("word_count") >= 50)
         .select("doc_id", "word_count")
-        .orderBy("doc_id")
     )
 
 
@@ -170,7 +165,6 @@ def f7_threshold_on_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("avg_price"),
             "n_orders",
         )
-        .orderBy("o_custkey")
     )
 
 
@@ -190,7 +184,6 @@ def f9_suffix_predicate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         p.filter(F.col("p_name").endswith("bolt"))
         .select("p_partkey", "p_name")
-        .orderBy("p_partkey")
     )
 
 
@@ -216,7 +209,6 @@ def f10_null_empty_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("event_type")
         .agg(F.count("*").alias("n_valid"))
-        .orderBy("event_type")
     )
 
 
@@ -255,7 +247,6 @@ def j1_equi_join_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
                 4,
             ).alias("revenue"),
         )
-        .orderBy("o_orderstatus")
     )
 
 
@@ -281,7 +272,6 @@ def j2_derived_stem_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         c.join(o, c.stem == o.o_custkey)
         .groupBy("stem")
         .agg(F.count("o_orderkey").alias("n_orders"))
-        .orderBy("stem")
     )
 
 
@@ -309,7 +299,7 @@ def j3_positional_zip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pos", F.row_number().over(W.orderBy("n_name")).cast("long")
     )
     return (
-        s.join(n, "pos").select("pos", "s_name", "n_name").orderBy("pos")
+        s.join(n, "pos").select("pos", "s_name", "n_name")
     )
 
 
@@ -335,7 +325,6 @@ def j4_index_join_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         wanted.join(words, ["doc_id", "pos"])
         .select("doc_id", "word_at")
-        .orderBy("doc_id")
     )
 
 
@@ -374,7 +363,6 @@ def j5_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("price"),
             F.col("l_orderkey").isNotNull().alias("updated"),
         )
-        .orderBy("okey")
     )
 
 
@@ -402,7 +390,6 @@ def j6_anti_join_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         o.join(outliers, "o_orderkey", "left_anti")
         .select("o_orderkey", "o_orderstatus")
-        .orderBy("o_orderkey")
     )
 
 
@@ -432,7 +419,6 @@ def j7_broadcast_dim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_customers"),
             F.round(F.sum("c_acctbal"), 2).alias("total_bal"),
         )
-        .orderBy("r_name")
     )
 
 
@@ -468,7 +454,6 @@ def a1_group_collect_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ",",
             ).alias("lines")
         )
-        .orderBy("l_orderkey")
     )
 
 
@@ -495,7 +480,6 @@ def a2_per_group_min_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("_min"), 2).alias("min_price"),
             (F.col("_min") >= 2000).alias("qualified"),
         )
-        .orderBy("l_suppkey")
     )
 
 
@@ -595,7 +579,7 @@ def a7_per_row_text_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.size(F.split("text", " ")).cast("long").alias("word_count"),
         "n_chars",
-    ).orderBy("doc_id")
+    )
 
 
 @query(
@@ -620,7 +604,6 @@ def a8_group_avg_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
             X.mean_fixed(F.col("value"), dp=4, in_dp=2).alias("avg_value"),
             F.count("*").alias("n"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -639,7 +622,6 @@ def a9_distinct_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         e.groupBy("event_type")
         .agg(F.countDistinct("user_id").alias("n_users"))
-        .orderBy("event_type")
     )
 
 
@@ -728,7 +710,6 @@ def o4_per_group_fractional_sample(spark: SparkSession, sf_dir: str) -> DataFram
         )
         .filter(F.col("rn") <= F.ceil(F.col("cnt") * 0.05))
         .select("event_id", "event_type", "rn")
-        .orderBy("event_type", "rn")
     )
 
 
@@ -779,7 +760,6 @@ def u1_union_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         a.unionByName(b)
         .groupBy("c_mktsegment")
         .agg(F.count("*").alias("n"))
-        .orderBy("c_mktsegment")
     )
 
 
@@ -803,7 +783,6 @@ def u2_pivot_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.groupBy("l_returnflag")
         .pivot("l_linestatus", ["O", "F"])
         .agg(F.round(F.sum("l_quantity"), 2))
-        .orderBy("l_returnflag")
     )
 
 

@@ -52,9 +52,7 @@ def c1_normalize_name(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("kẻ SĨ thời loạn",),
     ]
     df = spark.createDataFrame(rows, ["raw"])
-    return df.select("raw", V.normalize_name(F.col("raw")).alias("slug")).orderBy(
-        "raw"
-    )
+    return df.select("raw", V.normalize_name(F.col("raw")).alias("slug"))
 
 
 @query(
@@ -92,7 +90,6 @@ def c2_duration_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
             "dur",
             V.parse_duration_seconds(F.col("dur")).alias("seconds"),
         )
-        .orderBy("o_orderkey")
     )
 
 
@@ -110,7 +107,7 @@ def c5_deterministic_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = table(spark, sf_dir, "customer")
     return c.select(
         "c_custkey", V.deterministic_id(F.col("c_name")).alias("book_id")
-    ).orderBy("c_custkey")
+    )
 
 
 @query(
@@ -126,7 +123,7 @@ def c6_prefix_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = table(spark, sf_dir, "part")
     return p.select(
         "p_partkey", V.name_prefix(F.col("p_name"), " ").alias("prefix")
-    ).orderBy("p_partkey")
+    )
 
 
 @query(
@@ -163,7 +160,6 @@ def c8_extension_default(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id", "path", V.extension_or_default(F.col("path")).alias("ext")
         )
-        .orderBy("doc_id")
     )
 
 
@@ -187,7 +183,7 @@ def c9_c11_clean_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     return c.select(
         "c_custkey",
         V.collapse_ws_lower(V.strip_punctuation(raw)).alias("cleaned"),
-    ).orderBy("c_custkey")
+    )
 
 
 @query(
@@ -214,7 +210,7 @@ def c12_url_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select(
         "doc_id",
         F.trim(F.regexp_replace(V.remove_urls(raw), r"\s+", " ")).alias("no_urls"),
-    ).orderBy("doc_id")
+    )
 
 
 @query(
@@ -254,7 +250,6 @@ def c14_decimal_comma(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "as_number"
             ),
         )
-        .orderBy("o_orderkey")
     )
 
 
@@ -274,7 +269,7 @@ def c15_digits_to_vi_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     return o.select(
         "o_orderkey",
         V.digits_to_vi_words(F.col("o_orderkey").cast("string")).alias("spoken"),
-    ).orderBy("o_orderkey")
+    )
 
 
 @query(
@@ -318,7 +313,6 @@ def c16_currency_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "o_orderkey", V.normalize_currency(F.col("raw")).alias("normalized")
         )
-        .orderBy("o_orderkey")
     )
 
 
@@ -343,7 +337,7 @@ def c17_date_to_spoken(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.month("o_orderdate"),
             F.year("o_orderdate"),
         ).alias("spoken_date"),
-    ).orderBy("o_orderkey")
+    )
 
 
 # --- C15b/C17b: full Vietnamese cardinal oracle builders ------------------------
@@ -412,9 +406,7 @@ def c15b_cardinal_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~|orders| distinct, so C17b's codebook trick doesn't apply — instead
     the fact side is ``repartitionByRange(width, key)`` FIRST, then the
     big (interpreted — it exceeds the codegen splitting threshold)
-    cardinal tree projects over the range partitions in parallel, and
-    the terminal ``orderBy`` on the same key is satisfied by the
-    existing range partitioning (sort-within-partitions only, no second
+    cardinal tree projects over the range partitions in parallel (one
     exchange, and the range sampler never sees the expensive
     projection).  The explicit partition count bypasses AQE's
     small-output coalescing, which otherwise folds the tiny sf0.1 frame
@@ -432,7 +424,6 @@ def c15b_cardinal_words(spark: SparkSession, sf_dir: str) -> DataFrame:
             "num",
             V.vi_cardinal_named("num").alias("cardinal"),
         )
-        .orderBy("o_orderkey")
     )
 
 
@@ -478,5 +469,4 @@ def c17b_date_cardinal(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         o.join(F.broadcast(dmy), ["d", "m", "y"])
         .select("o_orderkey", "spoken_date")
-        .orderBy("o_orderkey")
     )

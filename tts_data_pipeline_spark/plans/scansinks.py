@@ -144,7 +144,6 @@ def s1_k1_books_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("sample_rate").cast("bigint").alias("sample_rate"),
             F.col("_parse_ok").cast("bigint").alias("parse_ok"),
         )
-        .orderBy("book_id")
     )
 
 
@@ -184,9 +183,7 @@ def s2_alignment_tsv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _tmpdir("s2")
     rows.write.mode("overwrite").option("sep", "\t").csv(path)
     back = read_alignment_tsv(spark, path, book_id="book-rt")
-    return back.select("seg_id", "start", "end", "duration", "book_id").orderBy(
-        "seg_id"
-    )
+    return back.select("seg_id", "start", "end", "duration", "book_id")
 
 
 # --- S3 + K2: JSON-per-record round trip ------------------------------------
@@ -224,7 +221,7 @@ def s3_k2_json_records_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_name",
         F.col("n_regionkey").cast("bigint").alias("n_regionkey"),
         F.col("name_len").cast("bigint").alias("name_len"),
-    ).orderBy("n_nationkey")
+    )
 
 
 # --- S4 + K3: delimited line-text round trip --------------------------------
@@ -260,7 +257,7 @@ def s4_k3_delimited_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     path = _tmpdir("s4k3")
     write_lines(lines, "line", path)
-    return read_delimited_urls(spark, path).orderBy("audio_url")
+    return read_delimited_urls(spark, path)
 
 
 # --- S6: directory/binaryFile scan ------------------------------------------
@@ -307,7 +304,6 @@ def s6_binary_dir_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.regexp_replace(F.decode("content", "UTF-8"), "\n+$", "")
             .alias("body"),
         )
-        .orderBy("region_key")
     )
 
 
@@ -368,7 +364,6 @@ def k4_audio_encode_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("payload_matches"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -413,7 +408,6 @@ def k6_hf_publish_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("speaker_label").cast("bigint").alias("speaker_label"),
             "n_docs",
         )
-        .orderBy("speaker")
     )
 
 
@@ -460,7 +454,6 @@ def k7_partitioned_layout_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
             "min_suppkey",
             "max_suppkey",
         )
-        .orderBy("s_nationkey")
     )
 
 
@@ -511,7 +504,7 @@ def u8_schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .contains("batch=2")
         .cast("bigint")
         .alias("from_v2"),
-    ).orderBy("n_nationkey")
+    )
 
 
 # --- S12: Spark 4 Python DataSource with native filter pushdown --------------
@@ -564,7 +557,6 @@ def s12_python_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n_books"),
             F.sum("n_pages").cast("bigint").alias("total_pages"),
         )
-        .orderBy("lang", "narrator")
     )
 
 
@@ -616,7 +608,6 @@ def stream_python_datasource_feed(spark: SparkSession, sf_dir: str) -> DataFrame
             F.count(F.lit(1)).cast("bigint").alias("n_books"),
             F.sum("n_pages").cast("bigint").alias("total_pages"),
         )
-        .orderBy("lang")
     )
 
 
@@ -661,7 +652,6 @@ def s13_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("doc_id").cast("bigint").alias("min_doc"),
             F.max("doc_id").cast("bigint").alias("max_doc"),
         )
-        .orderBy("lang")
     )
 
 
@@ -743,7 +733,6 @@ def j14_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("sum_qty_cents"),
             F.countDistinct("o_orderkey").cast("bigint").alias("n_orders"),
         )
-        .orderBy("o_orderstatus")
     )
 
 
@@ -842,5 +831,4 @@ def k8_zorder_layout_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey", "z_value"
         )
-        .orderBy("l_orderkey", "l_linenumber")
     )

@@ -88,18 +88,9 @@ _BLOOM_K = 4
 # EXPLICIT (broadcast default / distributed) so each physical strategy
 # remains independently oracle-checked and plan-pinned.
 _SEMDEDUP_K0 = 16
-# KMAX and NPROBE_SUPER are the DEFAULTS of the spark.graft.semdedup.*
-# conf dials (tts_data_pipeline_spark.conf) — the Spark side reads conf
-# at build time so a deployment can retune without editing source; the
-# static DuckDB oracles below embed these defaults, so non-default
-# values are a deployment knob, not an oracle-gated configuration
-# (they change assignments by design — recall/cost dials).
-from tts_data_pipeline_spark.conf import (
-    SEMDEDUP_KMAX as _KMAX_DIAL,
-    SEMDEDUP_NPROBE_SUPER as _NPROBE_DIAL,
-)
-
-_SEMDEDUP_KMAX = _KMAX_DIAL[1]
+# KMAX and NPROBE_SUPER change assignments (recall/cost knobs): the
+# Spark side and the static DuckDB oracles below both read them here.
+_SEMDEDUP_KMAX = 65536
 _SEMDEDUP_CELL_TARGET = 64
 _SEMDEDUP_TAU = 0.40
 # Super-cell multi-probe count (round-9): each vector is assigned through
@@ -115,7 +106,7 @@ _SEMDEDUP_TAU = 0.40
 # and overshoots it, so 3 ships.  Near-dup floor (>=0.95) and the
 # semdedup slope row are re-pinned under p=3; ladder in
 # tests/test_sketches.py and PLANS.md round 9.
-_SEMDEDUP_NPROBE_SUPER = _NPROBE_DIAL[1]
+_SEMDEDUP_NPROBE_SUPER = 3
 
 # Keep-rule within a cell (curation runs disagree on this knob): which
 # cell-mates count as "prior" — a row is a duplicate iff some mate that
@@ -226,7 +217,6 @@ def agg_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("overest_ok"),
         )
-        .orderBy("tok")
     )
 
 
@@ -410,7 +400,6 @@ def j13_bloom_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("n_false_pos"),
         )
-        .orderBy("o_orderstatus")
     )
 
 
@@ -594,18 +583,12 @@ def _semdedup(
         ivf_assign_hier,
     )
 
-    from tts_data_pipeline_spark.conf import (
-        SEMDEDUP_KMAX,
-        SEMDEDUP_NPROBE_SUPER,
-        dial,
-    )
-
     e = spread(table(spark, sf_dir, "embeddings"))
     # bounded scalar collect (one count), the same policy the oracle
     # derives from COUNT(*) — see module-top constants for the rationale
     n = e.count()
     k = min(
-        dial(spark, SEMDEDUP_KMAX),
+        _SEMDEDUP_KMAX,
         _SEMDEDUP_K0
         << max(
             0,
@@ -633,7 +616,7 @@ def _semdedup(
             e,
             n_centroids=k,
             codebook=codebook,
-            nprobe_super=dial(spark, SEMDEDUP_NPROBE_SUPER),
+            nprobe_super=_SEMDEDUP_NPROBE_SUPER,
         ),
     )
     keep_order = {
@@ -676,5 +659,4 @@ def _semdedup(
             .cast("bigint")
             .alias("is_dup"),
         )
-        .orderBy("vec_id")
     )

@@ -33,8 +33,7 @@ def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling-window counts computed BY THE STREAMING RUNTIME (file
     source, watermark, incremental state) — hash-equal to the batch oracle."""
     ensure_utc(spark)
-    out = run_stream_to_memory(spark, sf_dir)
-    return out.orderBy("win_start", "event_type")
+    return run_stream_to_memory(spark, sf_dir)
 
 
 SESSIONS_CLOSED_ORACLE = """
@@ -77,8 +76,7 @@ def stream_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     carry, gap splits, and per-session aggregates included.  (Batch parity
     is additionally pinned in tests/test_sources_multimodal_streaming.py.)"""
     ensure_utc(spark)
-    out = run_stateful_sessions_to_memory(spark, sf_dir)
-    return out.orderBy("user_id", "session_start")
+    return run_stateful_sessions_to_memory(spark, sf_dir)
 
 
 SESSIONS_TIMEOUT_ORACLE = """
@@ -149,8 +147,7 @@ def stream_stateful_sessions_timeout(
     )
 
     ensure_utc(spark)
-    out = run_stateful_sessions_timeout_to_memory(spark, sf_dir)
-    return out.orderBy("user_id", "session_start")
+    return run_stateful_sessions_timeout_to_memory(spark, sf_dir)
 
 
 @query(
@@ -174,8 +171,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tts_data_pipeline_spark.streaming.events import run_stream_static_enrich
 
     ensure_utc(spark)
-    out = run_stream_static_enrich(spark, sf_dir)
-    return out.orderBy("cohort_day")
+    return run_stream_static_enrich(spark, sf_dir)
 
 
 from tts_data_pipeline_spark.plans.windows import (  # noqa: E402
@@ -191,8 +187,7 @@ def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tts_data_pipeline_spark.streaming.events import run_sliding_stream_to_memory
 
     ensure_utc(spark)
-    out = run_sliding_stream_to_memory(spark, sf_dir)
-    return out.orderBy("win_start")
+    return run_sliding_stream_to_memory(spark, sf_dir)
 
 
 @query(
@@ -229,8 +224,7 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tts_data_pipeline_spark.streaming.events import run_session_window_stream
 
     ensure_utc(spark)
-    out = run_session_window_stream(spark, sf_dir)
-    return out.orderBy("user_id", "session_start")
+    return run_session_window_stream(spark, sf_dir)
 
 
 @query(
@@ -258,8 +252,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tts_data_pipeline_spark.streaming.events import run_stream_stream_join
 
     ensure_utc(spark)
-    out = run_stream_stream_join(spark, sf_dir)
-    return out.orderBy("view_id", "purchase_id")
+    return run_stream_stream_join(spark, sf_dir)
 
 
 @query(
@@ -310,8 +303,7 @@ def stream_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ensure_utc(spark)
-    out = run_stream_stream_join_outer(spark, sf_dir)
-    return out.orderBy("view_id", "purchase_id")
+    return run_stream_stream_join_outer(spark, sf_dir)
 
 
 def _has_protobuf() -> bool:
@@ -349,8 +341,7 @@ if _has_protobuf():  # pragma: no cover - protobuf absent in this image
         )
 
         ensure_utc(spark)
-        out = run_transform_with_state(spark, sf_dir)
-        return out.orderBy("user_id")
+        return run_transform_with_state(spark, sf_dir)
 
 
 @query(
@@ -383,8 +374,7 @@ def stream_late_data_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tts_data_pipeline_spark.streaming.events import run_late_data_stream
 
     ensure_utc(spark)
-    out = run_late_data_stream(spark, sf_dir)
-    return out.orderBy("win_start", "event_type")
+    return run_late_data_stream(spark, sf_dir)
 
 
 @query(
@@ -405,8 +395,7 @@ def stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ensure_utc(spark)
-    out = run_stream_dedup_to_memory(spark, sf_dir)
-    return out.orderBy("user_id", "event_type")
+    return run_stream_dedup_to_memory(spark, sf_dir)
 
 
 @query(
@@ -463,8 +452,7 @@ def stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ensure_utc(spark)
-    out = run_stream_dedup_minhash(spark, sf_dir)
-    return out.orderBy(*[f"mh{j}" for j in range(8)])
+    return run_stream_dedup_minhash(spark, sf_dir)
 
 
 @query(
@@ -510,8 +498,7 @@ def stream_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ensure_utc(spark)
-    out = run_stream_dedup_watermarked(spark, sf_dir)
-    return out.orderBy("user_id", "event_type", "hr", "ts")
+    return run_stream_dedup_watermarked(spark, sf_dir)
 
 
 STREAM_CMS_ORACLE = f"""
@@ -623,5 +610,4 @@ def stream_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("overest_ok"),
         )
-        .orderBy("win_start", "user_id")
     )

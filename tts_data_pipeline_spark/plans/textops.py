@@ -53,7 +53,6 @@ def ta_lang_stopword_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("sw_ratio"), 4).alias("avg_stopword_ratio"),
             F.count("*").alias("n_docs"),
         )
-        .orderBy("lang")
     )
 
 
@@ -98,7 +97,6 @@ def ta_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
                 4,
             ).alias("quality_score"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -127,7 +125,6 @@ def ta_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_chars").alias("total_chars"),
             F.count("*").alias("n_docs"),
         )
-        .orderBy("lang")
     )
 
 
@@ -153,7 +150,7 @@ def ta_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         + F.length("text")
         - F.length(F.regexp_replace("text", r"[^A-Za-z0-9\s]", ""))
     )
-    return d.select("doc_id", n_pieces.alias("n_pieces")).orderBy("doc_id")
+    return d.select("doc_id", n_pieces.alias("n_pieces"))
 
 
 @query(
@@ -189,7 +186,7 @@ def ta_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = F.when(F.size(words) >= 5, F.array_min(shingle_hashes)).otherwise(
         F.md5(F.concat_ws(" ", words).cast("binary"))
     )
-    return d.select("doc_id", fp.alias("fingerprint")).orderBy("doc_id")
+    return d.select("doc_id", fp.alias("fingerprint"))
 
 
 # DuckDB digit→word replica lives in scalarfuncs; reuse it so the two
@@ -262,7 +259,7 @@ def tx_normalizer_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = V.strip_typographic(out)
     out = V.strip_punctuation(out)
     out = V.collapse_ws_lower(out)
-    return d.select("doc_id", out.alias("normalized")).orderBy("doc_id")
+    return d.select("doc_id", out.alias("normalized"))
 
 
 X1_EXACT_ORACLE = """
@@ -471,7 +468,6 @@ def ta_trigram_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         predicted.groupBy("true_lang", "predicted_lang")
         .agg(F.count("*").alias("n_docs"))
-        .orderBy("true_lang", "predicted_lang")
     )
 
 
@@ -558,7 +554,7 @@ def ta_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.size("fps").cast("long").alias("n_fingerprints"),
         F.array_min("fps").alias("min_fp"),
-    ).orderBy("doc_id")
+    )
 
 
 @query(
@@ -854,7 +850,6 @@ def ta_kl_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("nsrc").cast("bigint").alias("n_tokens"),
             "kl_vs_corpus",
         )
-        .orderBy("source")
     )
 
 
@@ -1312,5 +1307,4 @@ def ta_word_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
             entropy.alias("entropy"),
         )
         .withColumn("low_entropy", (F.col("entropy") < 4.0).cast("long"))
-        .orderBy("doc_id")
     )

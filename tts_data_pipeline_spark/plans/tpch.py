@@ -67,7 +67,6 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             X.mean_fixed(F.col("l_discount"), dp=4, in_dp=2).alias("avg_disc"),
             F.count("*").alias("count_order"),
         )
-        .orderBy("l_returnflag", "l_linestatus")
     )
 
 
@@ -163,14 +162,15 @@ def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                 4,
             ).alias("revenue")
         )
-        .orderBy(F.desc("revenue"), F.asc("n_name"))
     )
 
 
 def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The M0 flagship (SURVEY.md §7): 'qualified duration per dimension' —
     fact→dim broadcast join (J7), substring filter (F1), quality gate (F4),
-    grouped sum/min/count (A2/A3), ordered output (O1).
+    grouped sum/min/count (A2/A3), ordered output (O1).  The only catalog
+    entry with a terminal sort (see ``plans/registry.py``): it is the
+    driver's ``entry()`` result, and O1 is part of that shape.
 
     Mirrors the reference's core analytical shape: books joined to the
     narrator dimension, filtered on url substring + sample-rate gate, then
@@ -283,7 +283,6 @@ def q4_order_priority_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
         o.join(li, o.o_orderkey == li.l_orderkey, "left_semi")
         .groupBy("o_orderpriority")
         .agg(F.count("*").alias("order_count"))
-        .orderBy("o_orderpriority")
     )
 
 
@@ -410,7 +409,6 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
         .select("n_name", "s_name", F.round("s_acctbal", 2).alias("acctbal"))
-        .orderBy("n_name", "s_name")
     )
 
 

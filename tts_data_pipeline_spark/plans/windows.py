@@ -73,7 +73,6 @@ def w1_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id",
             F.round(F.sum("value").over(w), 2).alias("running_value"),
         )
-        .orderBy("user_id", "event_id")
     )
 
 
@@ -106,7 +105,6 @@ def w2_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.row_number().over(w).cast("long").alias("rn"),
         )
         .filter(F.col("rn") <= 3)
-        .orderBy("o_custkey", "rn")
     )
 
 
@@ -151,7 +149,6 @@ def w3_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("session_id", F.sum("new_session").over(running).cast("long"))
         .groupBy("user_id", "session_id")
         .agg(F.count("*").alias("n_events"))
-        .orderBy("user_id", "session_id")
     )
 
 
@@ -161,7 +158,7 @@ def w4_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics Structured Streaming uses (SURVEY.md §2.10); the streaming
     pipeline runs the SAME ``tumbling_counts`` builder."""
     e = table(spark, sf_dir, "events")
-    return tumbling_counts(e).orderBy("win_start", "event_type")
+    return tumbling_counts(e)
 
 
 W5_SLIDING_ORACLE = """
@@ -198,7 +195,7 @@ def w5_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows — ``window()`` replicates rows exactly like the streaming
     runtime.  Oracle replays the replication with an explicit offset unnest."""
     e = table(spark, sf_dir, "events")
-    return sliding_counts(e).orderBy("win_start")
+    return sliding_counts(e)
 
 
 W9_SESSION_ORACLE = """
@@ -247,7 +244,7 @@ def w9_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     the lag-gap + cumulative-sum SQL formulation (the w3 idiom) — proves the
     built-in merges sessions exactly like the manual rule."""
     e = table(spark, sf_dir, "events")
-    return session_window_counts(e).orderBy("user_id", "session_start")
+    return session_window_counts(e)
 
 
 @query(
@@ -294,7 +291,6 @@ def x1_running_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_events"),
             F.round(F.sum("value"), 2).alias("bucket_value"),
         )
-        .orderBy("user_id", "bucket_id")
     )
 
 
@@ -359,7 +355,7 @@ def w13_ewma_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         F.size("evs").cast("bigint").alias("n_events"),
         F.round(s, 6).alias("ewma"),
-    ).orderBy("user_id")
+    )
 
 
 @query(
@@ -440,4 +436,4 @@ def w14_cusum_alarms(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size("evs").cast("bigint").alias("n_events"),
         F.round(st["g"], 6).alias("cusum"),
         st["alarms"].cast("bigint").alias("n_alarm_steps"),
-    ).orderBy("user_id")
+    )
