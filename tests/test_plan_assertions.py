@@ -4,8 +4,6 @@ refactor can't silently regress them (SURVEY.md §4)."""
 
 from __future__ import annotations
 
-import pytest
-
 from tests.conftest import SF_DIR
 from tts_data_pipeline_spark.plans import catalog
 

@@ -165,32 +165,62 @@ def test_python_workers_run_under_the_worker_daemon(spark):
     assert got == ["tts_data_pipeline_spark.worker_daemon"]
 
 
+def test_python_workers_keep_the_spark_core_jar_directory(spark):
+    """Spark puts the spark-core jar on every worker's path; inside a real
+    worker, ``importlib.invalidate_caches()`` leaves the directory of each
+    importer over that jar in place instead of re-reading it."""
+
+    def jar_dirs_kept(_):
+        import importlib
+        import sys
+        import zipimport
+
+        jars = [
+            imp
+            for imp in sys.path_importer_cache.values()
+            if isinstance(imp, zipimport.zipimporter) and imp.archive.endswith(".jar")
+        ]
+        files = [imp._files for imp in jars]
+        importlib.invalidate_caches()
+        return [imp._files is f for imp, f in zip(jars, files)]
+
+    (kept,) = spark.sparkContext.parallelize([0], 1).map(jar_dirs_kept).collect()
+    assert kept and all(kept), kept
+
+
 def test_worker_daemon_keeps_spark_archives_and_refreshes_others(tmp_path):
     """After ``importlib.invalidate_caches()`` under the daemon's patch, an
-    archive under ``$SPARK_HOME/python/lib`` keeps its directory object,
-    while any other archive is re-read: a module added to it imports."""
+    archive under ``$SPARK_HOME/python/lib`` or ``$SPARK_HOME/jars`` keeps
+    its directory object, while any other archive is re-read: a module
+    added to it imports."""
     spark_zip = tmp_path / "spark" / "python" / "lib" / "x.zip"
     spark_zip.parent.mkdir(parents=True)
+    spark_jar = tmp_path / "spark" / "jars" / "x.jar"
+    spark_jar.parent.mkdir()
     other_zip = tmp_path / "other" / "y.zip"
     other_zip.parent.mkdir()
     with zipfile.ZipFile(spark_zip, "w") as z:
         z.writestr("in_spark_zip.py", "")
+    with zipfile.ZipFile(spark_jar, "w") as z:
+        z.writestr("in_spark_jar.py", "")
     with zipfile.ZipFile(other_zip, "w") as z:
         z.writestr("first_module.py", "")
     child = textwrap.dedent(
         f"""
         import importlib, sys, zipfile
         from tts_data_pipeline_spark import worker_daemon
-        sys.path[:0] = [{str(spark_zip)!r}, {str(other_zip)!r}]
-        import in_spark_zip, first_module
+        sys.path[:0] = [{str(spark_zip)!r}, {str(spark_jar)!r}, {str(other_zip)!r}]
+        import in_spark_zip, in_spark_jar, first_module
         worker_daemon.install()
-        spark_importer = sys.path_importer_cache[{str(spark_zip)!r}]
-        files = spark_importer._files
+        zip_importer = sys.path_importer_cache[{str(spark_zip)!r}]
+        jar_importer = sys.path_importer_cache[{str(spark_jar)!r}]
+        zip_files, jar_files = zip_importer._files, jar_importer._files
         with zipfile.ZipFile({str(other_zip)!r}, "w") as z:
             z.writestr("first_module.py", "")
             z.writestr("added_module.py", "VALUE = 7")
         importlib.invalidate_caches()
-        assert spark_importer._files is files
+        assert zip_importer._files is zip_files, "zip re-read"
+        assert jar_importer._files is jar_files, "jar re-read"
         import added_module
         assert added_module.VALUE == 7
         """

@@ -13,7 +13,6 @@ import math
 
 import duckdb
 import pytest
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
     LongType,

@@ -4,7 +4,11 @@ Fresh process: import ``__spark_entry__`` from the repo root, build a PLAIN
 SparkSession (driver-style, none of our session factory's configs), run
 ``entry(spark)`` and collect, then run every ``queries()`` entry at the given
 sf against its ``oracle_sql()`` in DuckDB and compare row-count + column set
-+ an order-insensitive value hash.
++ an order-insensitive value hash.  Entries without an oracle print their
+row count and hash alone, so two sweeps can be diffed line by line.
+
+DuckDB is imported inside ``main()``: a process that imports this module
+only for ``value_hash`` (perfbench's driver does) does not load the engine.
 
 Usage: python tools/driver_sim.py [sf_dir] [query_name ...]
 """
@@ -16,7 +20,6 @@ import os
 import sys
 import time
 
-import duckdb
 import pandas as pd
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -44,6 +47,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
+    import duckdb
     from pyspark.sql import SparkSession
 
     spark = (
@@ -81,7 +85,10 @@ def main() -> int:
             failed.append(name)
             continue
         if name not in oracles:
-            print(f"  rows-only {name}: {len(spdf)} rows [{time.time() - t0:.1f}s]")
+            print(
+                f"  rows-only {name}: rows={len(spdf)} "
+                f"hash={value_hash(spdf)} [{time.time() - t0:.1f}s]"
+            )
             continue
         try:
             opdf = con.execute(oracles[name]).fetchdf()

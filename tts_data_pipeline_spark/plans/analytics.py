@@ -1204,10 +1204,10 @@ def w11_gap_fill_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordered ffill window, which scans each partition once.
 
     Ordering contract: the catalog entry returns an UNORDERED row set
-    (within-partition (user_id, h) order only — the skew-safe form; a
-    global range sort of the data-sized output was the one stage that
-    degraded under Zipfian keys).  The oracle states the unordered
-    contract and the driver's value hash is row-order-insensitive."""
+    (no sort of the data-sized output, global or per partition: a global
+    range sort was the one stage that degraded under Zipfian keys).  The
+    oracle states the unordered contract and the driver's value hash is
+    row-order-insensitive."""
     from tts_data_pipeline_spark.cachereg import cache_replacing
 
     e = table(spark, sf_dir, "events")
@@ -1246,22 +1246,12 @@ def w11_gap_fill_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("h")
         .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
-    out = joined.select(
+    return joined.select(
         "user_id",
         "h",
         "observed",
         F.coalesce("v", ffill).alias("v_ffill"),
     )
-    # sortWithinPartitions, NOT a global orderBy: the output here is
-    # DATA-sized (one row per key-hour), and a global range sort of a
-    # data-sized result was the one stage of this plan that degraded
-    # under Zipfian keys (round-9 skew decade: sort 2.8 → 6.2 s at
-    # skew-sf1 while every other stage was flat or faster).  The
-    # window has already clustered rows by user_id, so within-
-    # partition (user, h) order is the useful contract a consumer
-    # gets — a total order over a 100 TB frame is presentation, not
-    # computation.
-    return out.sortWithinPartitions("user_id", "h")
 
 
 @query(

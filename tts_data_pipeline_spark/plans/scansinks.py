@@ -790,11 +790,12 @@ def k8_zorder_layout_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     table goes through ``sinks.write_zorder_layout`` (min/max-normalized
     8-bit Morton key, range partition + sort, parquet), comes back
     through the scan, and the entry emits a deterministic key sample
-    with the SAME ``sinks.zorder_value`` key recomputed on the read-back
-    rows — so the value hash covers both the sink+scan round trip and
-    the Morton math (the oracle replays the binning/interleave in SQL,
-    same IEEE double ops in the same order).  File boundaries, which
-    depend on the range sampler, never touch the output.
+    with the SAME ``sinks.zorder_value`` key (over the writer's own
+    min/max) recomputed on the read-back rows — so the value hash covers
+    both the sink+scan round trip and the Morton math (the oracle replays
+    the binning/interleave in SQL, same IEEE double ops in the same
+    order).  File boundaries, which depend on the range sampler, never
+    touch the output.
 
     The pruning payoff — footer min/max ranges tight in EVERY clustered
     dimension at once, so a probe on either key skips most files — is
@@ -808,23 +809,13 @@ def k8_zorder_layout_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"
     )
     out_dir = _tmpdir("k8_zorder")
-    sinks.write_zorder_layout(
-        li, out_dir, cols=("l_partkey", "l_suppkey"), bits=_Z_BITS,
-        n_files=8,
+    cols = ("l_partkey", "l_suppkey")
+    # the files hold li's rows, so the writer's min/max are the read-back's
+    mins, maxes = sinks.write_zorder_layout(
+        li, out_dir, cols=cols, bits=_Z_BITS, n_files=8
     )
     back = spark.read.schema(li.schema).parquet(out_dir)
-    stats = back.agg(
-        F.min(F.col("l_partkey").cast("double")),
-        F.max(F.col("l_partkey").cast("double")),
-        F.min(F.col("l_suppkey").cast("double")),
-        F.max(F.col("l_suppkey").cast("double")),
-    ).head()
-    z = sinks.zorder_value(
-        ("l_partkey", "l_suppkey"),
-        (stats[0], stats[2]),
-        (stats[1], stats[3]),
-        bits=_Z_BITS,
-    )
+    z = sinks.zorder_value(cols, mins, maxes, bits=_Z_BITS)
     return (
         back.filter(F.col("l_orderkey") % 97 == 0)
         .withColumn("z_value", z)

@@ -20,7 +20,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from tts_data_pipeline_spark.operators import dedup as D
 from tts_data_pipeline_spark.plans.registry import query
 from tts_data_pipeline_spark.sources import table
 from tts_data_pipeline_spark.sources.readers import spread

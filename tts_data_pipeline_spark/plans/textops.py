@@ -1129,8 +1129,6 @@ def pipeline_e2e_preprocess(spark: SparkSession, sf_dir: str) -> DataFrame:
     DataFrame op on the same plan, the only shuffles are the per-doc
     window and the upsert join, and DuckDB replays all seven stages as
     chained CTEs."""
-    import pandas as pd
-
     from tts_data_pipeline_spark.multimodal.pdf import (
         make_minimal_pdf,
         pdf_text,

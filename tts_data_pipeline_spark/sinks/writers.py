@@ -446,7 +446,7 @@ def write_zorder_layout(
     bits: int = 8,
     n_files: int = 16,
     mode: str = "overwrite",
-) -> None:
+) -> tuple[list[float], list[float]]:
     """K8 — multi-dimensionally clustered parquet layout (Z-order).
 
     Two-pass: a tiny min/max aggregate per clustered column (one row,
@@ -457,7 +457,11 @@ def write_zorder_layout(
     partitions, write.  ``tests/test_sinks.py`` measures the payoff: under
     a selective predicate on the SECOND clustered column, the Z-order
     layout's parquet footer stats let most files be skipped, where a 1-D
-    sort on the first column leaves every file a candidate."""
+    sort on the first column leaves every file a candidate.
+
+    Returns the ``(mins, maxes)`` of ``cols`` (as doubles) that normalized
+    the key: the written rows are ``df``'s rows, so a caller that needs
+    them again over the read-back files can skip a second aggregate."""
     from pyspark.sql import functions as F
 
     aggs = []
@@ -475,3 +479,4 @@ def write_zorder_layout(
         .write.mode(mode)
         .parquet(path)
     )
+    return mins, maxes
